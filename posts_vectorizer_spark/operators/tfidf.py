@@ -41,7 +41,7 @@ AQE skew-join handles residual hot keys ('the', 'a', ...).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..cache import persist_tracked
 from ..functions import text as T
@@ -195,8 +195,17 @@ def vocabulary(documents: DataFrame, base: DataFrame | None = None) -> DataFrame
         .where(F.length("word") >= MIN_WORD_LEN)
         .distinct()
     )
-    extras = spark.createDataFrame([(w,) for w in DICTIONARY_EXTRAS], ["word"])
-    return corpus_words.unionByName(extras).distinct()
+    return corpus_words.unionByName(_dictionary_extras(spark)).distinct()
+
+
+def _dictionary_extras(spark: SparkSession) -> DataFrame:
+    """(word) — DICTIONARY_EXTRAS as a literal relation. Every call builds
+    the same plan, so a relation persisted over it by one call is a cache
+    hit for the next (createDataFrame makes a new LogicalRDD leaf per
+    call, which never matches an earlier cache entry)."""
+    return spark.range(1).select(
+        F.explode(F.array(*(F.lit(w) for w in DICTIONARY_EXTRAS))).alias("word")
+    )
 
 
 def _extras_values_sql() -> str:
@@ -272,9 +281,8 @@ def idf_table(
         (F.length("word") >= MIN_WORD_LEN)
         | F.col("word").isin(*DICTIONARY_EXTRAS)
     )
-    extras = spark.createDataFrame(
-        [(w, False, False) for w in DICTIONARY_EXTRAS],
-        ["word", "marker", "elig"],
+    extras = _dictionary_extras(spark).select(
+        "word", F.lit(False).alias("marker"), F.lit(False).alias("elig")
     )
     doc_markers = base.select(
         F.lit(None).cast("string").alias("word"),

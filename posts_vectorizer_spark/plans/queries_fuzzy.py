@@ -22,8 +22,8 @@ from ..functions import text as T
 from ..operators.dedup import (
     JACCARD_THRESHOLD,
     _doc_shingle_arrays,
-    _doc_shingles,
     _doc_shingles_sql,
+    jaccard_verify,
 )
 from ..sources import load_table
 from .registry import register
@@ -34,6 +34,7 @@ from .registry import register
 # ---------------------------------------------------------------------------
 
 _PF_T = JACCARD_THRESHOLD  # same bar as dedup_shingle_jaccard (comparable)
+_PF_TB = _PF_T - 5e-7  # t': admits every pair with round(J, 6) >= t
 
 
 @register(
@@ -76,89 +77,79 @@ WHERE round(CAST(i.inter AS DOUBLE) / (sa.sz + sb.sz - i.inter), 6)
 """,
 )
 def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact set-similarity self-join via prefix filtering (SSJoin /
-    ppjoin): order every document's shingle set by ascending global
+    """Exact set-similarity self-join via prefix filtering (ppjoin, Xiao et
+    al., WWW 2008): order every document's shingle set by ascending global
     frequency and join ONLY each set's first |s| - ceil(t*|s|) + 1
     elements — pigeonhole guarantees any pair with Jaccard >= t shares a
     prefix element, so recall is EXACT at the threshold (unlike
     MinHash/SimHash banding, which are probabilistic). The candidate join
-    keys on the RAREST shingles, which is precisely why it scales: hot
-    shingles never generate candidates.
+    keys on the RAREST shingles, so hot shingles rarely generate
+    candidates.
 
-    Scale shape: frequency table + rank window + prefix self-join on
-    int64 hashes + verify on the candidate pairs only. The rarest-first
-    ordering makes the join key distribution anti-skewed by
-    construction — the most selective keys carry the candidates. At
-    100 TB add ppjoin's positional filter (prune by prefix position
-    before verifying) with the same plan shape.
+    Every matched prefix row must also pass ppjoin's two bound filters
+    before the candidate ``distinct``, at t' = t - 5e-7:
+      * size: min(|a|, |b|) >= t' * max(|a|, |b|), since J <= min/max;
+      * positional, at 1-based ranks (i, j) of the shared shingle:
+        (1 + min(|a| - i, |b| - j)) * (1 + t') >= t' * (|a| + |b|).
+        The shingles both sets share all sit at or after the FIRST shared
+        one, which lies in both prefixes, so 1 + min(|a| - i, |b| - j)
+        there bounds the overlap o; J >= t' is o * (1 + t') >= t' *
+        (|a| + |b|). The bound only falls as the ranks grow, so "some
+        matched row of the pair passes" equals "its first shared shingle
+        passes" — the filter is exact and needs no extra shuffle.
+    The result keeps round(J, 6) >= t, which admits J down to t - 5e-7
+    (round half up), so filtering at t' rather than t loses no reported
+    pair. Templated replies — sets that share their rarest shingles but
+    overlap too little — are what the two filters prune.
+
+    Plan shape: persisted shingle arrays, exploded once; a shingle-keyed
+    count window gives each shingle's frequency and ONE doc-keyed window
+    its rank, and the ranked prefix is itself persisted so both sides of
+    the self-join read it (the rank window's doc_id exchange runs once,
+    not once per side — Spark does not reuse an exchange over a cached
+    scan); the survivors are verified by ``size(array_intersect)`` over
+    the two docs' arrays (``jaccard_verify``), sizes read off the arrays
+    in-row — no re-join against the exploded shingles, no separate sizes
+    relation.
     """
     from ..cache import persist_tracked
 
-    # r12: sh (tokenize + char-hash + shingle fold + distinct — the
-    # heaviest subtree) feeds FIVE consumers (freq, ranked, both verify
-    # sides, sizes); without the persist the corpus was shingled five
-    # times per run (guide §7.2 duplicated subtrees).
-    sh = persist_tracked(
-        _doc_shingles(load_table(spark, sf_dir, "documents"))
-    )
-    freq = sh.groupBy("sh").agg(F.count("*").alias("f"))
-    w_rk = Window.partitionBy("doc_id").orderBy("f", "sh")
-    w_sz = Window.partitionBy("doc_id")
-    ranked = (
-        sh.join(freq, "sh")
-        .select(
-            "doc_id",
-            "sh",
-            F.row_number().over(w_rk).alias("rk"),
-            F.count("*").over(w_sz).alias("sz"),
+    docs = load_table(spark, sf_dir, "documents")
+    arrays = persist_tracked(_doc_shingle_arrays(docs))
+    cand = _ppjoin_candidates(arrays)
+    # (r13's rejected repartition of the candidates before the verify is
+    # moot: the filters leave about one candidate per result pair)
+    return jaccard_verify(docs, cand, arrays=arrays).where(F.col("jaccard") >= _PF_T)
+
+
+def _ppjoin_candidates(arrays: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) pairs, doc_a < doc_b, that share a prefix shingle
+    passing the size and positional filters. Written as SQL expressions:
+    each Column built through the Python API is a JVM round trip, and
+    plan building is a large share of a pass on small inputs."""
+    from ..cache import persist_tracked
+
+    prefix = persist_tracked(
+        arrays.selectExpr("doc_id", "size(shs) AS sz", "explode(shs) AS sh")
+        .selectExpr("*", "count(*) OVER (PARTITION BY sh) AS f")
+        .selectExpr(
+            "doc_id", "sz", "sh",
+            "row_number() OVER (PARTITION BY doc_id ORDER BY f, sh) AS rk",
         )
+        .where(f"rk <= sz - CAST(ceil({_PF_T}D * sz) AS BIGINT) + 1")
     )
-    prefix = ranked.where(
-        F.col("rk")
-        <= F.col("sz") - F.ceil(_PF_T * F.col("sz")).cast("long") + 1
-    ).select("doc_id", "sh")
-    cand = (
-        prefix.select(F.col("doc_id").alias("doc_a"), "sh")
-        .join(prefix.select(F.col("doc_id").alias("doc_b"), "sh"), "sh")
-        .where(F.col("doc_a") < F.col("doc_b"))
+    t = f"{_PF_TB!r}D"
+    return (
+        prefix.selectExpr("sh", "doc_id AS doc_a", "sz AS sz_a", "rk AS rk_a")
+        .join(prefix.selectExpr("sh", "doc_id AS doc_b", "sz AS sz_b", "rk AS rk_b"), "sh")
+        .where(
+            "doc_a < doc_b"
+            f" AND least(sz_a, sz_b) >= {t} * greatest(sz_a, sz_b)"
+            f" AND (1 + least(sz_a - rk_a, sz_b - rk_b)) * (1 + {t})"
+            f" >= {t} * (sz_a + sz_b)"
+        )
         .select("doc_a", "doc_b")
         .distinct()
-        # r13 probe, REJECTED: repartitioning the candidate pairs to the
-        # core count before the verify (AQE's byte-based coalescing runs
-        # the compute-amplifying verify on 3 tasks at sf0.1) measured
-        # floor 3.49 -> 3.66 s with executor CPU 28.6 -> 97.4 s — the
-        # 32-thread verify thrashes allocation/GC far harder than the
-        # 3-task form costs in idle cores. Left coalesced deliberately;
-        # at 100 TB the candidate relation is large enough that AQE's
-        # advisory sizing keeps the verify wide on its own.
-    )
-    x = sh.select(F.col("doc_id").alias("doc_a"), "sh")
-    y = sh.select(F.col("doc_id").alias("doc_b"), "sh")
-    inter = (
-        cand.join(x, "doc_a")
-        .join(y, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    jacc = F.round(
-        F.col("inter").cast("double")
-        / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        6,
-    )
-    return (
-        inter.join(
-            sizes.withColumnRenamed("doc_id", "doc_a")
-            .withColumnRenamed("sz", "sz_a"),
-            "doc_a",
-        )
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b")
-            .withColumnRenamed("sz", "sz_b"),
-            "doc_b",
-        )
-        .select("doc_a", "doc_b", jacc.alias("jaccard"))
-        .where(F.col("jaccard") >= _PF_T)
     )
 
 

@@ -86,14 +86,18 @@ _PROBE_SKIP_BUCKETS = 4
 def _skip_probe(combine: str, delete_keys, manifest: dict | None) -> bool:
     """True when the touched-bucket probe job can be skipped: a combining
     merge (add/max/min — untouched keys pass through unchanged, deletes
-    don't exist on these paths) over a state whose manifest holds at most
-    _PROBE_SKIP_BUCKETS buckets, i.e. a state declared constant-size by
-    its bucket-count choice."""
+    don't exist on these paths) over a populated state whose manifest is
+    CONFIGURED with at most _PROBE_SKIP_BUCKETS buckets, i.e. a state
+    declared constant-size by its bucket-count choice. The gate reads the
+    configured count, not the populated one: a large table that so far
+    fills only a few buckets still needs the probe to rewrite only the
+    buckets a batch touches."""
     return (
         combine in ("add", "max", "min")
         and delete_keys is None
         and manifest is not None
-        and 0 < len(manifest.get("buckets", {})) <= _PROBE_SKIP_BUCKETS
+        and bool(manifest.get("buckets"))
+        and manifest["n_buckets"] <= _PROBE_SKIP_BUCKETS
     )
 
 

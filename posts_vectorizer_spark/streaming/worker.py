@@ -109,7 +109,9 @@ def _micro_batch_vectors(
     join stored word vectors -> weighted sum, long form. Same shapes as
     operators/tfidf.doc_vectors but against the PRE-BUILT dimension table."""
     docs = batch_docs.where(F.col("lang") == lang)
-    tf = tfidf.term_frequency(docs)
+    # the token base has one consumer here, so it is not persisted: a
+    # tracked persist per micro-batch would pile up for the stream's life
+    tf = tfidf.term_frequency(docs, base=tfidf.token_base(docs))
     weights = (
         tf.join(F.broadcast(word_vectors.select("word", "idf", "vec_id")), "word")
         .groupBy("doc_id", "vec_id")

@@ -31,6 +31,101 @@ def test_prefix_filter_equals_exhaustive_join(spark):
     assert pf  # the fixture does contain near-dups
 
 
+def _words(tag: str, n: int) -> list[str]:
+    return [f"{tag}{i}" for i in range(n)]
+
+
+def _prefix_join_pairs(spark, tmp_path, rows) -> dict:
+    docs = make_docs(spark, [(i, " ".join(ws), "en") for i, ws in rows])
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    return {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in E.queries()["dedup_prefix_filter_join"](spark, str(tmp_path)).collect()
+    }
+
+
+def test_prefix_filter_bounds_are_inclusive(spark, tmp_path):
+    """The size and positional filters prune by bounds that a pair at
+    exactly J = 0.5 meets with equality, so both must admit it; a pair
+    just under 0.5 must not be reported. Shingles are word 3-grams, so a
+    run of k shared words gives k - 2 shared shingles; a shingle in one
+    doc only has frequency 1 and ranks before every shared shingle."""
+    run = _words("s", 6)
+    run2 = _words("r", 5)
+    run3 = _words("q", 22)
+    rows = [
+        # |a| = |b| = 6, o = 4: the first shared shingle sits at rank 3
+        # in both docs, and (1 + min(6 - 3, 6 - 3)) * 1.5 == 0.5 * 12
+        (1, ["xa", "xb"] + run),
+        (2, ["ya", "yb"] + run),
+        # |a| = 6 = 2 * |b|, b inside a: J = 3 / 6 and min / max = 0.5
+        (3, ["za", "zb", "zc"] + run2),
+        (4, run2),
+        # |a| = 31, |b| = 30, o = 20: J = 20 / 41
+        (5, _words("u", 11) + run3),
+        (6, _words("v", 10) + run3),
+    ]
+    got = _prefix_join_pairs(spark, tmp_path, rows)
+    assert got == {(1, 2): 0.5, (3, 4): 0.5}
+
+
+def _templated_replies() -> list[tuple[int, list[str]]]:
+    """Short replies over a few templates with three varying slots: the
+    replies of one template share their rarest shingles, most pairs of
+    them overlap too little, and a few are near-duplicates."""
+    import random
+
+    rnd = random.Random(7)
+    rows, doc = [], 0
+    for t in range(4):
+        base = _words(f"t{t}w", 14)
+        pool = _words(f"t{t}p", 5)
+        for _ in range(12):
+            ws = list(base)
+            for pos in (3, 7, 11):
+                ws[pos] = rnd.choice(pool)
+            doc += 1
+            rows.append((doc, ws))
+    return rows
+
+
+def test_prefix_filters_prune_and_stay_exact(spark, tmp_path):
+    """On templated replies the size and positional filters leave fewer
+    candidates than the plain prefix filter, and the result still equals
+    the exhaustive share-a-shingle join."""
+    import math
+    from collections import Counter
+
+    from posts_vectorizer_spark.operators.dedup import _doc_shingle_arrays
+    from posts_vectorizer_spark.plans.queries_fuzzy import _ppjoin_candidates
+
+    rows = _templated_replies()
+    docs = make_docs(spark, [(i, " ".join(ws), "en") for i, ws in rows])
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    q = E.queries()
+    pf = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in q["dedup_prefix_filter_join"](spark, str(tmp_path)).collect()
+    }
+    ex = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in q["dedup_shingle_jaccard"](spark, str(tmp_path)).collect()
+    }
+    assert pf == ex and pf
+
+    arrays = _doc_shingle_arrays(docs)
+    sets = {r["doc_id"]: r["shs"] for r in arrays.collect()}
+    freq = Counter(s for shs in sets.values() for s in shs)
+    posting: dict[int, set[int]] = {}
+    for d, shs in sets.items():
+        order = sorted(shs, key=lambda s: (freq[s], s))
+        for s in order[: len(shs) - math.ceil(0.5 * len(shs)) + 1]:
+            posting.setdefault(s, set()).add(d)
+    plain = {(a, b) for ds in posting.values() for a in ds for b in ds if a < b}
+    cand = {(r["doc_a"], r["doc_b"]) for r in _ppjoin_candidates(arrays).collect()}
+    assert set(pf) <= cand < plain
+
+
 def test_symspell_finds_first_char_typo(spark, tmp_path):
     # "wtream" is "stream" with its first char substituted: the (first
     # char, length) blocking of text_typo_pairs cannot pair them, the

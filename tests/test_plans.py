@@ -199,6 +199,40 @@ def test_flagship_fact_side_shuffles_once(spark):
     assert not re.search(r"Exchange hashpartitioning\(doc_id[^)]*, dim", plan)
 
 
+def test_prefix_join_ranks_prefix_once(spark):
+    """dedup_prefix_filter_join ranks its prefix once: both sides of the
+    self-join read one persisted prefix, so every doc_id exchange in the
+    plan is the rank window's one node (one plan id, printed under each
+    side's cache scan), not a copy per side."""
+    import re
+
+    plan = _plan(E.queries()["dedup_prefix_filter_join"](spark, SF_ORACLE))
+    ids = re.findall(
+        r"Exchange hashpartitioning\(doc_id#\d+L?, \d+\)[^\n]*\[plan_id=(\d+)\]", plan
+    )
+    assert len(set(ids)) == 1, ids
+
+
+def test_doc_vectors_reuses_word_vectors_caches(spark):
+    """doc_vectors after word_vectors over the same corpus reuses the
+    token base and the IDF stats that word_vectors persisted: the IDF is
+    not recomputed, so no new persistent RDD appears."""
+    from posts_vectorizer_spark.cache import release_caches
+    from posts_vectorizer_spark.operators import tfidf
+    from posts_vectorizer_spark.sources import load_table
+
+    release_caches()
+    docs = load_table(spark, SF_ORACLE, "documents")
+    emb = load_table(spark, SF_ORACLE, "embeddings")
+    def rdds() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    tfidf.word_vectors(docs, emb, "en").write.format("noop").mode("overwrite").save()
+    before = rdds()
+    tfidf.doc_vectors(docs, emb, "en").write.format("noop").mode("overwrite").save()
+    assert not rdds() - before
+
+
 def test_tpch_star_joins_broadcast_dims(spark):
     """Q3/Q5: every dimension side broadcasts; only the fact-fact join
     shuffles. No cartesian products."""

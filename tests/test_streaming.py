@@ -59,6 +59,36 @@ def test_worker_stream_matches_batch(spark, tmp_path):
     assert any(b["num_input_rows"] > 0 for b in beats)
 
 
+def test_worker_batches_hold_no_caches(spark, tmp_path):
+    """A running worker calls no release_caches, so a micro-batch must
+    not leave a tracked persist behind: after the first batch, further
+    batches keep the tracked-cache count and the JVM's persistent-RDD
+    count constant."""
+    from posts_vectorizer_spark import cache
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    source = str(tmp_path / "incoming")
+    os.makedirs(source)
+    q = vectorize_stream(
+        spark, source, docs, emb, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        available_now=False,
+    )
+    tracked, rdds = [], []
+    try:
+        for i in range(4):
+            batch = docs.where(F.col("doc_id") % 4 == i).toPandas()
+            batch.to_parquet(os.path.join(source, f"batch-{i}.parquet"))
+            q.processAllAvailable()
+            tracked.append(len(cache._TRACKED))
+            rdds.append(set(spark.sparkContext._jsc.getPersistentRDDs().keySet()))
+    finally:
+        q.stop()
+    assert tracked == tracked[:1] * 4, tracked
+    # by id, not count: the context cleaner may drop other tests' RDDs
+    assert all(not r - rdds[0] for r in rdds[1:]), rdds
+
+
 def test_stateful_stream_dedup_across_batches(spark, tmp_path):
     """ST7: dropDuplicates state survives micro-batch boundaries — the same
     doc_ids delivered in two separate files (forced into separate batches
@@ -745,6 +775,44 @@ def test_merge_add_ledger_makes_addition_exactly_once(spark, tmp_path):
         r["word"]: r["occurrences"] for r in read_merged(spark, tgt).collect()
     }
     assert state2 == state
+
+
+def test_merge_add_probes_sparse_large_state(spark, tmp_path):
+    """The probe skip is for states CONFIGURED with few buckets; a
+    16-bucket additive state that so far fills only 2 buckets must still
+    probe, so a delta touching one bucket leaves the other's files as
+    they were."""
+    from posts_vectorizer_spark.sources.sinks import (
+        _read_manifest,
+        merge_add_parquet,
+        read_merged,
+    )
+
+    words = spark.createDataFrame([(f"w{i}",) for i in range(32)], "word string")
+    bucket = {
+        r["word"]: r["b"]
+        for r in words.select("word", F.pmod(F.hash("word"), F.lit(16)).alias("b"))
+        .collect()
+    }
+    w1 = "w0"
+    w2 = next(w for w in bucket if bucket[w] != bucket[w1])
+    tgt = str(tmp_path / "counts")
+    schema = "word string, occurrences long"
+    merge_add_parquet(
+        spark, spark.createDataFrame([(w1, 1), (w2, 1)], schema), tgt, ["word"],
+        n_buckets=16, batch_id=0,
+    )
+    before = _read_manifest(tgt)
+    assert before["n_buckets"] == 16 and len(before["buckets"]) == 2
+    merge_add_parquet(
+        spark, spark.createDataFrame([(w1, 5)], schema), tgt, ["word"], batch_id=1
+    )
+    after = _read_manifest(tgt)["buckets"]
+    b1, b2 = str(bucket[w1]), str(bucket[w2])
+    assert after[b1] != before["buckets"][b1]
+    assert after[b2] == before["buckets"][b2]  # untouched bucket not rewritten
+    state = {r["word"]: r["occurrences"] for r in read_merged(spark, tgt).collect()}
+    assert state == {w1: 6, w2: 1}
 
 
 def test_idf_increment_split_invariance(spark, tmp_path):

@@ -34,6 +34,7 @@ from pyspark.sql.streaming import StreamingQueryListener
 from pyspark.sql.types import TimestampNTZType
 from pyspark.sql.window import Window
 
+from ..cache import persist_tracked
 from ..operators import tfidf
 from ..sources.sinks import merge_upsert_parquet
 
@@ -657,9 +658,13 @@ def vectorize_stream(
     one comfortable rewrite (e.g. 64k buckets for a 100 TB target -> ~1.5 GB
     per bucket).
     """
-    word_vectors = tfidf.word_vectors(corpus_docs, embeddings, lang)
     # The dimension table is small (vocab-sized) and reused every batch.
-    word_vectors = word_vectors.cache()
+    # Tracked, so release_caches() frees it with the IDF caches it was
+    # built from; an untracked cache outlived the stream and served later
+    # word_vectors plans whole, leaving their own caches unbuilt.
+    word_vectors = persist_tracked(
+        tfidf.word_vectors(corpus_docs, embeddings, lang)
+    )
     word_vectors.count()  # materialize once before the stream starts
 
     if heartbeat_path:

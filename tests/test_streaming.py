@@ -89,6 +89,29 @@ def test_worker_batches_hold_no_caches(spark, tmp_path):
     assert all(not r - rdds[0] for r in rdds[1:]), rdds
 
 
+def test_worker_dimension_table_released_with_caches(spark, tmp_path):
+    """The worker's cached word-vector table is a tracked persist: once
+    the stream has drained, release_caches() leaves no persistent RDD of
+    it behind to serve later word_vectors plans from a stale cache."""
+    from posts_vectorizer_spark.cache import release_caches
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    source = str(tmp_path / "incoming")
+    docs.where(F.col("doc_id") % 4 == 0).write.parquet(source)
+
+    release_caches()
+    baseline = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    q = vectorize_stream(
+        spark, source, docs, emb, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    assert release_caches() > 0
+    leaked = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - baseline
+    assert not leaked
+
+
 def test_stateful_stream_dedup_across_batches(spark, tmp_path):
     """ST7: dropDuplicates state survives micro-batch boundaries — the same
     doc_ids delivered in two separate files (forced into separate batches

@@ -194,8 +194,6 @@ def stream_minhash_index_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch's band rows against the materialized index and Jaccard-verify.
     The oracle is dedup_incremental_minhash's SQL — the table-served
     probe must answer identically to in-plan banding of the base corpus."""
-    import tempfile as _tf
-
     from pyspark.sql import functions as F
 
     from ..cache import persist_tracked
@@ -208,14 +206,17 @@ def stream_minhash_index_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..sources.sinks import read_merged
     from ..streaming import minhash_index_stream
+    from ..streaming.drain import drain, source_copy
 
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % INCR_MOD != 0)
-    work = _tf.mkdtemp(prefix="pv_mhix_")
-    source, index_dir, ckpt = f"{work}/in", f"{work}/ix", f"{work}/ckpt"
-    base.coalesce(1).write.mode("append").parquet(source)
-    q = minhash_index_stream(spark, source, base.schema, index_dir, ckpt)
-    q.awaitTermination(300)
+    source = source_copy(
+        f"minhash_index:{sf_dir}",
+        lambda p: base.coalesce(1).write.mode("append").parquet(p),
+    )
+    index_dir = drain(spark, lambda out, ckpt: minhash_index_stream(
+        spark, source, base.schema, out, ckpt
+    ))
     base_bands = read_merged(spark, index_dir).select(
         F.col("doc_id").alias("doc_b"), "band_id", "band_value"
     )

@@ -14,16 +14,16 @@ drains consume it.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import text as _T
 from ..operators import mllib_alt, multimodal
 from ..operators.tfidf import doc_vectors_sql as _doc_vectors_sql
 from ..sources import load_table
-from ..sources.catalog import cached_source_copy, scratch_dir
+from ..sources.catalog import scratch_dir
+from ..sources.sinks import read_merged
 from ..sources.http_enrich import enrich_with_text
+from ..streaming.drain import drain, source_copy
 from .registry import register
 
 
@@ -151,7 +151,7 @@ def source_vec_model_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.model_table import load_vec_model, write_vec_file
 
     emb = load_table(spark, sf_dir, "embeddings")
-    work = tempfile.mkdtemp(prefix="pv_vec_")
+    work = scratch_dir("pv_vec_")
     path = os.path.join(work, "model.vec")
     rows = (
         (f"w{r['vec_id']}", list(r["embedding"]))
@@ -251,7 +251,7 @@ def source_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     region = load_table(spark, sf_dir, "region")
     nation = load_table(spark, sf_dir, "nation")
-    work = tempfile.mkdtemp(prefix="pv_fmt_")
+    work = scratch_dir("pv_fmt_")
     csv_dir, json_dir = os.path.join(work, "region_csv"), os.path.join(
         work, "nation_json"
     )
@@ -430,27 +430,16 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay-exact), so the drained final view equals the batch decimal
     aggregate the oracle states; the multi-batch equality test stays in
     tests/test_streaming.py."""
-    from ..streaming import (
-        latest_user_totals,
-        state_scoped_partitions,
-        stateful_user_totals_stream,
-    )
+    from ..streaming import latest_user_totals, stateful_user_totals_stream
 
     events = load_table(spark, sf_dir, "events")
-    # r13: tmpfs + release-tracked work dir (checkpoint WAL fsyncs per
-    # micro-batch — the r12 drain lesson these mkdtemp drains missed) and
-    # the source copy cached per process (drain setup, the r10 ruling)
-    work = scratch_dir("pv_state_")
-    target, ckpt = f"{work}/out", f"{work}/ckpt"
-    source = cached_source_copy(
+    source = source_copy(
         f"state:{sf_dir}",
         lambda p: events.write.mode("overwrite").parquet(p),
     )
-    with state_scoped_partitions(spark):
-        q = stateful_user_totals_stream(
-            spark, source, events.schema, target, ckpt
-        )
-        q.awaitTermination(300)
+    target = drain(spark, lambda out, ckpt: stateful_user_totals_stream(
+        spark, source, events.schema, out, ckpt
+    ), scoped=True)
     return latest_user_totals(spark, target)
 
 
@@ -474,26 +463,19 @@ def stream_vectorize_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_upsert_drain pattern); batch-vs-stream equality is also pinned
     in tests/test_streaming.py."""
     from ..operators import tfidf
-    from ..sources.sinks import read_merged
     from ..streaming import vectorize_stream
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    # r13: tmpfs + tracked work dir, process-cached source copy (see
-    # stream_stateful_user_totals)
-    work = scratch_dir("pv_stream_")
-    target, ckpt = f"{work}/out", f"{work}/ckpt"
-    source = cached_source_copy(
+    source = source_copy(
         f"vectorize:{sf_dir}",
         lambda p: docs.where(tfidf.needs_vector("doc_id"))
         .write.mode("overwrite")
         .parquet(p),
     )
-    q = vectorize_stream(
-        spark, source, docs, emb, target, ckpt, lang="en", available_now=True
-    )
-    q.awaitTermination(300)
-    return read_merged(spark, target)
+    return read_merged(spark, drain(spark, lambda out, ckpt: vectorize_stream(
+        spark, source, docs, emb, out, ckpt, lang="en"
+    )))
 
 
 @register(
@@ -516,18 +498,14 @@ def stream_upsert_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow micro-batch) and event_id is unique, so the final state
     is exactly 'the row with max event_id per user', which the oracle
     states as first(... ORDER BY event_id DESC)."""
-    from ..sources.sinks import read_merged
     from ..streaming import upsert_stream
 
     events = load_table(spark, sf_dir, "events")
-    # r13: tmpfs + tracked work dir, process-cached source copy (see
-    # stream_stateful_user_totals). The copy stays ONE file — the
-    # declared single-micro-batch determinism contract.
-    work = scratch_dir("pv_ups_")
-    target, ckpt = f"{work}/out", f"{work}/ckpt"
-    # carry event_id twice: once as the (dropped) compaction sequence,
-    # once as payload so the winner is visible in the merged state
-    source = cached_source_copy(
+    # The copy stays ONE file — the declared single-micro-batch
+    # determinism contract. It carries event_id twice: once as the
+    # (dropped) compaction sequence, once as payload so the winner is
+    # visible in the merged state.
+    source = source_copy(
         f"upsert:{sf_dir}",
         lambda p: events.select(
             "user_id",
@@ -537,11 +515,10 @@ def stream_upsert_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).coalesce(1).write.mode("overwrite").parquet(p),
     )
     src_schema = spark.read.parquet(source).schema
-    q = upsert_stream(
-        spark, source, src_schema, target, ckpt,
+    target = drain(spark, lambda out, ckpt: upsert_stream(
+        spark, source, src_schema, out, ckpt,
         keys=["user_id"], order_col="seq",
-    )
-    q.awaitTermination(300)
+    ))
     return read_merged(spark, target).select(
         "user_id", "last_event_id", "last_value"
     )
@@ -577,20 +554,15 @@ def stream_cdc_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     against an empty target), and return the final table: exactly the
     users whose LAST op is not a delete, carrying that op's value.
     Deterministic by the single-file/single-batch trick and unique seq."""
-    from ..sources.sinks import read_merged
     from ..streaming import cdc_apply_stream
 
     events = load_table(spark, sf_dir, "events")
-    # r13: tmpfs + tracked work dir, process-cached one-file source copy
-    # (see stream_upsert_drain)
-    work = scratch_dir("pv_cdcq_")
-    target, ckpt = f"{work}/out", f"{work}/ckpt"
     op = (
         F.when(F.col("event_type") == "error", "D")
         .when(F.col("event_type").isin("view", "signup"), "I")
         .otherwise("U")
     )
-    source = cached_source_copy(
+    source = source_copy(
         f"cdc:{sf_dir}",
         lambda p: events.select(
             "user_id",
@@ -600,11 +572,10 @@ def stream_cdc_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).coalesce(1).write.mode("overwrite").parquet(p),
     )
     src_schema = spark.read.parquet(source).schema
-    q = cdc_apply_stream(
-        spark, source, src_schema, target, ckpt,
+    target = drain(spark, lambda out, ckpt: cdc_apply_stream(
+        spark, source, src_schema, out, ckpt,
         keys=["user_id"], order_col="seq",
-    )
-    q.awaitTermination(300)
+    ))
     merged = read_merged(spark, target)
     if merged is None:  # every user's last op was a delete
         return spark.createDataFrame([], "user_id long, last_value double")
@@ -635,21 +606,16 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a streaming query: the source is written as one file, so the
     availableNow drain is a single micro-batch — the starting watermark
     drops nothing and the inner join emits exactly the SQL join's pairs."""
-    from ..streaming import interval_join_stream, state_scoped_partitions
+    from ..streaming import interval_join_stream
 
     events = load_table(spark, sf_dir, "events")
-    # r13: tmpfs + tracked work dir, process-cached one-file source copy
-    work = scratch_dir("pv_ivj_")
-    target, ckpt = f"{work}/out", f"{work}/ckpt"
-    source = cached_source_copy(
+    source = source_copy(
         f"ivj:{sf_dir}",
         lambda p: events.coalesce(1).write.mode("overwrite").parquet(p),
     )
-    with state_scoped_partitions(spark):
-        q = interval_join_stream(
-            spark, source, events.schema, target, ckpt
-        )
-        q.awaitTermination(300)
+    target = drain(spark, lambda out, ckpt: interval_join_stream(
+        spark, source, events.schema, out, ckpt
+    ), scoped=True)
     return (
         spark.read.parquet(target)
         .groupBy("err_id", "user_id")
@@ -700,23 +666,18 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical state bound to the inner form (state ∝ lookback
     window, never stream length); the null-emission adds no state — it
     changes only what eviction produces."""
-    from ..streaming import interval_join_stream, state_scoped_partitions
+    from ..streaming import interval_join_stream
 
     events = load_table(spark, sf_dir, "events")
-    # r13: tmpfs + tracked work dir; the source copy is SHARED with the
-    # inner form (same key — both write the identical one-file events
-    # copy)
-    work = scratch_dir("pv_ivjo_")
-    target, ckpt = f"{work}/out", f"{work}/ckpt"
-    source = cached_source_copy(
+    # the source copy is SHARED with the inner form (same key — both
+    # write the identical one-file events copy)
+    source = source_copy(
         f"ivj:{sf_dir}",
         lambda p: events.coalesce(1).write.mode("overwrite").parquet(p),
     )
-    with state_scoped_partitions(spark):
-        q = interval_join_stream(
-            spark, source, events.schema, target, ckpt, how="left_outer"
-        )
-        q.awaitTermination(300)
+    target = drain(spark, lambda out, ckpt: interval_join_stream(
+        spark, source, events.schema, out, ckpt, how="left_outer"
+    ), scoped=True)
     return (
         spark.read.parquet(target)
         .groupBy("err_id", "user_id")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..functions import text as T
-from ..sources import load_table, scratch_dir, spread
+from ..sources import load_table, spread
 from .registry import register
 
 from .queries_sketch import _HLL_ALPHA, _HLL_M, _HLL_MAXBIT, _HLL_MULT
@@ -1219,6 +1219,7 @@ def stream_psi_drift_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL, making the drift monitor's merge property driver-hash-checked
     end to end."""
     from ..sources.sinks import read_merged
+    from ..streaming.drain import drain, source_copy
     from ..streaming.worker import psi_current_stream
 
     e = load_table(spark, sf_dir, "events")
@@ -1239,22 +1240,19 @@ def stream_psi_drift_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     mn, mx = int(stats["mn"]), int(stats["mx"])
 
-    work = scratch_dir("pv_psi_")
-    src = f"{work}/in"
     cur = base.where(~F.col("is_ref")).select("v")
-    cur.where(F.pmod("v", F.lit(2)) == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    cur.where(F.pmod("v", F.lit(2)) == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q = psi_current_stream(
-        spark, src, cur.schema, f"{work}/state", f"{work}/ckpt",
+
+    def write_halves(path: str) -> None:
+        for h in (0, 1):
+            cur.where(F.pmod("v", F.lit(2)) == h).coalesce(1).write.mode(
+                "append"
+            ).parquet(path)
+
+    source = source_copy(f"psi_drift:{sf_dir}", write_halves)
+    state_dir = drain(spark, lambda out, ckpt: psi_current_stream(
+        spark, source, cur.schema, out, ckpt,
         mn, mx, _PSI_BUCKETS, max_files_per_trigger=1,
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("psi drift drain did not finish within 300s")
+    ))
 
     bucket = F.least(
         F.lit(_PSI_BUCKETS - 1),
@@ -1268,7 +1266,7 @@ def stream_psi_drift_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.count("*").cast("bigint").alias("n_ref"))
     )
-    state = read_merged(spark, f"{work}/state")
+    state = read_merged(spark, state_dir)
     if state is None:  # current half empty: zero-count cur side
         state = spark.createDataFrame([], "bucket bigint, n_cur bigint")
     counts = (

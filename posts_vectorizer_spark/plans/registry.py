@@ -409,7 +409,7 @@ def register(
 #       four-way gated in r11 (sf0.001+sf0.01+sf0.1 sweeps, vanilla
 #       head_check, named tests, empty-input gate, scale trends;
 #       SWEEPS.md waves 1-5; judge spot-check 7/7). The five new
-#       drains also driver-prove the r12 _forced_drain fix (keyed
+#       drains also prove the forced-drain fix (keyed
 #       half files — r11 ADVICE item 2); the registered drains it
 #       touches were locally re-swept 5/5 (SWEEPS.md).
 #   (b) spine (2) — tfidf_doc_vectors (every head) +

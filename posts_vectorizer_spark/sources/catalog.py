@@ -72,26 +72,6 @@ def scratch_dir(prefix: str, tracked: bool = True) -> str:
     return path
 
 
-# Process-lifetime source copies for the self-contained streaming
-# drains, keyed by (query, sf_dir): the copy is a pure function of the
-# input table — drain SETUP, like the testdata parquet itself (the r10
-# verdict's ruling for the CMS drain, applied uniformly in r13) — so
-# best-of-N bench iterations and repeated test calls reuse one write.
-# Lives in an UNTRACKED scratch dir (must survive release_caches).
-_COPY_CACHE: dict[str, str] = {}
-
-
-def cached_source_copy(key: str, write_fn) -> str:
-    """Return the path of the process-cached source copy for ``key``,
-    writing it with ``write_fn(path)`` on first use."""
-    path = _COPY_CACHE.get(key)
-    if path is None:
-        path = os.path.join(scratch_dir("pv_src_", tracked=False), "in")
-        write_fn(path)
-        _COPY_CACHE[key] = path
-    return path
-
-
 def spread(df: DataFrame) -> DataFrame:
     """Rebalance a narrow scan across all cores before CPU-heavy per-row
     work (tokenize / hash / shingle) — but ONLY when the scan actually

@@ -19,6 +19,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .worker import file_stream
+
 
 def stateful_user_totals_stream(
     spark: SparkSession,
@@ -59,11 +61,8 @@ def stateful_user_totals_stream(
             }
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     out = (
-        reader.parquet(source_dir)
+        file_stream(spark, source_dir, schema, max_files_per_trigger)
         .groupBy("user_id")
         .applyInPandasWithState(
             update,

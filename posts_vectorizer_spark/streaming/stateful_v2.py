@@ -131,13 +131,11 @@ def debounce_stream_v2(
     """availableNow drain of the timer-debounce over a parquet-file
     stream; returns the StreamingQuery. Requires protobuf (env gate)."""
     _require_protobuf()
-    from .worker import _event_time_ltz
+    from .worker import _event_time_ltz, file_stream, start_parquet_sink
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
     out = (
-        _event_time_ltz(reader.parquet(source_dir), "ts")
+        _event_time_ltz(stream, "ts")
         .withWatermark("ts", watermark)
         .groupBy("user_id")
         .transformWithStateInPandas(
@@ -150,10 +148,4 @@ def debounce_stream_v2(
             timeMode="EventTime",
         )
     )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_sink(out, target_dir, checkpoint_dir)

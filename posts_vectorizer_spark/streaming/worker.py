@@ -45,7 +45,7 @@ from contextlib import contextmanager
 @contextmanager
 def state_scoped_partitions(spark: SparkSession):
     """Scope ``spark.sql.shuffle.partitions`` for a STATEFUL stream's
-    lifetime (start .. awaitTermination) to a state-sized value.
+    lifetime (start .. awaitTermination) to a small-state constant.
 
     Stateful operators (stream-stream joins, window aggregates,
     applyInPandasWithState) pin one state-store instance PER shuffle
@@ -53,13 +53,13 @@ def state_scoped_partitions(spark: SparkSession):
     at the default core-count partitions each trigger paid ~32 tasks of
     store open/commit wait for KB-sized state (r13 profile of
     stream_interval_join: 58 s task time, 1.2 s CPU; wall 5.4 s at 32
-    partitions vs 2.0 s at 8, identical output). Like the CMS state
-    buckets and the components fixpoint, the partition count follows
-    STATE size, not corpus size: max(4, cores // 4), derived from
-    defaultParallelism — never a constant. The conf is restored in
-    `finally`; it is read once at stream start and pinned in the
-    checkpoint, so the scope covers exactly the one drained query. Real
-    deployments with large state size their partitions explicitly."""
+    partitions vs 2.0 s at 8, identical output). The count is
+    max(4, defaultParallelism // 4): it follows the CORE count, not the
+    state size, and suits the KB-sized state of the drain queries that
+    use it. The conf is restored in `finally`; it is read once at stream
+    start and pinned in the checkpoint, so the scope covers exactly the
+    one drained query. Streams with large state must size their
+    partitions explicitly instead."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     spark.conf.set(
@@ -147,6 +147,45 @@ def _event_time_ltz(df: DataFrame, col: str) -> DataFrame:
     return df
 
 
+def file_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The parquet-file source the streams here read.
+    ``max_files_per_trigger`` caps the files per micro-batch, which is how
+    the drains force several batches out of a fixed input."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(source_dir)
+
+
+def start_foreach_batch(stream: DataFrame, process_batch, checkpoint_dir: str):
+    """Start ``stream`` into ``process_batch(batch_df, batch_id)`` with an
+    availableNow trigger: drain what the source holds, then stop."""
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def start_parquet_sink(stream: DataFrame, target_dir: str, checkpoint_dir: str):
+    """Start ``stream`` appending to the parquet ``target_dir`` with an
+    availableNow trigger."""
+    return (
+        stream.writeStream.format("parquet")
+        .outputMode("append")
+        .option("path", target_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def dedup_stream(
     spark: SparkSession,
     source_dir: str,
@@ -169,10 +208,7 @@ def dedup_stream(
     ``dropDuplicatesWithinWatermark``, so per-key state ages out after the
     late-data horizon instead of accumulating forever. Re-deliveries inside
     the horizon — the at-least-once delivery window — are still dropped."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
     if event_time_col is not None:
         src_type = stream.schema[event_time_col].dataType
         stream = _event_time_ltz(stream, event_time_col)
@@ -186,13 +222,7 @@ def dedup_stream(
             )
     else:
         deduped = stream.dropDuplicates(list(keys))
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_sink(deduped, target_dir, checkpoint_dir)
 
 
 def tumbling_window_stream(
@@ -211,11 +241,9 @@ def tumbling_window_stream(
     emits each window exactly once — when the watermark (max event time
     seen minus the delay) passes the window end — and drops events arriving
     later than the horizon. Per-window state is bounded by the watermark."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
     agg = (
-        _event_time_ltz(reader.parquet(source_dir), time_col)
+        _event_time_ltz(stream, time_col)
         .withWatermark(time_col, watermark)
         .groupBy(F.window(time_col, window).alias("w"), "event_type")
         .agg(
@@ -224,14 +252,7 @@ def tumbling_window_stream(
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
     )
-    return (
-        agg.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_sink(agg, target_dir, checkpoint_dir)
 
 
 def enriched_window_stream(
@@ -259,11 +280,9 @@ def enriched_window_stream(
     The watermark is declared on the stream BEFORE the join so event-time
     semantics are unaffected by the enrichment."""
     stream_key, dim_key = join_keys
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
     src = (
-        _event_time_ltz(reader.parquet(source_dir), time_col)
+        _event_time_ltz(stream, time_col)
         .withWatermark(time_col, watermark)
     )
     dim = F.broadcast(
@@ -282,14 +301,7 @@ def enriched_window_stream(
             F.col("w.start").alias("window_start"), dim_col, "n", "total_value"
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_sink(agg, target_dir, checkpoint_dir)
 
 
 def lsh_index_stream(
@@ -319,10 +331,9 @@ def lsh_index_stream(
     from ..functions import vectors as V
     from ..sources.sinks import merge_upsert_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir).select(
+    stream = file_stream(
+        spark, source_dir, schema, max_files_per_trigger
+    ).select(
         "vec_id",
         "embedding",
         lsh_bucket("embedding", dims).alias("bucket"),
@@ -334,12 +345,7 @@ def lsh_index_stream(
             spark, batch_df, index_dir, ["vec_id"], n_buckets
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def minhash_index_stream(
@@ -366,22 +372,15 @@ def minhash_index_stream(
     from ..operators.dedup import _banded, minhash_signatures
     from ..sources.sinks import merge_upsert_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = _banded(minhash_signatures(reader.parquet(source_dir)))
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
+    stream = _banded(minhash_signatures(stream))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         merge_upsert_parquet(
             spark, batch_df, index_dir, ["doc_id", "band_id"], n_buckets
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def session_window_stream(
@@ -403,11 +402,9 @@ def session_window_stream(
     watermark passes session end; state is bounded by watermark + gap,
     not stream length. Late events inside the horizon still merge/extend
     their session exactly as in batch."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
     agg = (
-        _event_time_ltz(reader.parquet(source_dir), time_col)
+        _event_time_ltz(stream, time_col)
         .withWatermark(time_col, watermark)
         .groupBy(F.session_window(time_col, gap).alias("w"), "user_id")
         .agg(
@@ -422,14 +419,7 @@ def session_window_stream(
             "total_value",
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_sink(agg, target_dir, checkpoint_dir)
 
 
 def interval_join_stream(
@@ -464,10 +454,8 @@ def interval_join_stream(
     unmatched row is produced by state eviction, so it appears in the
     extra finalize batch availableNow runs after the data batches.
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = _event_time_ltz(reader.parquet(source_dir), "ts")
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
+    src = _event_time_ltz(stream, "ts")
     errors = (
         src.where(F.col("event_type") == "error")
         .select(
@@ -494,14 +482,7 @@ def interval_join_stream(
         ),
         how,
     ).select("err_id", F.col("err_user").alias("user_id"), "click_ts")
-    return (
-        joined.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_sink(joined, target_dir, checkpoint_dir)
 
 
 def _compact_last_per_key(
@@ -535,7 +516,6 @@ def upsert_stream(
     checkpoint_dir: str,
     keys: list[str],
     order_col: str | None = None,
-    available_now: bool = True,
     n_buckets: int = 16,
     max_files_per_trigger: int | None = None,
     ordered_sink: bool = False,
@@ -559,10 +539,7 @@ def upsert_stream(
 
     if ordered_sink and order_col is None:
         raise ValueError("ordered_sink requires order_col")
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df
@@ -575,14 +552,7 @@ def upsert_stream(
             order_col=order_col if ordered_sink else None,
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="0 seconds")
-    return writer.start()
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def cdc_apply_stream(
@@ -594,7 +564,6 @@ def cdc_apply_stream(
     keys: list[str],
     op_col: str = "_op",
     order_col: str | None = None,
-    available_now: bool = True,
     n_buckets: int = 16,
     max_files_per_trigger: int | None = None,
 ):
@@ -614,10 +583,7 @@ def cdc_apply_stream(
     """
     from ..sources.sinks import apply_cdc_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df
@@ -625,14 +591,7 @@ def cdc_apply_stream(
             batch = _compact_last_per_key(batch, keys, order_col)
         apply_cdc_parquet(spark, batch, target_dir, keys, op_col, n_buckets)
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="0 seconds")
-    return writer.start()
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def vectorize_stream(
@@ -711,10 +670,7 @@ def idf_count_stream(
     from ..functions import text as T
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         docs = batch_df.where(F.col("lang") == lang)
@@ -734,12 +690,7 @@ def idf_count_stream(
             batch_id=batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def ddsketch_count_stream(
@@ -765,10 +716,7 @@ def ddsketch_count_stream(
     from ..plans.queries_sketch import ddsketch_buckets
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         cents = batch_df.select(
@@ -785,12 +733,7 @@ def ddsketch_count_stream(
             spark, delta, sketch_dir, ["d", "f2"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def psi_current_stream(
@@ -820,10 +763,7 @@ def psi_current_stream(
     table — continuous drift monitoring for the price of the batch."""
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         bucket = F.least(
@@ -842,12 +782,7 @@ def psi_current_stream(
             spark, delta, state_dir, ["bucket"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def cms_count_stream(
@@ -874,10 +809,7 @@ def cms_count_stream(
     from ..plans.queries_sketch import cms_delta_counts
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         # r12: count per word first, hash each DISTINCT word once —
@@ -900,12 +832,7 @@ def cms_count_stream(
             n_buckets=4, batch_id=batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def hll_register_stream(
@@ -932,10 +859,7 @@ def hll_register_stream(
     from ..plans.queries_sketch import hll_sparse_registers
     from ..sources.sinks import merge_max_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         delta = hll_sparse_registers(batch_df, "l_orderkey")
@@ -943,12 +867,7 @@ def hll_register_stream(
             spark, delta, state_dir, ["bucket"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def quality_gate_stream(
@@ -979,22 +898,14 @@ def quality_gate_stream(
     )
     from ..sources.sinks import merge_upsert_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         scored = unigram_score_against(batch_df, lm, norm)
         rows = quality_gate_rows(batch_df, scored)
         merge_upsert_parquet(spark, rows, state_dir, ["doc_id"])
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def zscore_moment_stream(
@@ -1020,10 +931,7 @@ def zscore_moment_stream(
     from ..plans.queries_similarity import zscore_moment_deltas
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         delta = zscore_moment_deltas(batch_df)
@@ -1031,12 +939,7 @@ def zscore_moment_stream(
             spark, delta, state_dir, ["dim"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def kmv_bottomk_stream(
@@ -1066,10 +969,7 @@ def kmv_bottomk_stream(
     )
     from ..sources.sinks import merge_upsert_parquet, read_merged
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         delta = kmv_event_hashes(batch_df).select("s", "h")
@@ -1082,12 +982,7 @@ def kmv_bottomk_stream(
         new_state = kmv_bottomk(pool)
         merge_upsert_parquet(spark, new_state, state_dir, ["s", "r"])
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def reliability_bins_stream(
@@ -1114,10 +1009,7 @@ def reliability_bins_stream(
     from ..plans.queries_curation import reliability_bin_counts
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         delta = reliability_bin_counts(batch_df)
@@ -1125,12 +1017,7 @@ def reliability_bins_stream(
             spark, delta, state_dir, ["bin"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def benford_digit_stream(
@@ -1157,21 +1044,13 @@ def benford_digit_stream(
     from ..plans.queries_stats import benford_digit_counts
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         delta = benford_digit_counts(batch_df).withColumnRenamed("o", "c")
         merge_add_parquet(spark, delta, state_dir, ["d"], batch_id=batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def zipf_wordcount_stream(
@@ -1197,10 +1076,7 @@ def zipf_wordcount_stream(
     from ..functions import text as T
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         delta = (
@@ -1212,12 +1088,7 @@ def zipf_wordcount_stream(
             spark, delta, state_dir, ["word"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def novelty_firsts_stream(
@@ -1243,10 +1114,7 @@ def novelty_firsts_stream(
     from ..plans.queries_text import novelty_doc_grams
     from ..sources.sinks import merge_min_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         delta = (
@@ -1258,12 +1126,7 @@ def novelty_firsts_stream(
             spark, delta, state_dir, ["g"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def mi_cell_stream(
@@ -1289,10 +1152,7 @@ def mi_cell_stream(
     from ..plans.queries_governance import mi_pair_counts
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         delta = mi_pair_counts(batch_df).withColumnRenamed("nxy", "c")
@@ -1300,12 +1160,7 @@ def mi_cell_stream(
             spark, delta, state_dir, ["xv", "yv"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def transition_count_stream(
@@ -1331,10 +1186,7 @@ def transition_count_stream(
     from ..plans.queries_events import transition_counts
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         delta = transition_counts(batch_df).withColumnRenamed("nij", "c")
@@ -1342,12 +1194,7 @@ def transition_count_stream(
             spark, delta, state_dir, ["i", "j"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def anova_moment_stream(
@@ -1372,10 +1219,7 @@ def anova_moment_stream(
     from ..plans.queries_stats import anova_group_moments
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         delta = anova_group_moments(batch_df)
@@ -1385,12 +1229,7 @@ def anova_moment_stream(
             spark, delta, state_dir, ["grp"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def jsd_count_stream(
@@ -1415,10 +1254,7 @@ def jsd_count_stream(
     from ..plans.queries_text import jsd_source_word_counts
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         delta = jsd_source_word_counts(batch_df).withColumnRenamed(
@@ -1428,12 +1264,7 @@ def jsd_count_stream(
             spark, delta, state_dir, ["source", "word"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def daily_cents_stream(
@@ -1456,10 +1287,7 @@ def daily_cents_stream(
     sum + O(touched buckets) of a calendar-sized table."""
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         delta = batch_df.groupBy(
@@ -1475,12 +1303,7 @@ def daily_cents_stream(
             spark, delta, state_dir, ["d"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def utf8_metric_stream(
@@ -1503,10 +1326,7 @@ def utf8_metric_stream(
     from ..operators.multimodal import utf8_metric_counts
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         merge_add_parquet(
@@ -1514,12 +1334,7 @@ def utf8_metric_stream(
             batch_id=batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def score_grid_stream(
@@ -1544,10 +1359,7 @@ def score_grid_stream(
     from ..plans.queries_curation import _score_label_grid
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         merge_add_parquet(
@@ -1555,12 +1367,7 @@ def score_grid_stream(
             batch_id=batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def kw_gcnt_stream(
@@ -1583,10 +1390,7 @@ def kw_gcnt_stream(
     combinable count + O(touched buckets) of a grid-sized table."""
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         delta = (
@@ -1601,12 +1405,7 @@ def kw_gcnt_stream(
             spark, delta, state_dir, ["grp", "x"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def bigram_count_stream(
@@ -1632,10 +1431,7 @@ def bigram_count_stream(
     from ..functions import text as T
     from ..sources.sinks import merge_add_parquet
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
         toks = batch_df.select(T.tokens("text").alias("t"))
@@ -1654,9 +1450,4 @@ def bigram_count_stream(
             spark, delta, state_dir, ["w1", "w2"], batch_id=batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, process_batch, checkpoint_dir)

@@ -1001,3 +1001,69 @@ def test_outer_interval_join_emission_boundary(spark, tmp_path):
         for r in spark.read.parquet(target).collect()
     )
     assert out == [(3, None), (4, None)]
+
+
+def _stop_active(spark):
+    for q in spark.streams.active:
+        q.stop()
+
+
+def test_drain_timeout_stops_stream_and_raises(spark, monkeypatch):
+    """A drain whose stream never ends raises once TIMEOUT_S passes, and
+    leaves no running stream and no scoped conf behind."""
+    import pytest
+
+    from posts_vectorizer_spark.streaming import drain as drain_mod
+
+    monkeypatch.setattr(drain_mod, "TIMEOUT_S", 2)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+
+    def start(out, ckpt):
+        return (
+            spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+            .writeStream.format("noop")
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="1 second")
+            .start()
+        )
+
+    try:
+        with pytest.raises(TimeoutError):
+            drain_mod.drain(spark, start, scoped=True)
+        assert spark.streams.active == []
+        assert spark.conf.get(key) == prev
+    finally:
+        _stop_active(spark)
+
+
+def test_drain_batch_error_stops_stream_and_raises(spark, tmp_path):
+    """A drain whose batch function fails propagates the failure, and
+    leaves no running stream and no scoped conf behind."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from posts_vectorizer_spark.streaming.drain import drain
+    from posts_vectorizer_spark.streaming.worker import (
+        file_stream,
+        start_foreach_batch,
+    )
+
+    source = str(tmp_path / "in")
+    src = spark.range(4)
+    src.write.parquet(source)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+
+    def fail(batch_df, batch_id):
+        raise ValueError("batch function failed")
+
+    try:
+        with pytest.raises(StreamingQueryException, match="batch function failed"):
+            drain(spark, lambda out, ckpt: start_foreach_batch(
+                file_stream(spark, source, src.schema), fail, ckpt
+            ), scoped=True)
+        assert spark.streams.active == []
+        assert spark.conf.get(key) == prev
+    finally:
+        _stop_active(spark)

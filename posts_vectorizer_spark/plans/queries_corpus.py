@@ -997,7 +997,6 @@ FROM terms
 @register(
     "text_dunning_llr",
     oracle=_LLR_SQL.format(tokens_sql=T.tokens_sql("text")),
-    staged=True,
 )
 def text_dunning_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dunning log-likelihood-ratio collocations (built r12, staged

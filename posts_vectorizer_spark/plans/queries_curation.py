@@ -2233,7 +2233,7 @@ def _score_label_grid(docs: DataFrame) -> DataFrame:
     )
 
 
-@register("curation_roc_auc", oracle=_ROC_AUC_SQL, staged=True)
+@register("curation_roc_auc", oracle=_ROC_AUC_SQL)
 def curation_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROC AUC + Gini of the calibration family's quality signal (built
     r12, staged r13) — the RANKING-quality readout beside the
@@ -2332,7 +2332,7 @@ FROM sizes s, agg a
 """
 
 
-@register("curation_pr_auc", oracle=_PR_AUC_SQL, staged=True)
+@register("curation_pr_auc", oracle=_PR_AUC_SQL)
 def curation_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Average precision (PR AUC, threshold-sum form) over the SAME
     score grid as curation_roc_auc (built r12, staged r13) — the
@@ -2444,7 +2444,7 @@ FROM scored GROUP BY doc_id
 """
 
 
-@register("text_jelinek_mercer_bigram", oracle=_JM_BIGRAM_SQL, staged=True)
+@register("text_jelinek_mercer_bigram", oracle=_JM_BIGRAM_SQL)
 def text_jelinek_mercer_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jelinek-Mercer interpolated bigram LM scoring (built r12, staged
     r13) — the FIFTH smoothing family, completing the Chen & Goodman
@@ -2837,7 +2837,7 @@ GROUP BY bk.doc_id
 """
 
 
-@register("curation_dsir_weights", oracle=_DSIR_SQL, staged=True)
+@register("curation_dsir_weights", oracle=_DSIR_SQL)
 def curation_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weights (built r12, staged r13) — Data Selection
     via Importance Resampling (Xie et al. 2023, arXiv:2302.03169), the
@@ -2960,7 +2960,7 @@ FROM scored GROUP BY doc_id
 """
 
 
-@register("text_witten_bell_bigram", oracle=_WB_BIGRAM_SQL, staged=True)
+@register("text_witten_bell_bigram", oracle=_WB_BIGRAM_SQL)
 def text_witten_bell_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Witten-Bell bigram LM scoring (built r12, staged
     r13) — the fourth smoothing family beside Kneser-Ney (absolute
@@ -3085,7 +3085,7 @@ FROM idx g JOIN fit f ON f.k = g.i
 
 
 @register(
-    "curation_isotonic_calibration", oracle=_ISOTONIC_SQL, staged=True
+    "curation_isotonic_calibration", oracle=_ISOTONIC_SQL
 )
 def curation_isotonic_calibration(
     spark: SparkSession, sf_dir: str

@@ -1920,7 +1920,7 @@ FROM notes GROUP BY doc_id
 """
 
 
-@register("multimodal_midi_manifest", oracle=_MIDI_MANIFEST_SQL, staged=True)
+@register("multimodal_midi_manifest", oracle=_MIDI_MANIFEST_SQL)
 def multimodal_midi_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL Standard MIDI File codec (built r12, staged r13) — the
     VARIABLE-LENGTH-QUANTITY format family the container shelf was
@@ -1976,7 +1976,7 @@ FROM f
 """
 
 
-@register("multimodal_utf8_audit", oracle=_UTF8_AUDIT_SQL, staged=True)
+@register("multimodal_utf8_audit", oracle=_UTF8_AUDIT_SQL)
 def multimodal_utf8_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL UTF-8 validation audit (built r12, staged r13) — the
     training-data hygiene scanner the text pipeline runs before any
@@ -2024,7 +2024,7 @@ FROM vj GROUP BY doc_id
 
 
 @register(
-    "multimodal_protowire_manifest", oracle=_PROTOWIRE_SQL, staged=True
+    "multimodal_protowire_manifest", oracle=_PROTOWIRE_SQL
 )
 def multimodal_protowire_manifest(
     spark: SparkSession, sf_dir: str
@@ -2080,7 +2080,7 @@ FROM f HAVING count(*) > 0
 """
 
 
-@register("multimodal_utf8_corpus", oracle=_UTF8_CORPUS_SQL, staged=True)
+@register("multimodal_utf8_corpus", oracle=_UTF8_CORPUS_SQL)
 def multimodal_utf8_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus encoding-health rollup (built r12, staged r13) — the
     one-row aggregate of multimodal_utf8_audit's per-doc DFA profile
@@ -2115,7 +2115,7 @@ _PARQUET_FOOTER_SQL = "\nUNION ALL\n".join(
 
 
 @register(
-    "source_parquet_footer", oracle=_PARQUET_FOOTER_SQL, staged=True
+    "source_parquet_footer", oracle=_PARQUET_FOOTER_SQL
 )
 def source_parquet_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL parquet-footer introspection (built r12, staged r13) — a
@@ -2172,7 +2172,7 @@ FROM vj GROUP BY doc_id
 """
 
 
-@register("multimodal_bencode_manifest", oracle=_BENCODE_SQL, staged=True)
+@register("multimodal_bencode_manifest", oracle=_BENCODE_SQL)
 def multimodal_bencode_manifest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2229,7 +2229,7 @@ FROM recs GROUP BY doc_id
 """
 
 
-@register("source_avro_manifest", oracle=_AVRO_SQL, staged=True)
+@register("source_avro_manifest", oracle=_AVRO_SQL)
 def source_avro_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL Avro Object Container File codec (built r12, staged r13) —
     the big-data-native sibling of source_parquet_footer's Thrift
@@ -2282,7 +2282,7 @@ FROM cell GROUP BY doc_id
 """
 
 
-@register("source_fasttext_bin", oracle=_FTBIN_SQL, staged=True)
+@register("source_fasttext_bin", oracle=_FTBIN_SQL)
 def source_fasttext_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText ``.bin`` binary-model ingestion (built r12, staged
     r13) — CLOSES the repo's standing gap-list item 2 (VERDICT

@@ -1703,7 +1703,7 @@ def stream_good_turing_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .queries_quality import _VOCAB_GINI_SQL  # noqa: E402
 
 
-@register("stream_vocab_gini_drain", oracle=_VOCAB_GINI_SQL, staged=True)
+@register("stream_vocab_gini_drain", oracle=_VOCAB_GINI_SQL)
 def stream_vocab_gini_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming vocabulary-concentration monitoring with a driver row
     (built r12, staged r13): documents stream in TWO forced
@@ -1814,7 +1814,7 @@ def stream_jsd_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .queries_governance import _CHI2_INDEP_SQL  # noqa: E402
 
 
-@register("stream_chi2_drain", oracle=_CHI2_INDEP_SQL, staged=True)
+@register("stream_chi2_drain", oracle=_CHI2_INDEP_SQL)
 def stream_chi2_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming independence-significance monitoring with a driver row
     (built r12, staged r13): a SECOND readout of the SAME standing
@@ -1851,7 +1851,7 @@ def stream_chi2_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .queries_timeseries import _THEIL_SEN_SQL  # noqa: E402
 
 
-@register("stream_theil_sen_drain", oracle=_THEIL_SEN_SQL, staged=True)
+@register("stream_theil_sen_drain", oracle=_THEIL_SEN_SQL)
 def stream_theil_sen_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming robust-trend monitoring with a driver row (built r12,
     staged r13): events stream in TWO forced micro-batches; each batch
@@ -1885,7 +1885,7 @@ def stream_theil_sen_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .queries_extras import _UTF8_CORPUS_SQL  # noqa: E402
 
 
-@register("stream_utf8_drain", oracle=_UTF8_CORPUS_SQL, staged=True)
+@register("stream_utf8_drain", oracle=_UTF8_CORPUS_SQL)
 def stream_utf8_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming encoding-health monitoring with a driver row (built
     r12, staged r13): documents stream in TWO forced micro-batches;
@@ -1922,7 +1922,7 @@ def stream_utf8_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .queries_curation import _ROC_AUC_SQL  # noqa: E402
 
 
-@register("stream_auc_drain", oracle=_ROC_AUC_SQL, staged=True)
+@register("stream_auc_drain", oracle=_ROC_AUC_SQL)
 def stream_auc_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ranking-quality monitoring with a driver row (built
     r12, staged r13): documents stream in TWO forced micro-batches;
@@ -1959,7 +1959,7 @@ def stream_auc_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .queries_stats import _KW_SQL  # noqa: E402
 
 
-@register("stream_kruskal_drain", oracle=_KW_SQL, staged=True)
+@register("stream_kruskal_drain", oracle=_KW_SQL)
 def stream_kruskal_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming rank-test monitoring with a driver row (built r12,
     staged r13): lineitem streams in TWO forced micro-batches; each
@@ -1998,7 +1998,6 @@ from .queries_corpus import _LLR_SQL  # noqa: E402
 @register(
     "stream_llr_drain",
     oracle=_LLR_SQL.format(tokens_sql=_T_llr.tokens_sql("text")),
-    staged=True,
 )
 def stream_llr_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming collocation-significance monitoring with a driver row
@@ -2036,7 +2035,7 @@ def stream_llr_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .queries_curation import _ISOTONIC_SQL  # noqa: E402
 
 
-@register("stream_isotonic_drain", oracle=_ISOTONIC_SQL, staged=True)
+@register("stream_isotonic_drain", oracle=_ISOTONIC_SQL)
 def stream_isotonic_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming calibration-curve maintenance with a driver row
     (built r12, staged r13): documents stream in TWO forced

@@ -1093,7 +1093,7 @@ def vocab_gini_readout(vc: DataFrame) -> DataFrame:
     )
 
 
-@register("text_vocab_gini", oracle=_VOCAB_GINI_SQL, staged=True)
+@register("text_vocab_gini", oracle=_VOCAB_GINI_SQL)
 def text_vocab_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary concentration (built r12, staged r13) — the TYPE-side
     inequality diagnostic completing the vocabulary-shape trio: the

@@ -1491,7 +1491,7 @@ p{r} AS (
     )
 
 
-@register("curation_kcenter_coreset", oracle=_kc_sql(), staged=True)
+@register("curation_kcenter_coreset", oracle=_kc_sql())
 def curation_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy k-center coreset selection (built r12, staged r13) — the
     COVERAGE-side diverse-subset operator beside SemDeDup (which

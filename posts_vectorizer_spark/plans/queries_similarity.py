@@ -531,7 +531,6 @@ def _triangles(edges_in: DataFrame) -> DataFrame:
 @register(
     "sim_triangle_count",
     oracle=_tri_sql(similarity.topk_sql(KNN_GRAPH_K)),
-    staged=True,
 )
 def sim_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle count + local clustering coefficient on the
@@ -565,7 +564,6 @@ def sim_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim_triangle_count_ann",
     oracle=_tri_sql(similarity.lsh_ann_sql(DIMS, KNN_GRAPH_K)),
-    staged=True,
 )
 def sim_triangle_count_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count / clustering coefficient with the edge list built
@@ -1401,7 +1399,6 @@ def sim_hits_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 )""",
         ]
     ),
-    staged=True,
 )
 def sim_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label-propagation communities (built r12, staged r13) — the
@@ -1432,7 +1429,7 @@ def sim_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ..operators import quantization  # noqa: E402
 
 
-@register("sim_sq8_scan", oracle=quantization.sq8_scan_sql(), staged=True)
+@register("sim_sq8_scan", oracle=quantization.sq8_scan_sql())
 def sim_sq8_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar-quantized (SQ8) serving scan (built r12, staged r13) —
     the uniform-grid member of the compressed-vector family beside the
@@ -1457,7 +1454,6 @@ def sim_sq8_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim_binary_hamming",
     oracle=quantization.binary_hamming_sql(DIMS),
-    staged=True,
 )
 def sim_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary (sign-bit) Hamming serving scan (built r12, staged r13)
@@ -1492,7 +1488,6 @@ def sim_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 )""",
         ]
     ),
-    staged=True,
 )
 def sim_label_propagation_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label propagation over the mutualized lsh_ann lists (built r12,
@@ -1568,7 +1563,6 @@ FROM s, nodes n
 @register(
     "sim_degree_assortativity",
     oracle=_assort_sql(similarity.topk_sql(KNN_GRAPH_K)),
-    staged=True,
 )
 def sim_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the mutual-kNN similarity graph (built
@@ -1604,7 +1598,6 @@ def sim_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim_degree_assortativity_ann",
     oracle=_assort_sql(similarity.lsh_ann_sql(DIMS, KNN_GRAPH_K)),
-    staged=True,
 )
 def sim_degree_assortativity_ann(
     spark: SparkSession, sf_dir: str

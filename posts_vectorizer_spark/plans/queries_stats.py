@@ -3161,7 +3161,7 @@ FROM pin WHERE n > k AND k > 1 AND tf9 < 1000000000
 """
 
 
-@register("rel_kruskal_wallis", oracle=_KW_SQL, staged=True)
+@register("rel_kruskal_wallis", oracle=_KW_SQL)
 def rel_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kruskal-Wallis H test with tie correction (built r12, staged
     r13) — the RANK-based k-group companion completing the one-way
@@ -3325,7 +3325,7 @@ WHERE r > 0 AND r < n AND n * wwn - wn * wn > 0
 """
 
 
-@register("events_cochran_armitage", oracle=_CA_TREND_SQL, staged=True)
+@register("events_cochran_armitage", oracle=_CA_TREND_SQL)
 def events_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochran-Armitage trend test (built r12, staged r13) — the
     ORDERED-categorical member of the significance family: chi²
@@ -3477,7 +3477,7 @@ FROM s WHERE n > 0 AND x > 0
 """
 
 
-@register("rel_theil_decomposition", oracle=_THEIL_SQL, staged=True)
+@register("rel_theil_decomposition", oracle=_THEIL_SQL)
 def rel_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-T inequality with exact between/within decomposition
     (built r12, staged r13) — the economics-family companion to the

@@ -1553,7 +1553,7 @@ FROM terms WHERE d_t > 0
 """
 
 
-@register("events_nelson_aalen", oracle=_NA_SQL, staged=True)
+@register("events_nelson_aalen", oracle=_NA_SQL)
 def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nelson-Aalen cumulative hazard over the SAME right-censored
     time-to-first-purchase risk grid as events_kaplan_meier (built
@@ -1671,7 +1671,7 @@ FROM tot t, agg a
 """
 
 
-@register("events_logrank_test", oracle=_LOGRANK_SQL, staged=True)
+@register("events_logrank_test", oracle=_LOGRANK_SQL)
 def events_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-group log-rank (Mantel-Cox) test over the right-censored
     time-to-first-purchase durations (built r12, staged r13) — the
@@ -1830,7 +1830,7 @@ FROM cum WHERE d_t > 0
 """
 
 
-@register("events_rmst", oracle=_RMST_SQL, staged=True)
+@register("events_rmst", oracle=_RMST_SQL)
 def events_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Restricted mean survival time (built r12, staged r13) — the
     EFFECT-SIZE closure of the survival family over the SAME
@@ -2758,7 +2758,7 @@ FROM med, meta WHERE med.mc > 0
 """
 
 
-@register("events_theil_sen", oracle=_THEIL_SEN_SQL, staged=True)
+@register("events_theil_sen", oracle=_THEIL_SEN_SQL)
 def events_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust trend slope over the daily value totals (built
     r12, staged r13) — the ESTIMATOR companion to events_mann_kendall's
@@ -2903,7 +2903,7 @@ FROM best
 """
 
 
-@register("events_binseg_changepoint", oracle=_BINSEG_SQL, staged=True)
+@register("events_binseg_changepoint", oracle=_BINSEG_SQL)
 def events_binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-segmentation changepoint LOCATOR over the daily value
     totals (built r12, staged r13) — the offline companion to the
@@ -3035,7 +3035,7 @@ WHERE n > 1 AND n_up > 0 AND n_down > 0
 """
 
 
-@register("events_runs_test", oracle=_RUNS_SQL, staged=True)
+@register("events_runs_test", oracle=_RUNS_SQL)
 def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald-Wolfowitz runs test over the daily up/down sign sequence
     (built r12, staged r13) — the sequence-RANDOMNESS member of the
@@ -3198,7 +3198,7 @@ FROM inc WHERE d_t > 0
 """
 
 
-@register("events_cumulative_incidence", oracle=_CIF_SQL, staged=True)
+@register("events_cumulative_incidence", oracle=_CIF_SQL)
 def events_cumulative_incidence(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

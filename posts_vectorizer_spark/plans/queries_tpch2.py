@@ -12,11 +12,6 @@ so like the earlier q11/q16 adaptations these state supplier-part economics
 over lineitem (the (l_partkey, l_suppkey) pairs ARE the supply relation)
 and cost over p_retailprice.
 
-Built in r6 after that round's head-50 was locked (staged via
-registry.STAGED, verified by the local oracle sweep + tests/test_tpch2.py);
-introduced to the driver surface in r7 with head slots per the
-introduction-round rule (registry.py).
-
 Exactness policy (the reason every comparison below is integer): money is
 summed as round(x*100)::BIGINT cents (FP *100 is NOT integral on this
 data — 6714/60k rows at sf0.01), discounts as hundredths, quantities are

@@ -27,6 +27,54 @@ EMPTY_SAFE = [
     "tfidf_vocabulary",
 ]
 
+# full-surface queries (graph, survival, codec, drain) that must reduce to
+# at most one row on zero-row tables
+DEGENERATE_ON_EMPTY = (
+    "sim_triangle_count",
+    "sim_triangle_count_ann",
+    "sim_label_propagation",
+    "sim_sq8_scan",
+    "sim_binary_hamming",
+    "sim_label_propagation_ann",
+    "sim_degree_assortativity",
+    "sim_degree_assortativity_ann",
+    "text_vocab_gini",
+    "curation_roc_auc",
+    "curation_pr_auc",
+    "text_jelinek_mercer_bigram",
+    "curation_dsir_weights",
+    "text_witten_bell_bigram",
+    "curation_isotonic_calibration",
+    "text_dunning_llr",
+    "events_nelson_aalen",
+    "events_logrank_test",
+    "events_rmst",
+    "events_theil_sen",
+    "events_binseg_changepoint",
+    "events_runs_test",
+    "events_cumulative_incidence",
+    "rel_kruskal_wallis",
+    "events_cochran_armitage",
+    "rel_theil_decomposition",
+    "stream_vocab_gini_drain",
+    "stream_chi2_drain",
+    "stream_theil_sen_drain",
+    "multimodal_midi_manifest",
+    "multimodal_utf8_audit",
+    "multimodal_protowire_manifest",
+    "multimodal_utf8_corpus",
+    "source_parquet_footer",
+    "multimodal_bencode_manifest",
+    "source_avro_manifest",
+    "source_fasttext_bin",
+    "stream_utf8_drain",
+    "stream_auc_drain",
+    "stream_kruskal_drain",
+    "stream_llr_drain",
+    "stream_isotonic_drain",
+    "curation_kcenter_coreset",
+)
+
 
 @pytest.fixture(scope="module")
 def empty_sf(spark, tmp_path_factory):
@@ -96,14 +144,13 @@ def test_bench_headline_line_fits_driver_tail_capture():
     assert "stage_metrics" not in parsed
 
 
-def test_staged_queries_survive_empty_tables(spark, tmp_path):
-    """P9 (empty-input guard) extended to the staged wave: every staged
-    query must return an empty (or degenerate-diagnostic) result on
-    schema-correct zero-row tables, never crash. The r7 empty-input
+def test_queries_degenerate_on_empty_tables(spark, tmp_path):
+    """P9 (empty-input guard) extended to DEGENERATE_ON_EMPTY: every
+    listed query must return an empty (or degenerate-diagnostic) result
+    on schema-correct zero-row tables, never crash. The r7 empty-input
     smoke caught two real ones: sim_hard_negatives IndexError'd on an
     empty label list, and stream_ddsketch_drain raised on the merge
     sink's never-materialized state."""
-    from posts_vectorizer_spark.plans.registry import staged_queries
     from posts_vectorizer_spark.sources import load_table
     from tests.conftest import SF_SMOKE
 
@@ -119,8 +166,9 @@ def test_staged_queries_survive_empty_tables(spark, tmp_path):
     # one row per FILE (and still hash-matches the oracle, whose
     # count(*)s are 0); everything else must degenerate to <= 1 row
     per_file_ok = {"source_parquet_footer"}
-    for name, fn in staged_queries().items():
-        n = fn(spark, str(tmp_path)).count()
+    qs = E.queries()
+    for name in DEGENERATE_ON_EMPTY:
+        n = qs[name](spark, str(tmp_path)).count()
         if name in per_file_ok:
             assert n >= 1, f"{name}: footer walk found no files"
             continue

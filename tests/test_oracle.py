@@ -138,10 +138,9 @@ def test_coverage_doc_totals_match_registry():
 
 
 def test_every_R_query_names_an_existing_strong_test():
-    """Registry lint (VERDICT r7 item 8): every [R] query — registered OR
-    staged, no oracle by design — must have a row in COVERAGE.md's [R]
-    table that cites at least one `tests/test_*.py` file, and every cited
-    file must exist. The totals test above checks only COUNTS; this one
+    """Registry lint (VERDICT r7 item 8): every [R] query — no oracle by
+    design — must have a row in COVERAGE.md's [R] table that cites at
+    least one `tests/test_*.py` file, and every cited file must exist. The totals test above checks only COUNTS; this one
     fails when a future [R] entry lands without its documented named
     test, or when a cited test file is renamed away."""
     import os
@@ -151,10 +150,7 @@ def test_every_R_query_names_an_existing_strong_test():
 
     registry._ensure_loaded()
     r_names = sorted(
-        q.name
-        for q in list(registry.REGISTRY.values())
-        + list(registry.STAGED.values())
-        if q.oracle is None
+        q.name for q in registry.REGISTRY.values() if q.oracle is None
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "COVERAGE.md")) as f:
@@ -182,13 +178,6 @@ def test_every_R_query_names_an_existing_strong_test():
 # and FP-order defects the value-level sweep could not see. These make both
 # classes permanently un-reintroducible.
 
-def _all_oracles() -> dict[str, str]:
-    """Registered + staged [Q] oracles — the full verified surface."""
-    from posts_vectorizer_spark.plans.registry import staged_oracle_sql
-
-    return {**_ORACLES, **staged_oracle_sql()}
-
-
 def test_oracle_output_types_no_hugeint(duck):
     """DuckDB types sum(integer) as HUGEINT (int128) by default; Spark has
     no int128, so a HUGEINT output column hashes differently driver-side
@@ -196,7 +185,7 @@ def test_oracle_output_types_no_hugeint(duck):
     `segment`). Binder-only check (con.sql is lazy — no execution), so the
     whole registry costs < 1 s."""
     bad = {}
-    for name, sql in sorted(_all_oracles().items()):
+    for name, sql in sorted(_ORACLES.items()):
         rel = duck.sql(sql)
         wide = [
             f"{c}: {t}"
@@ -251,7 +240,7 @@ def test_oracle_no_fp_order_dependent_sums():
     import re
 
     violations = []
-    for name, sql in sorted(_all_oracles().items()):
+    for name, sql in sorted(_ORACLES.items()):
         low = sql.lower()
         # spans of round(X, k) with k >= 4 — the sanctioned wrappers
         round_spans = []
@@ -287,28 +276,6 @@ def test_oracle_no_fp_order_dependent_sums():
         "order-dependent double sums in [Q] oracles (use scaled-int "
         "cents or round(sum(bare_col), k>=4)): " + "; ".join(violations)
     )
-
-
-_STAGED_ORACLES = __import__(
-    "posts_vectorizer_spark.plans.registry", fromlist=["staged_oracle_sql"]
-).staged_oracle_sql()
-
-
-@pytest.mark.parametrize("name", sorted(_STAGED_ORACLES))
-def test_staged_oracle_match(spark, duck, name):
-    """Staged [Q] queries (built after this round's head lock) get the
-    same automated Spark-vs-DuckDB differential as registered ones — the
-    r6 wave had this while staged; without it a regression between
-    staging and introduction would pass CI and first surface as a driver
-    hash fail."""
-    from posts_vectorizer_spark.plans.registry import staged_queries
-
-    problems, n_rows = compare_query(
-        spark, duck, name, staged_queries()[name], _STAGED_ORACLES[name],
-        SF_ORACLE,
-    )
-    assert not problems, f"{name}: {problems}"
-    assert n_rows >= 0
 
 
 def test_canon_type_regressions():
@@ -645,7 +612,7 @@ def test_oracle_no_new_unrounded_double_outputs(duck):
     import re as _re
 
     new = []
-    for name, sql in sorted(_all_oracles().items()):
+    for name, sql in sorted(_ORACLES.items()):
         rel = duck.sql(sql)
         for c, ty in zip(rel.columns, rel.types):
             if str(ty).upper() not in ("DOUBLE", "FLOAT", "REAL"):

@@ -163,14 +163,23 @@ def test_plan_build_triggers_no_jobs(spark):
         # and localCheckpoint materializes the covariance AQE stages at
         # build by the same contract as the entries above:
         "sim_pca_power_iteration",
-        # r12-built staged graph queries (listed ahead of introduction,
-        # matching the convention): they route through checkpoint_tracked
+        # r12-built graph queries: they route through checkpoint_tracked
         # edge producers + topk-kernel builds, so they run jobs at plan
-        # build exactly like the introduced HITS/kcore forms above.
+        # build exactly like the HITS/kcore forms above.
         "sim_triangle_count",
         "sim_triangle_count_ann",
         "sim_degree_assortativity",
         "sim_degree_assortativity_ann",
+        "sim_label_propagation",  # topk kernel edge build at plan build
+        # r12-built drains run their micro-batch loop by contract
+        "stream_chi2_drain",
+        "stream_theil_sen_drain",
+        "stream_utf8_drain",
+        "stream_kruskal_drain",
+        "stream_auc_drain",
+        "stream_vocab_gini_drain",
+        "stream_llr_drain",
+        "stream_isotonic_drain",
     }
     baseline = set(sc.statusTracker().getJobIdsForGroup())
     for name, fn in E.queries().items():

@@ -1,15 +1,14 @@
-"""TPC-H completion wave (queries_tpch2 — staged in r6, introduced to
-the driver surface in r7): introduction bookkeeping, selectivity pins,
-and plan shape. The per-query differential oracle sweep lives in
-tests/test_oracle.py::test_oracle_match now that the wave is registered
-(it parametrizes over every [Q] oracle, these included)."""
+"""TPC-H completion wave (queries_tpch2): driver-surface membership,
+selectivity pins, and plan shape. The per-query differential oracle sweep
+lives in tests/test_oracle.py::test_oracle_match (it parametrizes over
+every [Q] oracle, these included)."""
 
 from __future__ import annotations
 
 import __spark_entry__ as E
 from tests.conftest import SF_ORACLE
 
-_STAGED_Q = E.queries()
+_Q = E.queries()
 
 _WAVE = (
     "rel_tpch_q2_min_cost_supplier",
@@ -22,15 +21,9 @@ _WAVE = (
 
 
 def test_introduction_bookkeeping():
-    """r7 introduced the wave per the introduction-round rule: every
-    query is on the driver surface, oracle-backed, and no longer staged.
-    (The introduction-round head slots were an r7-only property — head
-    slots rotate to freshness fill in later rounds.)"""
-    from posts_vectorizer_spark.plans.registry import staged_queries
-
+    """Every wave query is on the driver surface and oracle-backed."""
     assert set(_WAVE) <= set(E.queries())
     assert set(_WAVE) <= set(E.oracle_sql()), "every wave query is [Q]"
-    assert not set(_WAVE) & set(staged_queries())
 
 
 def test_q20_majority_floor_discriminates(spark):
@@ -38,7 +31,7 @@ def test_q20_majority_floor_discriminates(spark):
     something: without it every supplier has some single-lineitem pair
     that trivially passes. Pin that the floored result is a strict,
     non-trivial subset of the supplier domain."""
-    rows = _STAGED_Q["rel_tpch_q20_excess_stock"](spark, SF_ORACLE).collect()
+    rows = _Q["rel_tpch_q20_excess_stock"](spark, SF_ORACLE).collect()
     names = {r["s_name"] for r in rows}
     assert 0 < len(names) < 100
 
@@ -47,7 +40,7 @@ def test_q2_keeps_cost_ties(spark):
     """Q2 semantics keep ALL suppliers tied at a part's min cost. Verify
     per-part: every returned (part, cost) equals that part's min over
     EUROPE suppliers, recomputed independently."""
-    df = _STAGED_Q["rel_tpch_q2_min_cost_supplier"](spark, SF_ORACLE)
+    df = _Q["rel_tpch_q2_min_cost_supplier"](spark, SF_ORACLE)
     got = [(r["p_partkey"], r["supply_cost"]) for r in df.collect()]
     assert got, "q2 returned no rows"
     per_part: dict[int, set[float]] = {}
@@ -63,7 +56,7 @@ def test_wave_plans_broadcast_dims(spark):
     broadcast — BroadcastNestedLoopJoin is the audited J5 pattern, so only
     CartesianProduct is disallowed.)"""
     for name in _WAVE:
-        plan = _STAGED_Q[name](spark, SF_ORACLE)._jdf.queryExecution().executedPlan().toString()
+        plan = _Q[name](spark, SF_ORACLE)._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, name
         if name != "rel_tpch_q12_late_shipments":  # fact-fact join only
             assert "BroadcastHashJoin" in plan, name
@@ -89,7 +82,7 @@ def test_q17_threshold_matches_fp_reading(spark):
             WHERE l2.l_partkey = l.l_partkey)
         """
     ).collect()[0]["n"]
-    exact = _STAGED_Q["rel_tpch_q17_small_quantity"](spark, SF_ORACLE).collect()[0][
+    exact = _Q["rel_tpch_q17_small_quantity"](spark, SF_ORACLE).collect()[0][
         "qualifying_lineitems"
     ]
     assert exact == fp

@@ -111,8 +111,10 @@ def main() -> int:
     import duckdb
 
     import bench
-    import __spark_entry__ as entry_mod
-    from posts_vectorizer_spark.plans.registry import resolve_query
+    from posts_vectorizer_spark.plans.registry import (
+        resolve_oracle,
+        resolve_query,
+    )
     from posts_vectorizer_spark.session import get_spark
 
     qname = sys.argv[1] if len(sys.argv) > 1 else "tfidf_doc_vectors"
@@ -120,11 +122,7 @@ def main() -> int:
 
     shutil.rmtree(WORKDIR, ignore_errors=True)
     flagship = resolve_query(qname)
-    # staged-aware, symmetrical to resolve_query: registered oracles live
-    # in the entry surface, staged ones only in the registry
-    from posts_vectorizer_spark.plans.registry import staged_oracle_sql
-
-    oracle = {**entry_mod.oracle_sql(), **staged_oracle_sql()}[qname]
+    oracle = resolve_oracle(qname)
 
     spark = get_spark("crossover")
     spark.sparkContext.setLogLevel("ERROR")

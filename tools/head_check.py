@@ -9,12 +9,7 @@ is exactly the driver's environment. Verify recipe step 4.
 Usage:
     python tools/head_check.py            # all _HEAD_ORDER queries
     python tools/head_check.py 37 50      # slice [37:50) of the head
-    python tools/head_check.py --backlog  # every [Q] query with no driver
-                                          # row yet and no head slot (the
-                                          # next round's rotation, de-risked
-                                          # under driver conditions early)
-    python tools/head_check.py q1 q2 ...  # explicit query names (e.g. the
-                                          # next round's freshness cohort)
+    python tools/head_check.py q1 q2 ...  # explicit query names
 """
 
 from __future__ import annotations
@@ -40,45 +35,7 @@ def main(argv: list[str]) -> int:
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    # staged queries are addressable by explicit name (they face this
-    # exact harness at their introduction round — de-risk them NOW; the
-    # r7 SNM ANSI crash was only reachable under a vanilla session)
-    from posts_vectorizer_spark.plans.registry import (
-        staged_oracle_sql,
-        staged_queries,
-    )
-
-    qs = {**qs, **staged_queries()}
-    oracles = {**oracles, **staged_oracle_sql()}
-
-    if argv and argv[0] == "--backlog":
-        # vanilla-session check of every [Q] query NOT in the current head
-        # and with no driver CORRECTNESS row yet — de-risks the next
-        # round's rotation before it happens
-        import glob
-        import json
-
-        green = set()
-        for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-            with open(f) as fh:
-                rows = json.load(fh)
-            for k, v in rows.items():
-                # all three matches AND a clean error field — a row that
-                # "matched" while recording an error must stay in the
-                # backlog, not silently drop out of it forever
-                if (
-                    v.get("rows_match")
-                    and v.get("schema_match")
-                    and v.get("hash_match")
-                    and not v.get("err")
-                ):
-                    green.add(k)
-        names = [
-            n for n in qs
-            if n in oracles and n not in green and n not in _HEAD_ORDER
-        ]
-        print(f"backlog: {len(names)} never-driver-checked [Q] queries")
-    elif argv and not argv[0].isdigit():
+    if argv and not argv[0].isdigit():
         names = list(argv)   # explicit query names
     else:
         lo, hi = 0, len(_HEAD_ORDER)

@@ -16,7 +16,6 @@ FP-order dependence (the FP-sum lint in tests/test_oracle.py does).
 
 Usage:
     python tools/oracle_check.py [query ...]      # default: all [Q] queries
-    python tools/oracle_check.py --staged [query ...]   # staged-only surface
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python tools/oracle_check.py
 """
 
@@ -179,24 +178,7 @@ def main(argv: list[str]) -> int:
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    # Staged queries (built after the round's head lock; registry.STAGED)
-    # are part of the verified surface even before the driver sees them:
-    # included by name, via --staged (staged only), or in the no-arg sweep.
-    from posts_vectorizer_spark.plans.registry import (
-        staged_oracle_sql,
-        staged_queries,
-    )
-
-    staged = staged_queries()
-    staged_or = staged_oracle_sql()
-    if "--staged" in argv:
-        argv = [a for a in argv if a != "--staged"]
-        qs, oracles = staged, staged_or
-        names = argv or sorted(staged_or)
-    else:
-        qs = {**qs, **staged}
-        oracles = {**oracles, **staged_or}
-        names = argv or sorted(oracles)
+    names = argv or sorted(oracles)
     spark = get_spark("oracle-check", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     con = duckdb_connection(sf_dir)
 
@@ -205,7 +187,7 @@ def main(argv: list[str]) -> int:
     slowest: list[tuple[float, str]] = []
     for name in names:
         if name not in oracles:
-            print(f"SKIP  {name} (no oracle on this surface)")
+            print(f"SKIP  {name} (no oracle)")
             skipped += 1
             continue
         t0 = _time.perf_counter()

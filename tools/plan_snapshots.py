@@ -9,9 +9,8 @@ committed evidence:
     python tools/plan_snapshots.py plans/next after q1 q2 ... # named queries
 
 A "before" set comes from running this script in a checkout of the parent
-commit with the same output dir. Staged queries resolve by name. The
-fixture tier is $SPARK_GRAFT_SF_DIR (default: testdata/sf0.1 beside the
-checkout).
+commit with the same output dir. The fixture tier is
+$SPARK_GRAFT_SF_DIR (default: testdata/sf0.1 beside the checkout).
 """
 
 from __future__ import annotations

@@ -154,8 +154,6 @@ def main(only: list[str] | None = None) -> None:
     # r7-wave family: reuse the EXACT registered plan code by laying the
     # scaled inputs out as {dir}/{table}.parquet (symlinks to the already
     # materialized copies) and calling the query builders on them.
-    # resolve_query spans REGISTRY and STAGED, so this keeps working
-    # across each wave's staging transition.
     from posts_vectorizer_spark.plans.registry import resolve_query
 
     class _SQ:

@@ -235,10 +235,11 @@ def topk(
 
     ``probe`` (default: ``embeddings``) queries a different relation
     against the same broadcast build side — the real serving asymmetry
-    (few index vectors, a firehose of queries) and what
-    ``tools/cosine_scale_probe.py`` scales to measure the Arrow-handshake
-    amortization trend. Self-pairs are still excluded by vec_id equality,
-    which with a disjoint probe id space excludes nothing.
+    (few index vectors, a firehose of queries) and what the
+    ``cosine_probe`` entry of ``tools/scale_trend.py`` scales to measure
+    the Arrow-handshake amortization trend. Self-pairs are still excluded
+    by vec_id equality, which with a disjoint probe id space excludes
+    nothing.
 
     ``label_col`` + ``label_mode`` ('same' | 'diff') restrict candidates
     INSIDE the kernel: 'same' keeps build rows whose label equals the

@@ -32,8 +32,12 @@ def get_spark(
       partition holds ~128MB of shuffle data.
     - session timezone pinned UTC so timestamp semantics match the DuckDB
       oracle and are stable across environments.
+    - the core count defaults to ``$SPARK_GRAFT_CPUS``, else the cores this
+      process may run on.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "32"
+    cpus = (
+        cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     shuffle_partitions = shuffle_partitions or int(cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -61,6 +65,9 @@ def get_spark(
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # the console progress bar writes `[Stage n:>` to stdout, where it
+        # lands in front of result lines that tools parse
+        .config("spark.ui.showConsoleProgress", "false")
         # local[N] hosts driver AND all executor threads in ONE JVM, so this
         # is the whole-engine heap. 8g forced concurrent full GCs mid-query
         # under 32 threads (observed: identical bench queries swinging 2-3x

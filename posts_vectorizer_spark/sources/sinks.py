@@ -193,13 +193,6 @@ def merge_add_parquet(
     {APPLIED_LEDGER_CAP} ids — far beyond any realistic replay window
     (foreachBatch replays only the LAST uncommitted batch). Deltas must be
     pre-aggregated unique per key (callers groupBy first)."""
-    manifest = _read_manifest(target_dir)
-    if (
-        batch_id is not None
-        and manifest is not None
-        and batch_id in manifest.get("applied", [])
-    ):
-        return
     _merge_parquet(
         spark, deltas, None, target_dir, keys, n_buckets,
         combine="add", batch_id=batch_id,
@@ -221,13 +214,6 @@ def merge_max_parquet(
     no-op on values), but the batch-id ledger is kept anyway so replay
     semantics are identical across all three sink combiners
     (replace/add/max). Deltas must be pre-aggregated unique per key."""
-    manifest = _read_manifest(target_dir)
-    if (
-        batch_id is not None
-        and manifest is not None
-        and batch_id in manifest.get("applied", [])
-    ):
-        return
     _merge_parquet(
         spark, deltas, None, target_dir, keys, n_buckets,
         combine="max", batch_id=batch_id,
@@ -250,13 +236,6 @@ def merge_min_parquet(
     is idempotent; the batch-id ledger is kept for uniform replay
     semantics across all four sink combiners (replace/add/max/min).
     Deltas must be pre-aggregated unique per key."""
-    manifest = _read_manifest(target_dir)
-    if (
-        batch_id is not None
-        and manifest is not None
-        and batch_id in manifest.get("applied", [])
-    ):
-        return
     _merge_parquet(
         spark, deltas, None, target_dir, keys, n_buckets,
         combine="min", batch_id=batch_id,
@@ -276,6 +255,12 @@ def _merge_parquet(
 ) -> None:
     os.makedirs(target_dir, exist_ok=True)
     manifest = _read_manifest(target_dir)
+    if (
+        batch_id is not None
+        and manifest is not None
+        and batch_id in manifest.get("applied", [])
+    ):
+        return  # replayed batch: the ledger says it is already applied
     _sweep_orphans(target_dir, manifest)
     if manifest is not None:
         n_buckets = manifest["n_buckets"]

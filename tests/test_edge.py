@@ -144,6 +144,29 @@ def test_bench_headline_line_fits_driver_tail_capture():
     assert "stage_metrics" not in parsed
 
 
+def test_bench_plans_writes_one_section_per_query(spark, tmp_path):
+    """`bench.py plans` writes PLANS.md's layout — one `## name` section
+    holding a formatted physical plan per query — and only plans: no
+    Spark job runs while it writes."""
+    import re
+
+    import bench
+    from posts_vectorizer_spark.sources import load_tables
+
+    names = ["rel_groupby_agg", "rel_scan_filter_project"]
+    # first touch of a parquet path fires a schema-inference job; warm it
+    load_tables(spark, SF_SMOKE)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    out = tmp_path / "plans.md"
+    bench.write_plans(spark, SF_SMOKE, str(out), names)
+    assert set(tracker.getJobIdsForGroup()) == before
+    sections = re.split(r"^## (\S+)$", out.read_text(), flags=re.M)[1:]
+    assert sections[::2] == names
+    for body in sections[1::2]:
+        assert body.count("== Physical Plan ==") == 1
+
+
 def test_queries_degenerate_on_empty_tables(spark, tmp_path):
     """P9 (empty-input guard) extended to DEGENERATE_ON_EMPTY: every
     listed query must return an empty (or degenerate-diagnostic) result

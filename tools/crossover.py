@@ -103,11 +103,6 @@ def _scaled_dir(sf_dir: str, k: int, mode: str = "plain") -> str:
 def main() -> int:
     os.environ["TZ"] = "UTC"
     time.tzset()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    scales = tuple(
-        int(s) for s in os.environ.get("CROSSOVER_SCALES", "1,3,10,30").split(",")
-    )
-
     import duckdb
 
     import bench
@@ -115,7 +110,11 @@ def main() -> int:
         resolve_oracle,
         resolve_query,
     )
-    from posts_vectorizer_spark.session import get_spark
+
+    sf_dir = bench.SF_DIR
+    scales = tuple(
+        int(s) for s in os.environ.get("CROSSOVER_SCALES", "1,3,10,30").split(",")
+    )
 
     qname = sys.argv[1] if len(sys.argv) > 1 else "tfidf_doc_vectors"
     mode = sys.argv[2] if len(sys.argv) > 2 else "plain"
@@ -124,20 +123,17 @@ def main() -> int:
     flagship = resolve_query(qname)
     oracle = resolve_oracle(qname)
 
-    spark = get_spark("crossover")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.session("crossover")
     n_threads = os.cpu_count() or 32
 
     runs = []
     bench.force(flagship(spark, _scaled_dir(sf_dir, scales[0], mode)))  # warmup
     for k in scales:
         d = _scaled_dir(sf_dir, k, mode)
-
-        spark_best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            bench.force(flagship(spark, d))
-            spark_best = min(spark_best or 9e9, time.perf_counter() - t0)
+        spark_best = min(
+            bench.run_once(spark, lambda: flagship(spark, d))[0]
+            for _ in range(2)
+        )
 
         duck_best = None
         rows = 0

@@ -23,18 +23,14 @@ sys.path.insert(0, REPO)
 
 
 def main(argv: list[str]) -> int:
-    os.environ["TZ"] = "UTC"
+    os.environ["TZ"] = "UTC"  # see oracle_check.main
     time.tzset()
     from pyspark.sql import SparkSession
 
-    from tools.oracle_check import compare_query, duckdb_connection
+    from posts_vectorizer_spark.plans.registry import _HEAD_ORDER
+    from tools.oracle_check import check_queries
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    import __spark_entry__ as entry_mod
-    from posts_vectorizer_spark.plans.registry import _HEAD_ORDER
-
-    qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
     if argv and not argv[0].isdigit():
         names = list(argv)   # explicit query names
     else:
@@ -49,34 +45,7 @@ def main(argv: list[str]) -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb_connection(sf_dir)
-
-    failed = []
-    for name in names:
-        if name not in oracles:
-            print(f"SKIP  {name} (no oracle — must not happen in the head)")
-            failed.append(name)
-            continue
-        t0 = time.perf_counter()
-        try:
-            problems, n = compare_query(
-                spark, con, name, qs[name], oracles[name], sf_dir
-            )
-        except Exception as e:  # noqa: BLE001
-            print(f"ERROR {name}: {type(e).__name__}: {e}")
-            failed.append(name)
-            continue
-        elapsed = time.perf_counter() - t0
-        if problems:
-            print(f"FAIL  {name}: " + " | ".join(problems))
-            failed.append(name)
-        else:
-            print(f"OK    {name} ({n} rows, {elapsed:.2f}s)")
-        from posts_vectorizer_spark.cache import release_caches
-
-        release_caches()
-    print(f"\n{len(names) - len(failed)}/{len(names)} passed")
-    return 1 if failed else 0
+    return check_queries(spark, names, sf_dir)
 
 
 if __name__ == "__main__":

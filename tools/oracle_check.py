@@ -24,6 +24,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import time
 from datetime import datetime
 
 import duckdb
@@ -161,25 +162,16 @@ def compare_query(spark, con, name: str, fn, sql: str, sf_dir: str):
     return problems, len(spark_rows)
 
 
-def main(argv: list[str]) -> int:
-    # Timestamps compare as UTC instants: the engine pins the SESSION TZ to
-    # UTC (registry.prep_session), but PySpark's collect() renders
-    # TimestampType through the PYTHON PROCESS timezone — outside any
-    # query's control. Pin the process TZ so the harness is deterministic
-    # under any shell TZ (the driver runs in UTC; a non-UTC driver process
-    # would need TIMESTAMP_NTZ output columns instead).
-    import time as _time
-
-    os.environ["TZ"] = "UTC"
-    _time.tzset()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+def check_queries(spark, names: list[str], sf_dir: str) -> int:
+    """Compare each named query against its DuckDB oracle, printing one
+    OK / FAIL / ERROR / SKIP line per query and an "n/m passed" total.
+    Returns the exit status: 1 if any query failed or errored. Callers pin
+    the process TZ to UTC first (see main)."""
     import __spark_entry__ as entry_mod
-    from posts_vectorizer_spark.session import get_spark
+    from posts_vectorizer_spark.cache import release_caches
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    names = argv or sorted(oracles)
-    spark = get_spark("oracle-check", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     con = duckdb_connection(sf_dir)
 
     failed = []
@@ -190,22 +182,20 @@ def main(argv: list[str]) -> int:
             print(f"SKIP  {name} (no oracle)")
             skipped += 1
             continue
-        t0 = _time.perf_counter()
+        t0 = time.perf_counter()
         try:
             problems, n = compare_query(spark, con, name, qs[name], oracles[name], sf_dir)
         except Exception as e:  # noqa: BLE001
             print(f"ERROR {name}: {type(e).__name__}: {e}")
             failed.append(name)
             continue
-        elapsed = _time.perf_counter() - t0
+        elapsed = time.perf_counter() - t0
         slowest.append((elapsed, name))
         if problems:
             print(f"FAIL  {name}: " + " | ".join(problems))
             failed.append(name)
         else:
             print(f"OK    {name} ({n} rows, {elapsed:.2f}s)")
-        from posts_vectorizer_spark.cache import release_caches
-
         release_caches()  # per-query caches don't outlive their comparison
     if len(slowest) > 5:
         top = ", ".join(
@@ -216,6 +206,23 @@ def main(argv: list[str]) -> int:
     suffix = f" ({skipped} skipped)" if skipped else ""
     print(f"\n{n_ran - len(failed)}/{n_ran} passed{suffix}")
     return 1 if failed else 0
+
+
+def main(argv: list[str]) -> int:
+    # Timestamps compare as UTC instants: the engine pins the SESSION TZ to
+    # UTC (registry.prep_session), but PySpark's collect() renders
+    # TimestampType through the PYTHON PROCESS timezone — outside any
+    # query's control. Pin the process TZ so the harness is deterministic
+    # under any shell TZ (the driver runs in UTC; a non-UTC driver process
+    # would need TIMESTAMP_NTZ output columns instead).
+    os.environ["TZ"] = "UTC"
+    time.tzset()
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    import __spark_entry__ as entry_mod
+    from posts_vectorizer_spark.session import get_spark
+
+    names = argv or sorted(entry_mod.oracle_sql())
+    return check_queries(get_spark("oracle-check"), names, sf_dir)
 
 
 if __name__ == "__main__":

@@ -5,7 +5,8 @@ SCALE.md is an extrapolation from plan shape. This tool replaces the
 extrapolation's first decade with measurement: it materializes 1x/3x/10x
 variants of the sf0.1 inputs to parquet (so the timed path includes the
 real scan, like bench.py) and times each operator best-of-2 after warmup,
-recording wall / executor task + cpu time / shuffle bytes.
+with bench.py's session and timing helpers, recording wall / executor
+task + cpu time / shuffle bytes.
 
 Input scaling is semantics-preserving:
 - documents for DEDUP ops: each copy k suffixes every word with `_k`
@@ -21,13 +22,22 @@ Input scaling is semantics-preserving:
   session operators see k-times MORE groups of the SAME size — the shape
   a 100 TB user-event table actually has (users grow, per-user history
   doesn't).
+- embeddings for `cosine_probe`: the build side stays at 1x and the PROBE
+  side is k copies with vec_ids shifted by (i+1)*ID_OFFSET (the serving
+  asymmetry `similarity.topk(probe=...)` exists for; n_tiles=4, k=5). It
+  measures the cosine kernel's per-task Arrow round-trip + Python-worker
+  handshake amortizing as the probe grows: wall grows sublinearly and
+  wall per probe row (wall_s / (scale * embeddings rows)) falls toward
+  the compute floor. The task/cpu ratio carries no scale signal for a Python
+  kernel (executorRunTime includes the JVM thread blocked on the worker;
+  see SCALE.md).
 
 Expected if the SCALE.md arguments hold: wall grows ~linearly (or better,
 while fixed per-query constants still amortize) and shuffle bytes grow
 ~linearly for the shuffling ops; any super-linear bend is a real finding.
 
 Usage:  python tools/scale_trend.py            # one JSON line on stdout
-        python tools/scale_trend.py ddsketch_quantiles psi_drift
+        python tools/scale_trend.py ddsketch_quantiles cosine_probe
                                                # subset by operator name
 Results table lives in SCALE.md (measured operator scaling).
 """
@@ -38,7 +48,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -52,13 +61,11 @@ def main(only: list[str] | None = None) -> None:
     from pyspark.sql import functions as F
 
     import bench
-    from posts_vectorizer_spark.operators import dedup, tfidf
-    from posts_vectorizer_spark.session import get_spark
+    from posts_vectorizer_spark.operators import dedup, similarity, tfidf
     from posts_vectorizer_spark.sources import load_table
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("scale_trend", extra_conf={"spark.ui.enabled": "true"})
-    spark.sparkContext.setLogLevel("ERROR")
+    sf_dir = bench.SF_DIR
+    spark = bench.session("scale_trend")
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -81,6 +88,13 @@ def main(only: list[str] | None = None) -> None:
         for p in parts[1:]:
             out = out.unionAll(p)
         return out
+
+    # cosine probe copies are shifted by (i+1)*ID_OFFSET, not i: copy 0 at
+    # offset 0 would collide with the build side's ids and exclude
+    # self-pairs for that slice only — per-copy work must be uniform
+    probe_base = emb.select(
+        (F.col("vec_id") + F.lit(ID_OFFSET)).alias("vec_id"), "embedding"
+    )
 
     def materialize(name, df):
         path = f"{WORKDIR}/{name}.parquet"
@@ -179,6 +193,9 @@ def main(only: list[str] | None = None) -> None:
         ),
         "tfidf_doc_vectors": lambda k: tfidf.doc_vectors(
             inputs[("docs_plain", k)], emb, "en"
+        ),
+        "cosine_probe": lambda k: similarity.topk(
+            emb, 5, n_tiles=4, probe=copies(probe_base, "vec_id", k)
         ),
         "groupby_agg_q1_shape": lambda k: q1_shape(inputs[("lineitem", k)]),
         "events_session_window": lambda k: session_window(inputs[("events", k)]),
@@ -684,26 +701,20 @@ def main(only: list[str] | None = None) -> None:
         operators = {n: f for n, f in operators.items() if n in only}
 
     results = {}
-    from posts_vectorizer_spark.cache import release_caches
-
     for name, build in operators.items():
-        bench.force(build(1))  # warmup, unmeasured
-        release_caches()
+        # run_once drops tracked persists after every run: Spark's
+        # CacheManager matches canonicalized plans, so a fresh build(k)
+        # would otherwise silently reuse the previous run's cached
+        # mid-plan relation and the trend would measure warm-cache cost,
+        # not the per-run plan
+        _, snap = bench.run_once(spark, lambda: build(1))  # warmup, unmeasured
         runs = []
         for k in SCALES:
             best = None
             for _ in range(2):
-                # drop tracked persists from prior runs: Spark's
-                # CacheManager matches canonicalized plans, so a fresh
-                # build(k) would otherwise silently reuse the previous
-                # run's cached mid-plan relation and the trend would
-                # measure warm-cache cost, not the per-run plan
-                release_caches()
-                before = bench._settled_snapshot(spark)
-                t0 = time.perf_counter()
-                bench.force(build(k))
-                wall = time.perf_counter() - t0
-                m = bench._diff_metrics(before, bench._settled_snapshot(spark))
+                wall, after = bench.run_once(spark, lambda: build(k))
+                m = bench.diff_metrics(snap, after)
+                snap = after
                 if best is None or wall < best["wall_s"]:
                     best = {
                         "wall_s": round(wall, 3),

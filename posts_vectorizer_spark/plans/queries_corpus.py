@@ -1024,7 +1024,16 @@ def text_dunning_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-enter as broadcast joins, and the count floor prunes the
     output before any per-bigram arithmetic."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = spread(docs).select(T.tokens("text").alias("t"))
+    return llr_readout(bigram_counts(spread(docs)))
+
+
+def bigram_counts(docs: DataFrame) -> DataFrame:
+    """(w1, w2, k11) adjacent-pair counts over the token arrays of
+    ``docs.text`` — the ADDITIVE sufficient statistic of llr_readout
+    (bigram counts add across batches), and the streaming drain's
+    per-batch delta: the second unbounded-key additive state beside
+    the vocab table."""
+    toks = docs.select(T.tokens("text").alias("t"))
     pairs = F.transform(
         F.sequence(F.lit(1), F.size("t") - 1),
         lambda i: F.struct(
@@ -1032,13 +1041,12 @@ def text_dunning_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at(F.col("t"), i + 1).alias("w2"),
         ),
     )
-    bi = (
+    return (
         toks.where(F.size("t") >= 2)
         .select(F.explode(pairs).alias("p"))
         .select("p.w1", "p.w2")
-    )
-    return llr_readout(
-        bi.groupBy("w1", "w2").agg(F.count("*").cast("bigint").alias("k11"))
+        .groupBy("w1", "w2")
+        .agg(F.count("*").cast("bigint").alias("k11"))
     )
 
 

@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 from ..functions import text as T
 from ..operators.dedup import _doc_shingles, _doc_shingles_sql
 from ..sources import load_table, spread
+from .queries_text import word_counts
 from .registry import register
 
 
@@ -1823,12 +1824,7 @@ def text_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a 1-row total broadcast. The vocabulary never reaches the
     driver."""
     docs = load_table(spark, sf_dir, "documents")
-    wc = (
-        docs.select(F.explode(T.tokens("text")).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("r"))
-    )
-    return good_turing_readout(wc)
+    return good_turing_readout(word_counts(docs).withColumnRenamed("n", "r"))
 
 
 def good_turing_readout(wc: DataFrame) -> DataFrame:

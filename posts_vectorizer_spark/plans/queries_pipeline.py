@@ -14,10 +14,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from ..cache import persist_tracked
 from ..functions import text as _T
-from ..sources import load_table, scratch_dir
-from ..sources.sinks import read_merged
-from ..streaming.drain import drain, halves, source_copy
+from ..sources import load_table, scratch_dir, spread
+from ..sources.sinks import merge_max_parquet, merge_min_parquet, read_merged
+from ..streaming.drain import drain, halves, source_copy, state_drain
 from .registry import register
 
 SOURCE_CAP = 10
@@ -406,9 +407,8 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     here the feed is a planned parallel scan instead of a driver cursor."""
     from ..sources import pydatasource as P
 
-    # runtime-settable; the vanilla driver session has it off and a
-    # reader implementing pushFilters REQUIRES it on
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    # the reader's pushFilters needs spark.sql.python.filterPushdown
+    # .enabled when the plan is optimized — a prep_session key
     P.register(spark)
     df = (
         spark.read.format(P.SOURCE_NAME)
@@ -1058,29 +1058,16 @@ def stream_ddsketch_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams in TWO forced micro-batches (two source files,
     maxFilesPerTrigger=1); each batch additively merges its (d, f2)
     bucket-count delta into the standing sketch state
-    (streaming/worker.py::ddsketch_count_stream, exactly-once via the
+    (ddsketch_counts through merge_stream, exactly-once via the
     sink's batch-id ledger), and the final quantiles read out from the
     merged state (queries_sketch.ddsketch_readout). Count addition is
     commutative, so the batch split cannot change the result — the
     oracle is rel_ddsketch_quantiles' whole-corpus readout, making the
     sketch's merge property driver-hash-checked end to end."""
-    from ..streaming.worker import ddsketch_count_stream
-    from .queries_sketch import ddsketch_readout
+    from .queries_sketch import ddsketch_counts, ddsketch_readout
 
     li = load_table(spark, sf_dir, "lineitem")
-    source = source_copy(f"ddsketch:{sf_dir}", halves(li, "l_orderkey"))
-    state_dir = drain(spark, lambda out, ckpt: ddsketch_count_stream(
-        spark, source, li.schema, out, ckpt, max_files_per_trigger=1
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        # empty input: batches ran but carried no rows, so the merge sink
-        # never materialized state — an empty readout, not an error
-        return spark.createDataFrame(
-            [],
-            "quantile string, est_value double, bucket_count bigint,"
-            " n bigint, rel_err_bound double",
-        )
+    state = state_drain(spark, li, "l_orderkey", ddsketch_counts, ["d", "f2"])
     return ddsketch_readout(spark, state)
 
 
@@ -1185,7 +1172,13 @@ def _overlap_materialize(df):
     machinery, whose WAL/planning gaps leave executors idle (guide §2.6
     overlap independent jobs). The caller persists `df` first and joins
     the returned thread after the drain; results are unaffected — a
-    failed warm just falls back to recompute at the readout."""
+    failed warm just falls back to recompute at the readout.
+
+    Never run it inside a session-conf scope (``state_scoped_partitions``
+    via a ``scoped=True`` drain, or any other set-and-restore of a SQL
+    conf): the thread plans its job while the scope is live, so it would
+    pick up the scoped conf or the restored one depending on timing.
+    ``state_drain`` never scopes."""
     from pyspark import InheritableThread
 
     def _run() -> None:
@@ -1203,40 +1196,29 @@ def _overlap_materialize(df):
 def stream_cms_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming count-min-sketch maintenance with a driver row (built
     r9, staged r10): documents stream in TWO forced micro-batches (two
-    source files, maxFilesPerTrigger=1); each batch tokenizes, hashes,
-    and additively merges its (d, bucket) counter delta into the
-    standing sketch (streaming/worker.py::cms_count_stream, exactly-once
+    halves of 8 files, maxFilesPerTrigger=8); each batch tokenizes,
+    hashes, and additively merges its (d, bucket) counter delta into the
+    standing sketch (cms_counters through merge_stream, exactly-once
     via the merge sink's batch-id ledger); per-word estimates read out
     from the MERGED state beside the exact counts. Counter addition is
     commutative, so the batch split cannot change the sketch — the
     oracle is text_cms_heavy_hitters' one-pass twin, making the CMS
     merge property driver-hash-checked end to end (the frequency
     companion to stream_ddsketch_drain's quantile sketch)."""
-    from ..functions import text as _T2
-    from ..streaming.worker import cms_count_stream
-    from .queries_sketch import cms_estimates
+    from .queries_sketch import cms_counters, cms_estimates
 
     docs = load_table(spark, sf_dir, "documents")
-    # The stream consumes only `text` (+ doc_id for the forced split):
-    # project the source copy down to those two columns, write it in
-    # PARALLEL (8 files per half — the HLL drain's lesson), and cache
-    # the copy per (query, sf_dir) so best-of-N bench iterations pay
-    # the setup write once (r10 verdict item 1).
-    feed = docs.select("doc_id", "text")
     # r12: count first, hash once per DISTINCT word (max(h) over a
     # word's occurrences IS char_hash(word) — bit-identical), with the
     # single-split scan rebalanced before the tokenize/explode
     # (sources.spread) so the exact side no longer hashes every token
     # occurrence on one core.
-    from ..cache import persist_tracked
-    from ..sources import spread as _spread
-
     exact = persist_tracked(
-        _spread(docs)
-        .select(F.explode(_T2.tokens("text")).alias("word"))
+        spread(docs)
+        .select(F.explode(_T.tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("exact_cnt"))
-        .select("word", _T2.char_hash("word").alias("h"), "exact_cnt")
+        .select("word", _T.char_hash("word").alias("h"), "exact_cnt")
     )
     # r13 (guide §2.6 overlap independent jobs): the exact side depends
     # only on the source table, not on the stream state — materialize it
@@ -1244,18 +1226,20 @@ def stream_cms_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below hits the persisted relation.
     warm = _overlap_materialize(exact)
     try:
-        source = source_copy(f"cms:{sf_dir}", halves(feed, "doc_id", 8))
-        state_dir = drain(spark, lambda out, ckpt: cms_count_stream(
-            spark, source, feed.schema, out, ckpt, max_files_per_trigger=8
-        ))
-        state = read_merged(spark, state_dir)
+        # The stream consumes only `text` (+ doc_id for the forced
+        # split), written in PARALLEL (8 files per half — the HLL drain's
+        # lesson). n_buckets=4: CMS state is a CONSTANT-SIZE d x w
+        # counter grid (corpus-independent), so its bucket count follows
+        # the state size, not the corpus — 16 buckets just meant 16 tiny
+        # parquet files per micro-batch commit (r12 stage profile: the
+        # staged write's per-file creation cost dominated the merge job).
+        state = state_drain(
+            spark, docs.select("doc_id", "text"), "doc_id", cms_counters,
+            ["d", "bucket"], files=8, n_buckets=4,
+        )
     finally:
         warm.join()
-    if state is None:
-        return spark.createDataFrame(
-            [], "word string, exact_cnt bigint, cms_estimate bigint"
-        )
-    return cms_estimates(exact, state.select("d", "bucket", "c"))
+    return cms_estimates(exact, state)
 
 
 from .queries_sketch import HLL_PORTABLE_SQL
@@ -1266,15 +1250,14 @@ def stream_hll_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming HyperLogLog maintenance with a driver row (built r9,
     staged r10): lineitem streams in TWO forced micro-batches; each
     batch MAX-merges its sparse (bucket, rho) registers into the
-    standing state (streaming/worker.py::hll_register_stream through
+    standing state (hll_sparse_registers through merge_stream and
     the r9 merge_max_parquet dominance sink); the cardinality estimate
     reads out from the MERGED registers beside the exact distinct.
     Register max is idempotent and commutative, so the batch split
     cannot change a single register — the oracle is rel_hll_portable's
     one-pass twin, completing the mergeable-sketch streaming trio
     (DDSketch/CMS counts merge by +, HLL registers merge by max)."""
-    from ..streaming.worker import hll_register_stream
-    from .queries_sketch import hll_estimate_readout
+    from .queries_sketch import hll_estimate_readout, hll_sparse_registers
 
     li = load_table(spark, sf_dir, "lineitem")
     # r13: the exact-distinct side depends only on the source table —
@@ -1282,11 +1265,8 @@ def stream_hll_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # splits) and materialize it CONCURRENTLY with the drain, the same
     # §2.6 overlap as the CMS drain. The drain feed stays the RAW scan:
     # halves() repartitions each half itself.
-    from ..cache import persist_tracked
-    from ..sources import spread as _spread2
-
     ex = persist_tracked(
-        _spread2(li).agg(
+        spread(li).agg(
             F.count_distinct(F.col("l_orderkey")).alias("exact_distinct")
         )
     )
@@ -1296,22 +1276,14 @@ def stream_hll_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is free to follow file order — a coalesce(1) draft measured 5.9x
     # wall under 10x data, all of it the single-threaded source write
     try:
-        source = source_copy(f"hll:{sf_dir}", halves(li, "l_orderkey", 8))
-        state_dir = drain(spark, lambda out, ckpt: hll_register_stream(
-            spark, source, li.schema, out, ckpt, max_files_per_trigger=8
-        ))
-        state = read_merged(spark, state_dir)
+        state = state_drain(
+            spark, li, "l_orderkey",
+            lambda b: hll_sparse_registers(b, "l_orderkey"), ["bucket"],
+            files=8, merge=merge_max_parquet,
+        )
     finally:
         warm.join()
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "m int, hll_estimate double, exact_distinct bigint,"
-            " rel_error double",
-        )
-    return hll_estimate_readout(
-        spark, state.select("bucket", "rho"), ex
-    )
+    return hll_estimate_readout(spark, state, ex)
 
 
 from .queries_curation import _QUALITY_GATE_SQL
@@ -1321,8 +1293,8 @@ from .queries_curation import _QUALITY_GATE_SQL
 def stream_quality_gate_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming admission control with a driver row (built r9, staged
     r10): the unigram LM is fit ONCE on the static corpus (the pinned
-    model state — psi_current_stream's pattern applied to SCORING, not
-    monitoring); documents then stream in TWO forced micro-batches and
+    model state — stream_psi_drift_drain's pattern applied to SCORING,
+    not monitoring); documents then stream in TWO forced micro-batches and
     each batch's per-doc gate verdicts (length/repetition/LM fail flags
     + keep) upsert into the standing decision table. Per-doc decisions
     are independent and the LM is pinned, so the batch split cannot
@@ -1331,8 +1303,6 @@ def stream_quality_gate_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     end."""
     from ..streaming.worker import quality_gate_stream
     from .queries_curation import unigram_lm
-
-    from ..cache import persist_tracked
 
     docs = load_table(spark, sf_dir, "documents")
     # pin the model: persist + materialize the vocab-sized LM and its
@@ -1376,28 +1346,21 @@ def stream_zscore_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming OOD-moment maintenance with a driver row (built r9,
     staged r10): embeddings stream in TWO forced micro-batches; each
     batch additively merges its (dim, s1, s2, n) exact-DECIMAL moment
-    deltas into the standing state (streaming/worker.py::
-    zscore_moment_stream through the ledgered add sink); the top-k
+    deltas into the standing state (zscore_moment_deltas
+    through merge_stream and the ledgered add sink); the top-k
     diagonal-Mahalanobis readout runs from the MERGED state. Extends
     the additive-state streaming family from bucket counts (DDSketch /
     CMS) and max-registers (HLL) to real-valued sufficient statistics —
     sums of round-9 DECIMALs are exact, so the split cannot move a
     single moment and the oracle is sim_zscore_outliers' one-pass
     twin."""
-    from ..streaming.worker import zscore_moment_stream
-    from .queries_similarity import zscore_readout
+    from .queries_similarity import zscore_moment_deltas, zscore_readout
 
     emb = load_table(spark, sf_dir, "embeddings")
-    source = source_copy(f"zscore:{sf_dir}", halves(emb, "vec_id", 4))
-    state_dir = drain(spark, lambda out, ckpt: zscore_moment_stream(
-        spark, source, emb.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [], "vec_id long, md2 double, rk int"
-        )
-    return zscore_readout(emb, state.select("dim", "s1", "s2", "n"))
+    state = state_drain(
+        spark, emb, "vec_id", zscore_moment_deltas, ["dim"], files=4
+    )
+    return zscore_readout(emb, state)
 
 
 from .queries_sketch import _KMV_SET_OPS_SQL
@@ -1446,7 +1409,7 @@ def stream_reliability_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     session 3, staged r10): documents stream in TWO forced
     micro-batches; each batch's (bin, n, s_sum, y_sum) reliability
     statistics merge ADDITIVELY into the standing state
-    (streaming/worker.py::reliability_bins_stream through the
+    (reliability_bin_counts through the
     batch-id-ledgered add sink), and the diagram + ECE read out from
     the MERGED bins via the same pure readout the batch query uses.
     Decimal score sums and integer counts are commutative, so the
@@ -1455,22 +1418,11 @@ def stream_reliability_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     calibration-drift monitoring beside the quantile (DDSketch),
     frequency (CMS), cardinality (HLL), and order-statistic (KMV)
     maintenance families."""
-    from ..streaming.worker import reliability_bins_stream
-    from .queries_curation import reliability_readout
+    from .queries_curation import reliability_bin_counts, reliability_readout
 
     docs = load_table(spark, sf_dir, "documents")
-    source = source_copy(f"reliability:{sf_dir}", halves(docs, "doc_id"))
-    state_dir = drain(spark, lambda out, ckpt: reliability_bins_stream(
-        spark, source, docs.schema, out, ckpt, max_files_per_trigger=1
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "bin long, n long, mean_score double, frac_positive double,"
-            " ece double",
-        )
-    return reliability_readout(state.select("bin", "n", "s_sum", "y_sum"))
+    state = state_drain(spark, docs, "doc_id", reliability_bin_counts, ["bin"])
+    return reliability_readout(state)
 
 
 from .queries_stats import _BENFORD_SQL  # noqa: E402
@@ -1481,8 +1433,8 @@ def stream_benford_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Benford conformance monitoring with a driver row
     (built r10, staged r11): lineitem rows stream in TWO forced
     micro-batches; each batch additively merges its 9-key first-digit
-    count delta into the standing state (streaming/worker.py::
-    benford_digit_stream through the ledgered add sink); the chi-square
+    count delta into the standing state (benford_digit_counts
+    through the ledgered add sink); the chi-square
     conformance readout runs from the MERGED state through the SAME
     benford_readout as the batch test. Digit counts are the complete
     sufficient statistic and addition is commutative, so the batch
@@ -1492,24 +1444,13 @@ def stream_benford_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming family to a STATISTICAL TEST readout (counts ->
     chi-square), beside sketches (CMS/HLL/KMV/DDSketch), moments
     (zscore), and calibration bins (reliability)."""
-    from ..streaming.worker import benford_digit_stream
-    from .queries_stats import benford_readout
+    from .queries_stats import benford_digit_counts, benford_readout
 
     li = load_table(spark, sf_dir, "lineitem")
-    source = source_copy(f"benford:{sf_dir}", halves(li, "l_orderkey", 4))
-    state_dir = drain(spark, lambda out, ckpt: benford_digit_stream(
-        spark, source, li.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "digit bigint, observed bigint, benford_p double,"
-            " observed_p double, chi2 double, nonconforming boolean",
-        )
-    return benford_readout(
-        spark, state.select("d", F.col("c").alias("o"))
+    state = state_drain(
+        spark, li, "l_orderkey", benford_digit_counts, ["d"], files=4
     )
+    return benford_readout(spark, state)
 
 
 from .queries_text import _ZIPF_SQL  # noqa: E402
@@ -1520,7 +1461,7 @@ def stream_zipf_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Zipf corpus-health monitoring with a driver row (built
     r10, staged r11): documents stream in TWO forced micro-batches;
     each batch additively merges its (word, n) delta into the standing
-    vocabulary count table (streaming/worker.py::zipf_wordcount_stream
+    vocabulary count table (word_counts
     — the UNBOUNDED-key member of the additive family: state is
     vocab-sized, the sink's hash-bucketed MERGE rewrites only touched
     buckets); the rank-frequency OLS readout runs from the MERGED
@@ -1528,20 +1469,11 @@ def stream_zipf_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts are additive, so the split cannot move a rank or a
     sufficient statistic — the oracle is text_zipf_fit's whole-corpus
     SQL, hash-checking the live ingest-quality monitor end to end."""
-    from ..streaming.worker import zipf_wordcount_stream
-    from .queries_text import zipf_fit_readout
+    from .queries_text import word_counts, zipf_fit_readout
 
     docs = load_table(spark, sf_dir, "documents")
-    source = source_copy(f"zipf:{sf_dir}", halves(docs, "doc_id"))
-    state_dir = drain(spark, lambda out, ckpt: zipf_wordcount_stream(
-        spark, source, docs.schema, out, ckpt, max_files_per_trigger=1
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [], "n_words bigint, slope double, intercept double, r2 double"
-        )
-    return zipf_fit_readout(state.select("word", F.col("c").alias("n")))
+    state = state_drain(spark, docs, "doc_id", word_counts, ["word"])
+    return zipf_fit_readout(state)
 
 
 from .queries_text import _NOVELTY_SQL  # noqa: E402
@@ -1560,24 +1492,19 @@ def stream_novelty_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     novelty_readout as the batch query, and the oracle is
     text_ngram_novelty's whole-corpus SQL — ingestion-order semantics
     hash-checked end to end without any sequential scan."""
-    from ..streaming.worker import novelty_firsts_stream
-    from .queries_text import novelty_doc_grams, novelty_readout
+    from .queries_text import (
+        novelty_doc_grams,
+        novelty_firsts,
+        novelty_readout,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
-    source = source_copy(f"novelty:{sf_dir}", halves(docs, "doc_id"))
-    state_dir = drain(spark, lambda out, ckpt: novelty_firsts_stream(
-        spark, source, docs.schema, out, ckpt, max_files_per_trigger=1
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_grams bigint, n_distinct bigint,"
-            " n_novel bigint, novelty double",
-        )
-    return novelty_readout(
-        novelty_doc_grams(docs), state.select("g", "first_doc")
+    state = state_drain(
+        spark, docs, "doc_id",
+        lambda b: novelty_firsts(novelty_doc_grams(b)), ["g"],
+        merge=merge_min_parquet,
     )
+    return novelty_readout(novelty_doc_grams(docs), state)
 
 
 from .queries_governance import _MI_SQL  # noqa: E402
@@ -1588,7 +1515,7 @@ def stream_mutual_info_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dependence monitoring with a driver row (built r11,
     staged r12): events stream in TWO forced micro-batches; each batch
     additively merges its (xv, yv) contingency-cell delta into the
-    standing table (streaming/worker.py::mi_cell_stream through the
+    standing table (mi_pair_counts through the
     ledgered add sink); the MI / marginal-entropy / NMI readout runs
     from the MERGED state through the SAME mi_readout as the batch
     query. Cell counts are the complete sufficient statistic and
@@ -1597,23 +1524,13 @@ def stream_mutual_info_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL, hash-checking the live column-dependence monitor end to end
     (the physical-design companion to the Benford/Zipf quality
     drains)."""
-    from ..streaming.worker import mi_cell_stream
-    from .queries_governance import mi_readout
+    from .queries_governance import mi_pair_counts, mi_readout
 
     ev = load_table(spark, sf_dir, "events")
-    source = source_copy(f"mutual_info:{sf_dir}", halves(ev, "event_id", 4))
-    state_dir = drain(spark, lambda out, ckpt: mi_cell_stream(
-        spark, source, ev.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "n bigint, mi double, h_x double, h_y double, nmi double",
-        )
-    return mi_readout(
-        state.select("xv", "yv", F.col("c").alias("nxy"))
+    state = state_drain(
+        spark, ev, "event_id", mi_pair_counts, ["xv", "yv"], files=4
     )
+    return mi_readout(state)
 
 
 from .queries_events import _TRANS_ENTROPY_SQL  # noqa: E402
@@ -1632,33 +1549,20 @@ def stream_transition_entropy_drain(
     user's journey, so a user-disjoint split keeps the per-batch
     counts exact and ADDITIVE); each batch merges its (i, j) delta
     into the standing transition matrix
-    (streaming/worker.py::transition_count_stream); the
+    (transition_counts); the
     H(next|current) / predictability readout runs from MERGED state
     through the SAME transition_entropy_readout as the batch query,
     whose whole-corpus SQL is the oracle. The first drain whose
     split-invariance comes from KEY-DISJOINT batching rather than
     per-row independence — the partitioned-ingest contract (one
     producer owns a user's events) hash-checked end to end."""
-    from ..streaming.worker import transition_count_stream
-    from .queries_events import transition_entropy_readout
+    from .queries_events import transition_counts, transition_entropy_readout
 
     ev = load_table(spark, sf_dir, "events")
-    source = source_copy(
-        f"transition_entropy:{sf_dir}", halves(ev, "user_id", 4)
+    state = state_drain(
+        spark, ev, "user_id", transition_counts, ["i", "j"], files=4
     )
-    state_dir = drain(spark, lambda out, ckpt: transition_count_stream(
-        spark, source, ev.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "n_transitions bigint, n_states bigint, h_cond double,"
-            " h_marginal double, predictability double",
-        )
-    return transition_entropy_readout(
-        state.select("i", "j", F.col("c").alias("nij"))
-    )
+    return transition_entropy_readout(state)
 
 
 from .queries_curation import _GOOD_TURING_SQL  # noqa: E402
@@ -1672,32 +1576,19 @@ def stream_good_turing_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged r12): documents stream in TWO forced micro-batches; each
     batch additively merges its (word, n) delta into the standing
     vocabulary count table (the SAME
-    streaming/worker.py::zipf_wordcount_stream state the Zipf drain
+    word_counts state the Zipf drain
     maintains — one standing table, TWO registered readouts); the
     Good-Turing adjusted-count / smoothed-probability / unseen-mass
     table reads out from MERGED state through the SAME
     good_turing_readout as the batch query, whose whole-corpus SQL is
     the oracle. Proves the maintenance design's real dividend: a new
     monitor costs one readout function, zero new state."""
-    from ..streaming.worker import zipf_wordcount_stream
     from .queries_curation import good_turing_readout
+    from .queries_text import word_counts
 
-    docs = load_table(spark, sf_dir, "documents")
-    feed = docs.select("doc_id", "text")
-    source = source_copy(f"good_turing:{sf_dir}", halves(feed, "doc_id", 4))
-    state_dir = drain(spark, lambda out, ckpt: zipf_wordcount_stream(
-        spark, source, feed.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "r bigint, n_r bigint, n_r_plus_1 bigint, r_star double,"
-            " p_gt double, unseen_mass double",
-        )
-    return good_turing_readout(
-        state.select("word", F.col("c").alias("r"))
-    )
+    feed = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    state = state_drain(spark, feed, "doc_id", word_counts, ["word"], files=4)
+    return good_turing_readout(state.withColumnRenamed("n", "r"))
 
 
 from .queries_quality import _VOCAB_GINI_SQL  # noqa: E402
@@ -1709,7 +1600,7 @@ def stream_vocab_gini_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (built r12, staged r13): documents stream in TWO forced
     micro-batches; each batch additively merges its (word, n) delta
     into the standing vocabulary count table — the SAME
-    streaming/worker.py::zipf_wordcount_stream state the Zipf and
+    word_counts state the Zipf and
     Good-Turing drains maintain (one standing table, now THREE
     registered readouts); the Lorenz/Gini type-inequality readout
     runs from MERGED state through the SAME vocab_gini_readout as the
@@ -1718,23 +1609,12 @@ def stream_vocab_gini_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell — the live 'is a handful of types starting to carry the
     stream' monitor, at the cost of one readout function and zero
     new state. The 17th drain."""
-    from ..streaming.worker import zipf_wordcount_stream
     from .queries_quality import vocab_gini_readout
+    from .queries_text import word_counts
 
-    docs = load_table(spark, sf_dir, "documents")
-    feed = docs.select("doc_id", "text")
-    source = source_copy(f"vocab_gini:{sf_dir}", halves(feed, "doc_id", 4))
-    state_dir = drain(spark, lambda out, ckpt: zipf_wordcount_stream(
-        spark, source, feed.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "n_types bigint, total_tokens bigint, mean_freq double,"
-            " gini double",
-        )
-    return vocab_gini_readout(state.select(F.col("c")))
+    feed = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    state = state_drain(spark, feed, "doc_id", word_counts, ["word"], files=4)
+    return vocab_gini_readout(state.withColumnRenamed("n", "c"))
 
 
 from .queries_stats import _ANOVA_SQL  # noqa: E402
@@ -1746,36 +1626,20 @@ def stream_anova_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (built r11, staged r12): lineitem streams in TWO forced
     micro-batches; each batch additively merges its (grp, n, s, q)
     integer moment delta into the standing group-moment table
-    (streaming/worker.py::anova_moment_stream through the ledgered add
+    (anova_group_moments through the ledgered add
     sink); the F / eta² readout runs from MERGED state through the
     SAME anova_readout as the batch test, whose whole-corpus SQL is
     the oracle. Extends the additive-state family to a VARIANCE-
     DECOMPOSITION readout beside the chi-square (Benford), OLS (Zipf),
     and entropy (MI / transitions) monitors."""
-    from ..streaming.worker import anova_moment_stream
-    from .queries_stats import anova_readout
+    from .queries_stats import anova_group_moments, anova_readout
 
     li = load_table(spark, sf_dir, "lineitem")
     feed = li.select("l_orderkey", "l_returnflag", "l_quantity")
-    source = source_copy(f"anova:{sf_dir}", halves(feed, "l_orderkey", 4))
-    state_dir = drain(spark, lambda out, ckpt: anova_moment_stream(
-        spark, source, feed.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "k_groups bigint, n bigint, ssb double, ssw double,"
-            " f_stat double, eta_squared double",
-        )
-    return anova_readout(
-        state.select(
-            "grp",
-            F.col("n_g").alias("n_g"),
-            F.col("s_g").alias("s_g"),
-            F.col("q_g").alias("q_g"),
-        )
+    state = state_drain(
+        spark, feed, "l_orderkey", anova_group_moments, ["grp"], files=4
     )
+    return anova_readout(state)
 
 
 from .queries_text import _JSD_SQL  # noqa: E402
@@ -1786,29 +1650,21 @@ def stream_jsd_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming source-drift monitoring with a driver row (built r11,
     staged r12): documents stream in TWO forced micro-batches; each
     batch additively merges its (source, word) count delta into the
-    standing table (streaming/worker.py::jsd_count_stream — the
+    standing table (jsd_source_word_counts — the
     unbounded-key additive family, the Zipf drain's state widened by
     the source key); the per-source Jensen-Shannon readout runs from
     MERGED state through the SAME jsd_readout as the batch query,
     whose whole-corpus SQL is the oracle — live which-source-drifted
     triage, hash-checked end to end."""
-    from ..streaming.worker import jsd_count_stream
-    from .queries_text import jsd_readout
+    from .queries_text import jsd_readout, jsd_source_word_counts
 
     docs = load_table(spark, sf_dir, "documents")
     feed = docs.select("doc_id", "source", "text")
-    source = source_copy(f"jsd:{sf_dir}", halves(feed, "doc_id", 4))
-    state_dir = drain(spark, lambda out, ckpt: jsd_count_stream(
-        spark, source, feed.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [], "source string, n_tokens bigint, jsd double"
-        )
-    return jsd_readout(
-        state.select("source", "word", F.col("c").alias("a"))
+    state = state_drain(
+        spark, feed, "doc_id", jsd_source_word_counts, ["source", "word"],
+        files=4,
     )
+    return jsd_readout(state)
 
 
 from .queries_governance import _CHI2_INDEP_SQL  # noqa: E402
@@ -1819,7 +1675,7 @@ def stream_chi2_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming independence-significance monitoring with a driver row
     (built r12, staged r13): a SECOND readout of the SAME standing
     (xv, yv) contingency state the mutual-information drain maintains
-    (streaming/worker.py::mi_cell_stream through the ledgered add
+    (mi_pair_counts through the ledgered add
     sink) — the Zipf/Good-Turing precedent's dividend on the
     dependence family: the chi²/dof/Cramér's-V significance monitor
     costs ONE readout function (queries_governance.py::chi2_readout,
@@ -1828,24 +1684,13 @@ def stream_chi2_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the complete sufficient statistic and addition is commutative, so
     the batch split cannot move the statistic; the oracle is
     rel_chi2_independence's whole-corpus SQL."""
-    from ..streaming.worker import mi_cell_stream
-    from .queries_governance import chi2_readout
+    from .queries_governance import chi2_readout, mi_pair_counts
 
     ev = load_table(spark, sf_dir, "events")
-    source = source_copy(f"chi2:{sf_dir}", halves(ev, "event_id", 4))
-    state_dir = drain(spark, lambda out, ckpt: mi_cell_stream(
-        spark, source, ev.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "n bigint, n_rows_cat bigint, n_cols_cat bigint, dof bigint,"
-            " chi2 double, cramers_v double",
-        )
-    return chi2_readout(
-        state.select("xv", "yv", F.col("c").alias("nxy"))
+    state = state_drain(
+        spark, ev, "event_id", mi_pair_counts, ["xv", "yv"], files=4
     )
+    return chi2_readout(state)
 
 
 from .queries_timeseries import _THEIL_SEN_SQL  # noqa: E402
@@ -1856,30 +1701,18 @@ def stream_theil_sen_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming robust-trend monitoring with a driver row (built r12,
     staged r13): events stream in TWO forced micro-batches; each batch
     ADD-merges its (epoch-day, cents) delta into the standing daily
-    table (streaming/worker.py::daily_cents_stream — the
+    table (daily_cents — the
     CALENDAR-BOUNDED additive state: ~30 rows regardless of volume);
     the Theil-Sen median-slope readout runs from MERGED state through
     the SAME theil_sen_readout as the batch query, whose whole-corpus
     SQL is the oracle. Day sums are additive, so the batch split
     cannot move a single pairwise slope — the live trend monitor
     hash-checked end to end (the forecasting family's first drain)."""
-    from ..streaming.worker import daily_cents_stream
-    from .queries_timeseries import theil_sen_readout
+    from .queries_timeseries import daily_cents, theil_sen_readout
 
     ev = load_table(spark, sf_dir, "events")
-    source = source_copy(f"theil_sen:{sf_dir}", halves(ev, "event_id", 4))
-    state_dir = drain(spark, lambda out, ckpt: daily_cents_stream(
-        spark, source, ev.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "n_days bigint, n_pairs bigint, slope_per_day decimal(24,12)",
-        )
-    return theil_sen_readout(
-        state.select("d", F.col("c").alias("yc"))
-    )
+    state = state_drain(spark, ev, "event_id", daily_cents, ["d"], files=4)
+    return theil_sen_readout(state)
 
 
 from .queries_extras import _UTF8_CORPUS_SQL  # noqa: E402
@@ -1891,32 +1724,20 @@ def stream_utf8_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     r12, staged r13): documents stream in TWO forced micro-batches;
     each batch runs the UTF-8 DFA audit and ADD-merges its 11-key
     (metric, c) delta into the standing class-count table
-    (streaming/worker.py::utf8_metric_stream) — the FIXED-KEY extreme
+    (utf8_metric_counts) — the FIXED-KEY extreme
     of the additive family (11 rows of state at any volume, vs the
     Zipf drain's unbounded vocab and the Theil-Sen drain's calendar).
     The corpus rollup reads out from MERGED state through the SAME
     utf8_corpus_readout as multimodal_utf8_corpus, whose whole-corpus
     SQL is the oracle — the live mojibake monitor hash-checked end to
     end."""
-    from ..operators.multimodal import utf8_corpus_readout
-    from ..streaming.worker import utf8_metric_stream
+    from ..operators.multimodal import utf8_corpus_readout, utf8_metric_counts
 
-    docs = load_table(spark, sf_dir, "documents")
-    feed = docs.select("doc_id")
-    source = source_copy(f"utf8:{sf_dir}", halves(feed, "doc_id", 4))
-    state_dir = drain(spark, lambda out, ckpt: utf8_metric_stream(
-        spark, source, feed.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "n_docs bigint, n_bytes bigint, cp_ascii bigint, cp_2b bigint,"
-            " cp_3b bigint, cp_4b bigint, err_overlong bigint,"
-            " err_surrogate bigint, err_range bigint,"
-            " err_continuation bigint, err_truncated bigint",
-        )
-    return utf8_corpus_readout(state.select("metric", "c"))
+    feed = load_table(spark, sf_dir, "documents").select("doc_id")
+    state = state_drain(
+        spark, feed, "doc_id", utf8_metric_counts, ["metric"], files=4
+    )
+    return utf8_corpus_readout(state)
 
 
 from .queries_curation import _ROC_AUC_SQL  # noqa: E402
@@ -1928,7 +1749,7 @@ def stream_auc_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     r12, staged r13): documents stream in TWO forced micro-batches;
     each batch scores the calibration signal and ADD-merges its
     (s, pos, neg) value-grid delta into the standing table
-    (streaming/worker.py::score_grid_stream — state bounded by
+    (_score_label_grid — state bounded by
     distinct round-6 scores, BOTH count columns additive); ROC AUC and
     Gini read out from MERGED state through the SAME auc_readout as
     curation_roc_auc, whose whole-corpus SQL is the oracle. Grid
@@ -1937,23 +1758,14 @@ def stream_auc_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     reliability drain's calibration monitor (is the score still
     ORDERING English above the rest as the corpus drifts?),
     hash-checked end to end. The 16th drain."""
-    from ..streaming.worker import score_grid_stream
-    from .queries_curation import auc_readout
+    from .queries_curation import _score_label_grid, auc_readout
 
     docs = load_table(spark, sf_dir, "documents")
     feed = docs.select("doc_id", "text", "lang")
-    source = source_copy(f"auc:{sf_dir}", halves(feed, "doc_id", 4))
-    state_dir = drain(spark, lambda out, ckpt: score_grid_stream(
-        spark, source, feed.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "n_pos bigint, n_neg bigint, u_x2 bigint,"
-            " auc double, gini double",
-        )
-    return auc_readout(state.select("s", "pos", "neg"))
+    state = state_drain(
+        spark, feed, "doc_id", _score_label_grid, ["s"], files=4
+    )
+    return auc_readout(state)
 
 
 from .queries_stats import _KW_SQL  # noqa: E402
@@ -1964,7 +1776,7 @@ def stream_kruskal_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming rank-test monitoring with a driver row (built r12,
     staged r13): lineitem streams in TWO forced micro-batches; each
     batch ADD-merges its (grp, x) value-grid count delta into the
-    standing table (streaming/worker.py::kw_gcnt_stream — state
+    standing table (kw_value_grid — state
     bounded by groups x the 50-value quantity grid); the tie-corrected
     Kruskal-Wallis H / epsilon² read out from MERGED state through the
     SAME kw_readout as the batch query, whose whole-corpus SQL is the
@@ -1974,21 +1786,14 @@ def stream_kruskal_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole rank structure), hash-checked end to end. The 15th drain;
     rel_kruskal_wallis re-proves as the readout-refactor consumer via
     its own introduction slot."""
-    from ..streaming.worker import kw_gcnt_stream
-    from .queries_stats import kw_readout
+    from .queries_stats import kw_readout, kw_value_grid
 
     li = load_table(spark, sf_dir, "lineitem")
     feed = li.select("l_orderkey", "l_returnflag", "l_quantity")
-    source = source_copy(f"kruskal:{sf_dir}", halves(feed, "l_orderkey", 4))
-    state_dir = drain(spark, lambda out, ckpt: kw_gcnt_stream(
-        spark, source, feed.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [], "n bigint, k_groups bigint, h double, eps_sq double"
-        )
-    return kw_readout(state.select("grp", "x", "c"))
+    state = state_drain(
+        spark, feed, "l_orderkey", kw_value_grid, ["grp", "x"], files=4
+    )
+    return kw_readout(state)
 
 
 from ..functions import text as _T_llr  # noqa: E402
@@ -2004,7 +1809,7 @@ def stream_llr_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (built r12, staged r13): documents stream in TWO forced
     micro-batches; each batch ADD-merges its per-(w1, w2)
     adjacent-pair count delta into the standing bigram table
-    (streaming/worker.py::bigram_count_stream — the second
+    (bigram_counts — the second
     unbounded-key additive state beside the vocab table); Dunning G²
     + signed association read out from MERGED state through the SAME
     llr_readout as the batch query, whose whole-corpus SQL is the
@@ -2013,23 +1818,13 @@ def stream_llr_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream' monitor phrase-induction pipelines poll. The 18th drain;
     text_dunning_llr re-proves as the readout-refactor consumer via
     its own introduction slot."""
-    from ..streaming.worker import bigram_count_stream
-    from .queries_corpus import llr_readout
+    from .queries_corpus import bigram_counts, llr_readout
 
-    docs = load_table(spark, sf_dir, "documents")
-    feed = docs.select("doc_id", "text")
-    source = source_copy(f"llr:{sf_dir}", halves(feed, "doc_id", 4))
-    state_dir = drain(spark, lambda out, ckpt: bigram_count_stream(
-        spark, source, feed.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "w1 string, w2 string, c_ab bigint, assoc bigint,"
-            " llr decimal(28,9)",
-        )
-    return llr_readout(state.select("w1", "w2", "k11"))
+    feed = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    state = state_drain(
+        spark, feed, "doc_id", bigram_counts, ["w1", "w2"], files=4
+    )
+    return llr_readout(state)
 
 
 from .queries_curation import _ISOTONIC_SQL  # noqa: E402
@@ -2041,7 +1836,7 @@ def stream_isotonic_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (built r12, staged r13): documents stream in TWO forced
     micro-batches; each batch ADD-merges its (s, pos, neg) score-grid
     delta into the standing table — the SAME
-    streaming/worker.py::score_grid_stream state the AUC drain
+    _score_label_grid state the AUC drain
     maintains (one standing table, now TWO registered readouts); the
     minimax-PAV isotonic fit reads out from MERGED state through the
     SAME isotonic_readout as the batch query, whose whole-corpus SQL
@@ -2051,20 +1846,13 @@ def stream_isotonic_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     one readout function and zero new state. The 19th drain;
     curation_isotonic_calibration re-proves as the readout-refactor
     consumer via its own introduction slot."""
-    from ..streaming.worker import score_grid_stream
-    from .queries_curation import isotonic_readout
+    from .queries_curation import _score_label_grid, isotonic_readout
 
     docs = load_table(spark, sf_dir, "documents")
     feed = docs.select("doc_id", "text", "lang")
-    source = source_copy(f"isotonic:{sf_dir}", halves(feed, "doc_id", 4))
-    state_dir = drain(spark, lambda out, ckpt: score_grid_stream(
-        spark, source, feed.schema, out, ckpt, max_files_per_trigger=4
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "s decimal(18,6), n bigint, raw_rate decimal(12,9),"
-            " fitted decimal(12,9)",
-        )
-    return isotonic_readout(state.select("s", "pos", "neg"))
+    state = state_drain(
+        spark, feed, "doc_id", _score_label_grid, ["s"], files=4
+    )
+    return isotonic_readout(state)
+
+

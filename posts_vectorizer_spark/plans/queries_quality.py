@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 from ..functions import text as T
 from ..operators import tfidf
 from ..sources import load_table
+from .queries_text import word_counts
 from .registry import register
 
 
@@ -1118,9 +1119,4 @@ def text_vocab_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     count-of-counts grid bounded by |distinct frequencies|, a
     cumulative window on that tiny grid only, 1-row output."""
     docs = load_table(spark, sf_dir, "documents")
-    vc = (
-        docs.select(F.explode(T.tokens("text")).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("c"))
-    )
-    return vocab_gini_readout(vc)
+    return vocab_gini_readout(word_counts(docs).withColumnRenamed("n", "c"))

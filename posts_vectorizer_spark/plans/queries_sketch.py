@@ -113,7 +113,9 @@ def hll_estimate_readout(
 ) -> DataFrame:
     """Dense-registers → raw estimate → error vs the exact count — a
     pure function of sparse (bucket, rho) state, identical over a
-    one-pass sketch or merged streaming state."""
+    one-pass sketch or merged streaming state. Over empty input every
+    register is 0 and ``rel_error`` is NULL (no distinct values to be
+    relative to), as the oracle's division by a zero count gives."""
     buckets = spark.range(_HLL_M).select(F.col("id").alias("bucket"))
     regs = (
         buckets.join(sparse, "bucket", "left")
@@ -134,10 +136,13 @@ def hll_estimate_readout(
             F.lit(_HLL_M).cast("int").alias("m"),
             "hll_estimate",
             "exact_distinct",
-            F.round(
-                F.abs(F.col("hll_estimate") - F.col("exact_distinct"))
-                / F.col("exact_distinct"),
-                6,
+            F.when(
+                F.col("exact_distinct") != 0,
+                F.round(
+                    F.abs(F.col("hll_estimate") - F.col("exact_distinct"))
+                    / F.col("exact_distinct"),
+                    6,
+                ),
             )
             .cast("double")
             .alias("rel_error"),
@@ -235,6 +240,21 @@ def cms_delta_counts(hashed_counts: DataFrame) -> DataFrame:
         .groupBy("d", "bucket")
         .agg(F.sum("n").cast("bigint").alias("c"))
     )
+
+
+def cms_counters(docs: DataFrame) -> DataFrame:
+    """(d, bucket, c) counter grid of ``docs.text``'s tokens, counting
+    per word first and hashing each DISTINCT word once (cms_delta_counts)
+    — the streaming drain's per-batch delta. Counter addition is
+    commutative, the CMS merge property, so any batch split yields the
+    one-pass sketch."""
+    counts = (
+        docs.select(F.explode(T.tokens("text")).alias("word"))
+        .groupBy("word")
+        .agg(F.count("*").alias("n"))
+        .select(T.char_hash("word").alias("h"), "n")
+    )
+    return cms_delta_counts(counts)
 
 
 def cms_estimates(exact: DataFrame, cms: DataFrame) -> DataFrame:
@@ -696,13 +716,20 @@ def rel_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # than the one-core string bucket-keying it parallelizes, because the
     # groupBy's map-side partial aggregation already collapses the stream
     # to ~400 bucket cells. Left as a single-split map stage on purpose.
-    pop = load_table(spark, sf_dir, "lineitem").select(
+    sketch = ddsketch_counts(load_table(spark, sf_dir, "lineitem"))
+    return ddsketch_readout(spark, sketch)
+
+
+def ddsketch_counts(li: DataFrame) -> DataFrame:
+    """(d, f2, cnt) sketch of l_extendedprice cents — the per-bucket
+    count vector. Counts add, so per-partition, per-day or per-batch
+    sketches merge by + (the streaming drain's exactly-once delta)."""
+    pop = li.select(
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents")
     )
-    sketch = ddsketch_buckets(pop).groupBy("d", "f2").agg(
+    return ddsketch_buckets(pop).groupBy("d", "f2").agg(
         F.count("*").alias("cnt")
     )
-    return ddsketch_readout(spark, sketch)
 
 
 def ddsketch_buckets(cents_df: DataFrame) -> DataFrame:

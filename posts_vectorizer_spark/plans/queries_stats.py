@@ -998,6 +998,29 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return psi_readout(counts)
 
 
+def psi_bucket_counts(
+    vals: DataFrame, mn: int, mx: int, name: str
+) -> DataFrame:
+    """(bucket, ``name``) counts of the micro-unit column ``v`` over
+    _PSI_BUCKETS equal-width buckets on PINNED reference bounds
+    ``mn``/``mx`` (out-of-range values clamp to the edge buckets). With
+    the bounds frozen, the counts are a pure additive delta: the
+    streaming drain merges its current-side counts batch by batch and
+    reads the reference side off the static window."""
+    bucket = F.least(
+        F.lit(_PSI_BUCKETS - 1),
+        F.greatest(
+            F.lit(0),
+            F.expr(f"((v - {mn}) * {_PSI_BUCKETS}) div ({mx} - {mn} + 1)"),
+        ),
+    )
+    return (
+        vals.select(bucket.alias("bucket"))
+        .groupBy("bucket")
+        .agg(F.count("*").cast("bigint").alias(name))
+    )
+
+
 def psi_readout(counts: DataFrame) -> DataFrame:
     """PSI terms + total from a per-bucket (bucket, n_ref, n_cur) counts
     relation — a pure function of the counts, shared by the single-pass
@@ -1210,17 +1233,16 @@ def stream_psi_drift_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape, where training-time bounds are frozen and serving traffic
     streams — then the CURRENT half streams in TWO forced micro-batches
     (two source files, maxFilesPerTrigger=1), each additively merging
-    its per-bucket count delta into the standing state
-    (streaming/worker.py::psi_current_stream, exactly-once via the merge
+    its per-bucket count delta (psi_bucket_counts) into the standing
+    state (streaming/worker.py::merge_stream, exactly-once via the merge
     sink's batch-id ledger). The final PSI reads out from (static ref
     counts, streamed cur counts) through the SAME psi_readout as the
     batch form; count addition is commutative, so the batch split cannot
     change the result — the oracle is events_psi_drift's whole-corpus
     SQL, making the drift monitor's merge property driver-hash-checked
-    end to end."""
-    from ..sources.sinks import read_merged
-    from ..streaming.drain import drain, source_copy
-    from ..streaming.worker import psi_current_stream
+    end to end. At 100 TB the per-batch cost is one map-side-combinable
+    10-key groupBy plus O(touched buckets) of a 10-row state table."""
+    from ..streaming.drain import state_drain
 
     e = load_table(spark, sf_dir, "events")
     base = e.select(
@@ -1230,47 +1252,22 @@ def stream_psi_drift_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref = base.where("is_ref")
     stats = ref.agg(F.min("v").alias("mn"), F.max("v").alias("mx")).first()
     if stats["mn"] is None:
-        # empty reference window: bucket bounds undefined — same
-        # zero-row outcome as the batch form's empty-reference case
-        return spark.createDataFrame(
-            [],
-            "bucket bigint, n_ref bigint, n_cur bigint, share_ref double,"
-            " share_cur double, psi_term double, psi_total double,"
-            " drifted boolean",
-        )
+        # empty reference window: bucket bounds undefined — zero rows (any
+        # bounds give an empty reference side, and the readout keeps none)
+        ref_counts = psi_bucket_counts(ref, 0, 0, "n_ref")
+        return psi_readout(ref_counts.withColumn("n_cur", F.col("n_ref")))
     mn, mx = int(stats["mn"]), int(stats["mx"])
 
-    cur = base.where(~F.col("is_ref")).select("v")
-
-    def write_halves(path: str) -> None:
-        for h in (0, 1):
-            cur.where(F.pmod("v", F.lit(2)) == h).coalesce(1).write.mode(
-                "append"
-            ).parquet(path)
-
-    source = source_copy(f"psi_drift:{sf_dir}", write_halves)
-    state_dir = drain(spark, lambda out, ckpt: psi_current_stream(
-        spark, source, cur.schema, out, ckpt,
-        mn, mx, _PSI_BUCKETS, max_files_per_trigger=1,
-    ))
-
-    bucket = F.least(
-        F.lit(_PSI_BUCKETS - 1),
-        F.greatest(
-            F.lit(0),
-            F.expr(f"((v - {mn}) * {_PSI_BUCKETS}) div ({mx} - {mn} + 1)"),
-        ),
+    cur = state_drain(
+        spark,
+        base.where(~F.col("is_ref")).select("v"),
+        "v",
+        lambda b: psi_bucket_counts(b, mn, mx, "n_cur"),
+        ["bucket"],
     )
-    ref_counts = (
-        ref.select(bucket.alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count("*").cast("bigint").alias("n_ref"))
-    )
-    state = read_merged(spark, state_dir)
-    if state is None:  # current half empty: zero-count cur side
-        state = spark.createDataFrame([], "bucket bigint, n_cur bigint")
     counts = (
-        ref_counts.join(state.select("bucket", "n_cur"), "bucket", "full_outer")
+        psi_bucket_counts(ref, mn, mx, "n_ref")
+        .join(cur, "bucket", "full_outer")
         .select(
             "bucket",
             F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
@@ -3188,15 +3185,22 @@ def rel_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one value-grid count (bounded by distinct values),
     one (grp, x)-keyed map-side-combinable count, a <=50-row window,
     and 1-row broadcasts — nothing row-scaled past the first reduce."""
-    li = load_table(spark, sf_dir, "lineitem")
+    return kw_readout(kw_value_grid(load_table(spark, sf_dir, "lineitem")))
+
+
+def kw_value_grid(li: DataFrame) -> DataFrame:
+    """(grp, x, c) value-grid counts of l_quantity by l_returnflag — the
+    ADDITIVE sufficient statistic of kw_readout, bounded by groups x
+    distinct values (the quantity grid is 50 values, so ~200 rows at
+    any volume); also the streaming Kruskal-Wallis drain's per-batch
+    delta."""
     vals = li.select(
         F.col("l_returnflag").alias("grp"),
         F.col("l_quantity").cast("bigint").alias("x"),
     )
-    gcnt = vals.groupBy("grp", "x").agg(
+    return vals.groupBy("grp", "x").agg(
         F.count("*").cast("bigint").alias("c")
     )
-    return kw_readout(gcnt)
 
 
 def kw_readout(gcnt: DataFrame) -> DataFrame:

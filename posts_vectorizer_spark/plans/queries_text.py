@@ -570,12 +570,20 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_ZIPF_TOPN}-row head coalesced to one partition. The OLS reduce is
     a 1-row aggregate. Nothing corpus-sized ever sorts globally."""
     docs = load_table(spark, sf_dir, "documents")
-    wc = (
+    return zipf_fit_readout(word_counts(docs))
+
+
+def word_counts(docs: DataFrame) -> DataFrame:
+    """(word, n) corpus word counts — the ADDITIVE sufficient statistic
+    behind the Zipf, Good-Turing and vocabulary-Gini readouts, and the
+    per-batch delta of their streaming drains (the UNBOUNDED-key member
+    of the additive-state family: state is vocab-sized, and the sink's
+    hash-bucketed MERGE rewrites only touched buckets)."""
+    return (
         docs.select(F.explode(textstats.T.tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
-    return zipf_fit_readout(wc)
 
 
 def zipf_fit_readout(wc: DataFrame) -> DataFrame:
@@ -863,8 +871,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingestion order."""
     docs = load_table(spark, sf_dir, "documents")
     per_doc = novelty_doc_grams(docs)
-    firsts = per_doc.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
-    return novelty_readout(per_doc, firsts)
+    return novelty_readout(per_doc, novelty_firsts(per_doc))
 
 
 def novelty_doc_grams(docs: DataFrame) -> DataFrame:
@@ -874,6 +881,13 @@ def novelty_doc_grams(docs: DataFrame) -> DataFrame:
         "doc_id", F.md5("ngram").alias("g")
     )
     return grams.groupBy("doc_id", "g").agg(F.count("*").alias("k"))
+
+
+def novelty_firsts(per_doc: DataFrame) -> DataFrame:
+    """(g, first_doc) first occurrence per gram from (doc_id, g, k) —
+    MIN-mergeable (min is commutative and idempotent), so the streaming
+    drain's per-batch firsts MIN-merge into exactly the one-pass table."""
+    return per_doc.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
 
 
 def novelty_readout(per_doc: DataFrame, firsts: DataFrame) -> DataFrame:

@@ -2783,8 +2783,16 @@ def events_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-year horizon the pair set grows quadratically in DAYS only;
     the documented mitigation is the standard windowed Theil-Sen
     (pair d with d+1..d+W)."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
+    daily = daily_cents(load_table(spark, sf_dir, "events"))
+    return theil_sen_readout(daily)
+
+
+def daily_cents(ev: DataFrame) -> DataFrame:
+    """(d, yc) exact daily value totals in cents, d = epoch day — the
+    CALENDAR-bounded additive statistic (~30 rows however much data
+    flows) behind the Theil-Sen, changepoint and runs readouts, and the
+    streaming Theil-Sen drain's per-batch delta."""
+    return ev.groupBy(
         F.datediff(
             F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
         ).alias("d")
@@ -2793,7 +2801,6 @@ def events_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("yc")
     )
-    return theil_sen_readout(daily)
 
 
 def theil_sen_readout(daily: DataFrame) -> DataFrame:
@@ -2926,16 +2933,7 @@ def events_binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one day-keyed map-side-combinable reduce is the only
     data-sized work; prefix sums, gains, and the argmax run on the
     ~30-row calendar grid at any data scale."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.datediff(
-            F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-        ).alias("d")
-    ).agg(
-        (F.sum(F.col("value").cast("decimal(18,2)")) * 100)
-        .cast("bigint")
-        .alias("yc")
-    )
+    daily = daily_cents(load_table(spark, sf_dir, "events"))
     w = Window.orderBy("d")
     ordd = daily.select(
         "d", "yc",
@@ -3057,16 +3055,7 @@ def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one day-keyed map-side-combinable reduce; lag/runs
     windows run on the ~30-row calendar grid at any data scale."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.datediff(
-            F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-        ).alias("d")
-    ).agg(
-        (F.sum(F.col("value").cast("decimal(18,2)")) * 100)
-        .cast("bigint")
-        .alias("yc")
-    )
+    daily = daily_cents(load_table(spark, sf_dir, "events"))
     w = Window.orderBy("d")
     diffs = daily.select(
         "d", (F.col("yc") - F.lag("yc").over(w)).alias("dy")

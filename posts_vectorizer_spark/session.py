@@ -89,9 +89,19 @@ def prep_session(spark: SparkSession) -> SparkSession:
     The correctness driver hands us its own SparkSession; these are the only
     settings our queries depend on that can be flipped at runtime. Everything
     else in the engine is written to be ANSI-safe (guarded divisions, no
-    failing casts) so it runs identically under ANSI on or off.
+    failing casts) so it runs identically under ANSI on or off. The keys:
+
+    - ``spark.sql.session.timeZone`` = UTC;
+    - ``spark.sql.optimizer.excludedRules`` gains InferFiltersFromGenerate;
+    - ``spark.sql.python.filterPushdown.enabled`` = true: the Python data
+      source (sources/pydatasource.py) implements ``pushFilters``, and a
+      reader that does requires it on (the vanilla session has it off). It
+      must hold when the lazy plan is OPTIMIZED, after the query builder
+      has returned, so a builder cannot set and restore it around its own
+      body.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     # See get_spark: stops redundant inferred explode filters from
     # re-evaluating expensive computed arrays below exchanges. Purely an
     # optimizer exclusion — results are unchanged by construction. MERGED

@@ -36,7 +36,11 @@ from pyspark.sql.window import Window
 
 from ..cache import persist_tracked
 from ..operators import tfidf
-from ..sources.sinks import merge_upsert_parquet
+from ..sources.sinks import (
+    DEFAULT_BUCKETS,
+    merge_add_parquet,
+    merge_upsert_parquet,
+)
 
 
 from contextlib import contextmanager
@@ -668,7 +672,6 @@ def idf_count_stream(
     O(touched buckets) of the word-count table; the IDF read side derives
     log10(n_docs/occurrences) from the two states at query time."""
     from ..functions import text as T
-    from ..sources.sinks import merge_add_parquet
 
     stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
@@ -693,178 +696,42 @@ def idf_count_stream(
     return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
-def ddsketch_count_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Incremental quantile-sketch maintenance: each micro-batch of
-    lineitem rows merges its (d, f2) bucket-count delta ADDITIVELY into
-    the standing sketch state table (sinks.merge_add_parquet) — the
-    DDSketch merge property (counts add) exercised in the real streaming
-    path, with the sink's batch-id ledger making the addition
-    exactly-once. The quantile READOUT stays a pure function of the
-    state (plans/queries_sketch.py::ddsketch_readout), so any reader
-    gets monotone-fresher quantiles without ever rescanning history.
-
-    At 100 TB: per-batch cost is one map-side-combinable groupBy over
-    the batch plus O(touched buckets) of a few-hundred-row state table —
-    quantiles over an unbounded stream for the price of the batch."""
-    from ..plans.queries_sketch import ddsketch_buckets
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        cents = batch_df.select(
-            F.round(F.col("l_extendedprice") * 100)
-            .cast("bigint")
-            .alias("cents")
-        )
-        delta = (
-            ddsketch_buckets(cents)
-            .groupBy("d", "f2")
-            .agg(F.count("*").cast("bigint").alias("cnt"))
-        )
-        merge_add_parquet(
-            spark, delta, sketch_dir, ["d", "f2"], batch_id=batch_id
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def psi_current_stream(
+def merge_stream(
     spark: SparkSession,
     source_dir: str,
     schema,
     state_dir: str,
     checkpoint_dir: str,
-    mn: int,
-    mx: int,
-    n_buckets: int,
+    delta,
+    keys: list[str],
+    merge=merge_add_parquet,
+    n_buckets: int = DEFAULT_BUCKETS,
     max_files_per_trigger: int | None = None,
 ):
-    """Incremental PSI drift maintenance, current-window side: the
-    reference-window stats (``mn``/``mx`` integer micro-units) are
-    PINNED at stream start — exactly how production drift monitors work
-    (training-time bucket bounds are frozen; serving traffic streams) —
-    so each micro-batch's bucket counts are a pure additive delta merged
-    exactly-once into the standing per-bucket state
-    (sinks.merge_add_parquet batch-id ledger). The PSI READOUT stays a
-    pure function of (ref counts, streamed cur counts)
-    (plans/queries_stats.py::psi_readout), so any reader gets a
-    monotone-fresher drift statistic without rescanning history.
+    """Incremental combining-state maintenance: each micro-batch's
+    ``delta(batch)`` — pre-aggregated, unique per ``keys`` — combines
+    into the standing bucketed state at ``state_dir`` through ``merge``:
+    ``merge_add_parquet`` for counts and exact moments,
+    ``merge_max_parquet`` / ``merge_min_parquet`` for dominance state
+    (HLL registers, first occurrences). It is the idf_count_stream
+    pattern with one state table: the reference's full-corpus recount
+    (calculate_idf_scores.py:52-66) as O(batch) maintenance. The
+    foreachBatch batch_id rides into the sink's ledger, so a replayed
+    batch cannot apply twice; the combiners are commutative, so any
+    batch split yields the one-pass state, and a statistic reads out
+    from the state as a pure function without rescanning history.
 
-    At 100 TB: per-batch cost is one map-side-combinable {n_buckets}-key
-    groupBy over the batch plus O(touched buckets) of a 10-row state
-    table — continuous drift monitoring for the price of the batch."""
-    from ..sources.sinks import merge_add_parquet
-
+    At 100 TB: per-batch cost is the batch's own delta (one
+    map-side-combinable aggregate) plus O(touched buckets) of the state
+    table. ``n_buckets`` sizes that table on its first write: a
+    constant-size state (a sketch grid, a register file) wants few
+    buckets, since every bucket is one file per micro-batch commit."""
     stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
-    def process_batch(batch_df, batch_id: int) -> None:
-        bucket = F.least(
-            F.lit(n_buckets - 1),
-            F.greatest(
-                F.lit(0),
-                F.expr(f"((v - {mn}) * {n_buckets}) div ({mx} - {mn} + 1)"),
-            ),
-        )
-        delta = (
-            batch_df.select(bucket.alias("bucket"))
-            .groupBy("bucket")
-            .agg(F.count("*").cast("bigint").alias("n_cur"))
-        )
-        merge_add_parquet(
-            spark, delta, state_dir, ["bucket"], batch_id=batch_id
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def cms_count_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Incremental count-min-sketch maintenance: each micro-batch of
-    documents tokenizes, hashes, and merges its (d, bucket) counter
-    delta ADDITIVELY into the standing sketch state
-    (sinks.merge_add_parquet, exactly-once via the batch-id ledger).
-    Counter addition is commutative — the CMS merge property — so any
-    batch split yields the same sketch as one pass, and per-word
-    frequency estimates read out from the state as a pure function
-    (plans/queries_sketch.py::cms_estimates).
-
-    At 100 TB: per-batch cost is one map-side-combinable groupBy into
-    d*w cells plus O(touched cells) of a constant-size state table —
-    stream-wide token frequencies for the price of the batch."""
-    from ..functions import text as T
-    from ..plans.queries_sketch import cms_delta_counts
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        # r12: count per word first, hash each DISTINCT word once —
-        # bit-identical (d, bucket) counter deltas (cms_delta_counts),
-        # ~1/10th the per-char hash folds on a Zipfian batch.
-        counts = (
-            batch_df.select(F.explode(T.tokens("text")).alias("word"))
-            .groupBy("word")
-            .agg(F.count("*").alias("n"))
-            .select(T.char_hash("word").alias("h"), "n")
-        )
-        delta = cms_delta_counts(counts)
-        # n_buckets=4: CMS state is a CONSTANT-SIZE d x w counter grid
-        # (corpus-independent), so its bucket count follows the state
-        # size, not the corpus — 16 buckets just meant 16 tiny parquet
-        # files per micro-batch commit (r12 stage profile: the staged
-        # write's per-file creation cost dominated the merge job).
-        merge_add_parquet(
-            spark, delta, sketch_dir, ["d", "bucket"],
-            n_buckets=4, batch_id=batch_id,
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def hll_register_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Incremental HyperLogLog maintenance: each micro-batch of lineitem
-    rows computes its sparse (bucket, rho) registers and MAX-merges them
-    into the standing register table (sinks.merge_max_parquet — the
-    r9 dominance-combine sink mode). Register max is commutative,
-    associative, AND idempotent, so any batch split — or replay — yields
-    the same registers as one pass; the cardinality readout stays a pure
-    function of the state (plans/queries_sketch.py::
-    hll_estimate_readout).
-
-    At 100 TB: per-batch cost is one map-side-combinable 64-key max
-    plus O(touched registers) of a 64-row state table — running
-    distinct-count over an unbounded stream for the price of the batch,
-    the rollup shape HLL exists for."""
-    from ..plans.queries_sketch import hll_sparse_registers
-    from ..sources.sinks import merge_max_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        delta = hll_sparse_registers(batch_df, "l_orderkey")
-        merge_max_parquet(
-            spark, delta, state_dir, ["bucket"], batch_id=batch_id
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        merge(
+            spark, delta(batch_df), state_dir, keys, n_buckets=n_buckets,
+            batch_id=batch_id,
         )
 
     return start_foreach_batch(stream, process_batch, checkpoint_dir)
@@ -881,12 +748,12 @@ def quality_gate_stream(
     max_files_per_trigger: int | None = None,
 ):
     """Streaming curation gate with a PINNED language model (the
-    production model-as-state shape, like psi_current_stream's pinned
-    reference): the LM statistics are fit ONCE on the static training
-    corpus and broadcast into every micro-batch; each batch of incoming
-    documents is scored + gated and its per-doc decision rows upsert
-    into the standing verdicts table keyed by doc_id (idempotent — a
-    replayed batch rewrites identical rows).
+    production model-as-state shape, like stream_psi_drift_drain's
+    pinned reference): the LM statistics are fit ONCE on the static
+    training corpus and broadcast into every micro-batch; each batch of
+    incoming documents is scored + gated and its per-doc decision rows
+    upsert into the standing verdicts table keyed by doc_id (idempotent
+    — a replayed batch rewrites identical rows).
 
     At 100 TB: per-batch cost is the batch's tokenize + one broadcast
     join against the vocab-sized LM + O(touched buckets) of the verdict
@@ -904,40 +771,6 @@ def quality_gate_stream(
         scored = unigram_score_against(batch_df, lm, norm)
         rows = quality_gate_rows(batch_df, scored)
         merge_upsert_parquet(spark, rows, state_dir, ["doc_id"])
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def zscore_moment_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Incremental per-dimension moment maintenance for the diagonal-
-    Mahalanobis OOD sweep: each micro-batch of embeddings additively
-    merges its (dim, s1, s2, n) sufficient-statistic deltas into the
-    standing state (sinks.merge_add_parquet — DECIMAL sums and counts
-    all merge by +, exactly-once via the batch-id ledger). Extends the
-    additive-state family beyond bucket counts to real-valued exact
-    statistics; the outlier readout stays a pure function of the state
-    (plans/queries_similarity.py::zscore_readout).
-
-    At 100 TB: per-batch cost is one map-side-combinable 64-key moment
-    aggregate plus O(64) state rows — corpus-wide distribution tracking
-    for the price of the batch."""
-    from ..plans.queries_similarity import zscore_moment_deltas
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        delta = zscore_moment_deltas(batch_df)
-        merge_add_parquet(
-            spark, delta, state_dir, ["dim"], batch_id=batch_id
-        )
 
     return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
@@ -981,473 +814,5 @@ def kmv_bottomk_stream(
         )
         new_state = kmv_bottomk(pool)
         merge_upsert_parquet(spark, new_state, state_dir, ["s", "r"])
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def reliability_bins_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Incremental calibration monitoring: each micro-batch of
-    documents scores, bins, and ADDITIVELY merges its (bin, n, s_sum,
-    y_sum) sufficient statistics into the standing reliability state
-    (sinks.merge_add_parquet, exactly-once via the batch-id ledger).
-    The decimal score sums and integer counts are commutative
-    additive state — the stream_zscore_drain precedent — so any batch
-    split yields exactly the one-pass bins, and the diagram + ECE
-    read out as a pure function of the state
-    (plans/queries_curation.py::reliability_readout).
-
-    At 100 TB: per-batch cost is one map-side-combinable 10-key
-    aggregate plus O(touched bins) of a 10-row state table — live
-    calibration drift monitoring for the price of the batch."""
-    from ..plans.queries_curation import reliability_bin_counts
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        delta = reliability_bin_counts(batch_df)
-        merge_add_parquet(
-            spark, delta, state_dir, ["bin"], batch_id=batch_id
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def benford_digit_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming Benford conformance maintenance: each micro-batch of
-    lineitem rows extracts first digits and merges its 9-key (d, o)
-    count delta ADDITIVELY into the standing digit table
-    (sinks.merge_add_parquet, exactly-once via the batch-id ledger).
-    Digit counts are the test's complete sufficient statistic and
-    addition is commutative, so any batch split yields the batch
-    result; the chi-square conformance readout
-    (plans/queries_stats.py::benford_readout) runs from state as a
-    pure function.
-
-    At 100 TB: per-batch cost is one map-side-combinable 9-key count
-    plus O(9) state rows — a continuously fresh fraud/unit-mixup
-    monitor for the price of the batch."""
-    from ..plans.queries_stats import benford_digit_counts
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        delta = benford_digit_counts(batch_df).withColumnRenamed("o", "c")
-        merge_add_parquet(spark, delta, state_dir, ["d"], batch_id=batch_id)
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def zipf_wordcount_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming vocabulary-count maintenance: each micro-batch of
-    documents tokenizes and merges its (word, n) delta ADDITIVELY into
-    the standing word-count table — the UNBOUNDED-key member of the
-    additive-state family (the CMS drain's keys are fixed d*w cells;
-    here state is vocab-sized and the sink's hash-bucketed MERGE
-    rewrites only touched buckets). The Zipf rank-frequency fit
-    (plans/queries_text.py::zipf_fit_readout) reads out from state as
-    a pure function of the merged counts.
-
-    At 100 TB: per-batch cost is the batch's tokenize + one map-side-
-    combinable word count + O(touched buckets) of the standing vocab
-    table — a continuously fresh corpus-health monitor."""
-    from ..functions import text as T
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        delta = (
-            batch_df.select(F.explode(T.tokens("text")).alias("word"))
-            .groupBy("word")
-            .agg(F.count("*").alias("c"))
-        )
-        merge_add_parquet(
-            spark, delta, state_dir, ["word"], batch_id=batch_id
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def novelty_firsts_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming first-occurrence maintenance: each micro-batch of
-    documents MIN-merges its (gram, min doc_id) delta into the standing
-    first-seen table (sinks.merge_min_parquet — the fourth sink
-    combiner, r10). min is commutative/idempotent, so any batch split
-    or replay yields the one-pass table, and per-doc novelty reads out
-    from state as a pure function
-    (plans/queries_text.py::novelty_readout).
-
-    At 100 TB: per-batch cost is the batch's gram fan-out + one
-    map-side-combinable gram min + O(touched buckets) of the standing
-    gram table — a continuously fresh redundancy monitor that never
-    re-scans the corpus."""
-    from ..plans.queries_text import novelty_doc_grams
-    from ..sources.sinks import merge_min_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        delta = (
-            novelty_doc_grams(batch_df)
-            .groupBy("g")
-            .agg(F.min("doc_id").alias("first_doc"))
-        )
-        merge_min_parquet(
-            spark, delta, state_dir, ["g"], batch_id=batch_id
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def mi_cell_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming dependence-profile maintenance: each micro-batch of
-    events merges its (xv, yv, nxy) cell-count delta ADDITIVELY into
-    the standing contingency table (sinks.merge_add_parquet,
-    exactly-once via the batch-id ledger). Cell counts are the MI
-    profile's complete sufficient statistic and addition is
-    commutative, so any batch split yields the one-pass table; the
-    MI/NMI readout (plans/queries_governance.py::mi_readout) runs from
-    state as a pure function.
-
-    At 100 TB: per-batch cost is one map-side-combinable |X|·|Y|-cell
-    count plus O(cells) state rows — a continuously fresh
-    column-dependence monitor for physical-design decisions."""
-    from ..plans.queries_governance import mi_pair_counts
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        delta = mi_pair_counts(batch_df).withColumnRenamed("nxy", "c")
-        merge_add_parquet(
-            spark, delta, state_dir, ["xv", "yv"], batch_id=batch_id
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def transition_count_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming journey-transition maintenance: each micro-batch of
-    events forms its per-user (i, j) transition pairs and merges the
-    count delta ADDITIVELY into the standing transition matrix. The
-    statistic is additive across USER-disjoint batches (pairs form
-    inside one user's journey only), which is how the drain splits its
-    input — the entropy/predictability readout
-    (plans/queries_events.py::transition_entropy_readout) runs from
-    state as a pure function.
-
-    At 100 TB: per-batch cost is the sessionization exchange on
-    user_id plus a |types|²-bounded count — a continuously fresh
-    sequence-predictability monitor."""
-    from ..plans.queries_events import transition_counts
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        delta = transition_counts(batch_df).withColumnRenamed("nij", "c")
-        merge_add_parquet(
-            spark, delta, state_dir, ["i", "j"], batch_id=batch_id
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def anova_moment_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming variance-decomposition maintenance: each micro-batch
-    of lineitem rows merges its (grp, n, s, q) integer moment delta
-    ADDITIVELY into the standing group-moment table; the ANOVA F
-    readout (plans/queries_stats.py::anova_readout) runs from state as
-    a pure function. Counts, sums, and sums of squares are the test's
-    complete sufficient statistic and addition is commutative, so any
-    batch split yields the one-pass result.
-
-    At 100 TB: per-batch cost is one map-side-combinable k-group
-    moment aggregate plus O(k) state rows — a continuously fresh
-    does-this-category-explain-this-metric monitor."""
-    from ..plans.queries_stats import anova_group_moments
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        delta = anova_group_moments(batch_df)
-        # the add sink merges every non-key numeric column; moments are
-        # (n_g, s_g, q_g) under the grp key
-        merge_add_parquet(
-            spark, delta, state_dir, ["grp"], batch_id=batch_id
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def jsd_count_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming source-drift maintenance: each micro-batch of
-    documents merges its (source, word, a) count delta ADDITIVELY into
-    the standing table (the UNBOUNDED-key additive family — the Zipf
-    drain's state widened by the source key); the per-source JSD
-    readout (plans/queries_text.py::jsd_readout) runs from state as a
-    pure function.
-
-    At 100 TB: per-batch cost is the batch's tokenize + one map-side-
-    combinable (source, word) count + O(touched buckets) of the
-    standing table — a continuously fresh which-source-drifted
-    monitor."""
-    from ..plans.queries_text import jsd_source_word_counts
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        delta = jsd_source_word_counts(batch_df).withColumnRenamed(
-            "a", "c"
-        )
-        merge_add_parquet(
-            spark, delta, state_dir, ["source", "word"], batch_id=batch_id
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def daily_cents_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming daily-total maintenance: each micro-batch of events
-    ADD-merges its (epoch-day, cents) delta into the standing daily
-    table — the CALENDAR-bounded member of the additive-state family
-    (state is ~30 rows however much data flows). The Theil-Sen robust
-    trend readout (plans/queries_timeseries.py::theil_sen_readout)
-    runs from merged state as a pure function — a continuously fresh
-    trend monitor whose pair/median work never touches raw events.
-
-    At 100 TB: per-batch cost is one day-keyed map-side-combinable
-    sum + O(touched buckets) of a calendar-sized table."""
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        delta = batch_df.groupBy(
-            F.datediff(
-                F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-            ).alias("d")
-        ).agg(
-            (F.sum(F.col("value").cast("decimal(18,2)")) * 100)
-            .cast("bigint")
-            .alias("c")
-        )
-        merge_add_parquet(
-            spark, delta, state_dir, ["d"], batch_id=batch_id
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def utf8_metric_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming encoding-health maintenance: each micro-batch of
-    documents runs the UTF-8 DFA audit and ADD-merges its 11-key
-    (metric, c) delta into the standing class-count table — the
-    FIXED-key extreme of the additive-state family (state is 11 rows
-    at any volume). The corpus rollup reads out via
-    operators/multimodal.py::utf8_corpus_readout as a pure function.
-
-    At 100 TB: per-batch cost is the batch's scan-stage DFA work +
-    an 11-row merge — a continuously fresh mojibake monitor."""
-    from ..operators.multimodal import utf8_metric_counts
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        merge_add_parquet(
-            spark, utf8_metric_counts(batch_df), state_dir, ["metric"],
-            batch_id=batch_id,
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def score_grid_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming ranking-quality maintenance: each micro-batch of
-    documents scores the calibration signal (round-6 distinct-token
-    ratio) and ADD-merges its (s, pos, neg) value-grid delta into the
-    standing table — state bounded by distinct round-6 scores, both
-    count columns additive. ROC AUC / Gini read out from merged state
-    via plans/queries_curation.py::auc_readout as a pure function — a
-    live discrimination monitor for the quality gate's score.
-
-    At 100 TB: per-batch cost is one scan-stage score + an
-    s-keyed map-side-combinable count + O(touched scores) of a
-    grid-sized merge."""
-    from ..plans.queries_curation import _score_label_grid
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        merge_add_parquet(
-            spark, _score_label_grid(batch_df), state_dir, ["s"],
-            batch_id=batch_id,
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def kw_gcnt_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming rank-test maintenance: each micro-batch of lineitem
-    rows ADD-merges its (grp, x) value-grid count delta into the
-    standing table — state bounded by groups x distinct values (the
-    quantity grid is 50 values, so ~200 rows at any volume). The
-    tie-corrected Kruskal-Wallis H reads out from merged state via
-    plans/queries_stats.py::kw_readout as a pure function — a live
-    distribution-shift monitor that needs no normality assumption.
-
-    At 100 TB: per-batch cost is one (grp, x)-keyed map-side-
-    combinable count + O(touched buckets) of a grid-sized table."""
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        delta = (
-            batch_df.select(
-                F.col("l_returnflag").alias("grp"),
-                F.col("l_quantity").cast("bigint").alias("x"),
-            )
-            .groupBy("grp", "x")
-            .agg(F.count("*").cast("bigint").alias("c"))
-        )
-        merge_add_parquet(
-            spark, delta, state_dir, ["grp", "x"], batch_id=batch_id
-        )
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def bigram_count_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming bigram-count maintenance: each micro-batch of
-    documents tokenizes and ADD-merges its per-(w1, w2) adjacent-pair
-    count delta into the standing bigram table — the second
-    unbounded-key member of the additive-state family beside the
-    vocab table (state is bigram-relation-sized; the sink's
-    hash-bucketed MERGE rewrites only touched buckets). Collocation
-    significance (plans/queries_corpus.py::llr_readout) reads out
-    from merged state as a pure function of the counts.
-
-    At 100 TB: per-batch cost is the batch's tokenize + one
-    map-side-combinable (w1, w2) count + O(touched buckets) of the
-    standing table — a continuously fresh phrase-induction monitor."""
-    from ..functions import text as T
-    from ..sources.sinks import merge_add_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        toks = batch_df.select(T.tokens("text").alias("t"))
-        pairs = F.expr(
-            "transform(sequence(1, size(t) - 1), k -> "
-            "struct(element_at(t, k) AS w1, element_at(t, k + 1) AS w2))"
-        )
-        delta = (
-            toks.where(F.size("t") >= 2)
-            .select(F.explode(pairs).alias("p"))
-            .select("p.w1", "p.w2")
-            .groupBy("w1", "w2")
-            .agg(F.count("*").cast("bigint").alias("k11"))
-        )
-        merge_add_parquet(
-            spark, delta, state_dir, ["w1", "w2"], batch_id=batch_id
-        )
 
     return start_foreach_batch(stream, process_batch, checkpoint_dir)

@@ -76,15 +76,51 @@ DEGENERATE_ON_EMPTY = (
 )
 
 
+# every combining-state drain (streaming/drain.py::state_drain) plus the
+# batch HLL query whose readout stream_hll_drain shares: on zero-row
+# tables each must still match its DuckDB oracle (names, types, rows)
+EMPTY_ORACLE = (
+    "stream_ddsketch_drain",
+    "stream_cms_drain",
+    "stream_hll_drain",
+    "stream_zscore_drain",
+    "stream_reliability_drain",
+    "stream_benford_drain",
+    "stream_zipf_drain",
+    "stream_novelty_drain",
+    "stream_mutual_info_drain",
+    "stream_transition_entropy_drain",
+    "stream_good_turing_drain",
+    "stream_vocab_gini_drain",
+    "stream_anova_drain",
+    "stream_jsd_drain",
+    "stream_chi2_drain",
+    "stream_theil_sen_drain",
+    "stream_utf8_drain",
+    "stream_auc_drain",
+    "stream_kruskal_drain",
+    "stream_llr_drain",
+    "stream_isotonic_drain",
+    "stream_psi_drift_drain",
+    "rel_hll_portable",
+)
+
+
 @pytest.fixture(scope="module")
-def empty_sf(spark, tmp_path_factory):
-    """An sf_dir whose tables have the real schemas but zero rows."""
-    from posts_vectorizer_spark.sources import TABLES, load_table
+def empty_sf(tmp_path_factory):
+    """An sf_dir whose tables have the real schemas but zero rows, one
+    parquet FILE per table — the layout both Spark's load_table and the
+    oracle's DuckDB views (read_parquet of ``{sf}/{t}.parquet``) read.
+    Spark would write a directory at that path, so pyarrow writes it."""
+    import pyarrow.parquet as pq
+
+    from posts_vectorizer_spark.sources import TABLES
 
     d = tmp_path_factory.mktemp("empty_sf")
     for t in TABLES:
-        load_table(spark, SF_SMOKE, t).limit(0).write.parquet(
-            str(d / f"{t}.parquet")
+        pq.write_table(
+            pq.read_table(f"{SF_SMOKE}/{t}.parquet").slice(0, 0),
+            str(d / f"{t}.parquet"),
         )
     return str(d)
 
@@ -96,6 +132,21 @@ def test_query_survives_empty_tables(spark, empty_sf, name):
     # else must be empty, and nothing may raise
     if name != "tfidf_vocabulary":
         assert rows == []
+
+
+@pytest.mark.parametrize("name", EMPTY_ORACLE)
+def test_state_drain_matches_oracle_on_empty_tables(spark, empty_sf, name):
+    """No batch carries a row, so the merge sink never materializes state:
+    the drain must read out over an EMPTY state relation and agree with
+    the oracle — zero rows for most, the one degenerate row where the
+    oracle has one (HLL's all-zero registers, AUC's zero counts)."""
+    from tools.oracle_check import compare_query, duckdb_connection
+
+    problems, _ = compare_query(
+        spark, duckdb_connection(empty_sf), name, E.queries()[name],
+        E.oracle_sql()[name], empty_sf,
+    )
+    assert problems == []
 
 
 def test_scan_cache_cleared_on_fixture_rewrite(spark, tmp_path):
@@ -167,23 +218,13 @@ def test_bench_plans_writes_one_section_per_query(spark, tmp_path):
         assert body.count("== Physical Plan ==") == 1
 
 
-def test_queries_degenerate_on_empty_tables(spark, tmp_path):
+def test_queries_degenerate_on_empty_tables(spark, empty_sf):
     """P9 (empty-input guard) extended to DEGENERATE_ON_EMPTY: every
     listed query must return an empty (or degenerate-diagnostic) result
     on schema-correct zero-row tables, never crash. The r7 empty-input
     smoke caught two real ones: sim_hard_negatives IndexError'd on an
     empty label list, and stream_ddsketch_drain raised on the merge
     sink's never-materialized state."""
-    from posts_vectorizer_spark.sources import load_table
-    from tests.conftest import SF_SMOKE
-
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
-        load_table(spark, SF_SMOKE, t).limit(0).write.parquet(
-            str(tmp_path / f"{t}.parquet")
-        )
     # file-INTROSPECTION queries read footers/containers, which exist
     # regardless of row counts — their natural empty-input output is
     # one row per FILE (and still hash-matches the oracle, whose
@@ -191,7 +232,7 @@ def test_queries_degenerate_on_empty_tables(spark, tmp_path):
     per_file_ok = {"source_parquet_footer"}
     qs = E.queries()
     for name in DEGENERATE_ON_EMPTY:
-        n = qs[name](spark, str(tmp_path)).count()
+        n = qs[name](spark, empty_sf).count()
         if name in per_file_ok:
             assert n >= 1, f"{name}: footer walk found no files"
             continue

@@ -577,3 +577,19 @@ def test_empty_partitions_commit_no_files(spark, tmp_path):
     assert manifest.get("quarantine", {"files": []})["files"] == []
     got = sorted(r["k"] for r in P.read_ledger(spark, str(path)).collect())
     assert got == [1, 2]
+
+
+def test_python_datasource_query_leaves_session_conf_unchanged(spark):
+    """The filter-pushdown key the Python source needs is a prep_session
+    key (it must hold when the lazy plan is optimized, after the builder
+    returns), so building the registered query leaks no conf into the
+    caller's session."""
+    import __spark_entry__ as E
+    from posts_vectorizer_spark.session import prep_session
+    from tests.conftest import SF_SMOKE
+
+    spark.conf.unset("spark.sql.python.filterPushdown.enabled")
+    prep_session(spark)
+    before = dict(spark.conf.getAll)
+    E.queries()["source_python_datasource"](spark, SF_SMOKE)
+    assert dict(spark.conf.getAll) == before

@@ -204,9 +204,8 @@ def stream_minhash_index_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
         probe_bands,
     )
-    from ..sources.sinks import read_merged
     from ..streaming import minhash_index_stream
-    from ..streaming.drain import drain, source_copy
+    from ..streaming.drain import drain, merged_or_empty, source_copy
 
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % INCR_MOD != 0)
@@ -217,7 +216,9 @@ def stream_minhash_index_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = drain(spark, lambda out, ckpt: minhash_index_stream(
         spark, source, base.schema, out, ckpt
     ))
-    base_bands = read_merged(spark, index_dir).select(
+    base_bands = merged_or_empty(
+        spark, index_dir, "doc_id bigint, band_id int, band_value string"
+    ).select(
         F.col("doc_id").alias("doc_b"), "band_id", "band_value"
     )
     arrays = persist_tracked(_doc_shingle_arrays(docs))

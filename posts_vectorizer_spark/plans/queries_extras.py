@@ -21,9 +21,8 @@ from ..operators import mllib_alt, multimodal
 from ..operators.tfidf import doc_vectors_sql as _doc_vectors_sql
 from ..sources import load_table
 from ..sources.catalog import scratch_dir
-from ..sources.sinks import read_merged
 from ..sources.http_enrich import enrich_with_text
-from ..streaming.drain import drain, source_copy
+from ..streaming.drain import drain, merged_or_empty, source_copy
 from .registry import register
 
 
@@ -473,9 +472,12 @@ def stream_vectorize_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(p),
     )
-    return read_merged(spark, drain(spark, lambda out, ckpt: vectorize_stream(
+    target = drain(spark, lambda out, ckpt: vectorize_stream(
         spark, source, docs, emb, out, ckpt, lang="en"
-    )))
+    ))
+    return merged_or_empty(
+        spark, target, "doc_id bigint, dim int, component double"
+    )
 
 
 @register(
@@ -519,9 +521,9 @@ def stream_upsert_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, source, src_schema, out, ckpt,
         keys=["user_id"], order_col="seq",
     ))
-    return read_merged(spark, target).select(
-        "user_id", "last_event_id", "last_value"
-    )
+    return merged_or_empty(
+        spark, target, "user_id bigint, last_event_id bigint, last_value double"
+    ).select("user_id", "last_event_id", "last_value")
 
 
 @register(
@@ -576,10 +578,10 @@ def stream_cdc_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, source, src_schema, out, ckpt,
         keys=["user_id"], order_col="seq",
     ))
-    merged = read_merged(spark, target)
-    if merged is None:  # every user's last op was a delete
-        return spark.createDataFrame([], "user_id long, last_value double")
-    return merged.select("user_id", "last_value")
+    # empty when every user's last op was a delete
+    return merged_or_empty(
+        spark, target, "user_id long, last_value double"
+    ).select("user_id", "last_value")
 
 
 @register(

@@ -18,7 +18,9 @@ from ..cache import persist_tracked
 from ..functions import text as _T
 from ..sources import load_table, scratch_dir, spread
 from ..sources.sinks import merge_max_parquet, merge_min_parquet, read_merged
-from ..streaming.drain import drain, halves, source_copy, state_drain
+from ..streaming.drain import (
+    drain, halves, merged_or_empty, source_copy, state_drain,
+)
 from .registry import register
 
 SOURCE_CAP = 10
@@ -503,8 +505,12 @@ def stream_idf_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, source, docs.schema, f"{out}/counts", f"{out}/docs", ckpt,
         lang="en", max_files_per_trigger=1,
     ))
-    counts = read_merged(spark, f"{state_dir}/counts")
-    n_docs = read_merged(spark, f"{state_dir}/docs").select("n_docs")
+    counts = merged_or_empty(
+        spark, f"{state_dir}/counts", "word string, occurrences bigint"
+    )
+    n_docs = merged_or_empty(
+        spark, f"{state_dir}/docs", "scope string, n_docs bigint"
+    ).select("n_docs")
     return counts.crossJoin(F.broadcast(n_docs)).select(
         "word",
         "occurrences",
@@ -1324,15 +1330,12 @@ def stream_quality_gate_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, source, docs.schema, lm, norm, out, ckpt,
         max_files_per_trigger=1,
     ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_tokens bigint, repetition double,"
-            " avg_logprob double, fail_length boolean,"
-            " fail_repetition boolean, fail_lm boolean, keep boolean",
-        )
-    return state.select(
+    return merged_or_empty(
+        spark, state_dir,
+        "doc_id long, n_tokens bigint, repetition double,"
+        " avg_logprob double, fail_length boolean,"
+        " fail_repetition boolean, fail_lm boolean, keep boolean",
+    ).select(
         "doc_id", "n_tokens", "repetition", "avg_logprob",
         "fail_length", "fail_repetition", "fail_lm", "keep",
     )

@@ -999,14 +999,17 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def psi_bucket_counts(
-    vals: DataFrame, mn: int, mx: int, name: str
+    vals: DataFrame, mn: int | None, mx: int | None, name: str
 ) -> DataFrame:
     """(bucket, ``name``) counts of the micro-unit column ``v`` over
     _PSI_BUCKETS equal-width buckets on PINNED reference bounds
     ``mn``/``mx`` (out-of-range values clamp to the edge buckets). With
     the bounds frozen, the counts are a pure additive delta: the
     streaming drain merges its current-side counts batch by batch and
-    reads the reference side off the static window."""
+    reads the reference side off the static window. An empty reference
+    window leaves the bounds NULL, and every row lands in bucket 0
+    (``greatest`` skips the NULL), as in the oracle."""
+    mn, mx = ("CAST(NULL AS BIGINT)" if b is None else b for b in (mn, mx))
     bucket = F.least(
         F.lit(_PSI_BUCKETS - 1),
         F.greatest(
@@ -1031,8 +1034,9 @@ def psi_readout(counts: DataFrame) -> DataFrame:
     a second aggregate: the r7 scale-trend measurement caught the
     two-aggregate form recomputing the counts (and their events scan)."""
     w_all = Window.partitionBy()
-    p = F.col("n_ref").cast("double") / F.col("tr")
-    q = F.col("n_cur").cast("double") / F.col("tc")
+    # an empty window's shares are NULL, as DuckDB's x / 0 is
+    p = F.try_divide(F.col("n_ref").cast("double"), F.col("tr"))
+    q = F.try_divide(F.col("n_cur").cast("double"), F.col("tc"))
     term = (
         F.when(
             (F.col("n_ref") > 0) & (F.col("n_cur") > 0),
@@ -1250,13 +1254,7 @@ def stream_psi_drift_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts") < F.lit(_PSI_SPLIT).cast("timestamp")).alias("is_ref"),
     )
     ref = base.where("is_ref")
-    stats = ref.agg(F.min("v").alias("mn"), F.max("v").alias("mx")).first()
-    if stats["mn"] is None:
-        # empty reference window: bucket bounds undefined — zero rows (any
-        # bounds give an empty reference side, and the readout keeps none)
-        ref_counts = psi_bucket_counts(ref, 0, 0, "n_ref")
-        return psi_readout(ref_counts.withColumn("n_cur", F.col("n_ref")))
-    mn, mx = int(stats["mn"]), int(stats["mx"])
+    mn, mx = ref.agg(F.min("v"), F.max("v")).first()
 
     cur = state_drain(
         spark,

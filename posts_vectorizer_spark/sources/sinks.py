@@ -7,17 +7,29 @@ Parquet has no transactional MERGE, so this emulates Delta's
 with Delta-like mechanics and Delta-like cost:
 
 * **Bucket pruning** — the table is hash-bucketed on the merge keys
-  (``pmod(hash(keys), n_buckets)``, stable across sessions). A merge
-  rewrites ONLY the buckets containing update keys, so per-micro-batch cost
-  is O(touched buckets), not O(table) — a 1k-row batch against a 100 TB
-  table touches ~min(1k, n_buckets) buckets. All touched buckets are merged
-  and written in ONE Spark job via ``partitionBy``.
+  (``pmod(hash(keys), n_buckets)``, stable across sessions), and a merge
+  rewrites ONLY the buckets holding batch keys. Cost is O(touched buckets),
+  not O(table); how many a batch touches depends on how its keys hash (a
+  whole-key hash spreads one post's ``(doc_id, dim)`` rows over every
+  bucket).
+* **Staged first** — one job writes the incoming batch (upserts, or CDC
+  changes with their op column) into ``_staging_<v>``, partitioned by
+  ``_bucket``; that is the only pass over the caller's plan, so nothing is
+  persisted. The touched buckets are the ``_bucket=`` directories that
+  write produced — a directory listing, not a probe job (Delta's MERGE
+  likewise finds its files from data already written). Last-batch-wins
+  moves the staged files into the new bucket version and writes only the
+  stored rows they do not replace; the ordered, CDC and add/max/min merges
+  write ``current ∪ staged`` through their combiner, then drop the staged
+  files.
 * **Atomic manifest commit** — ``_MANIFEST.json`` maps bucket id -> current
-  versioned directory and is replaced with ``os.replace`` (atomic on POSIX)
-  only after every new bucket directory is fully written. The live table is
-  never moved or deleted before its replacement is committed: a crash at ANY
-  point leaves the manifest pointing at a complete previous state, and
-  orphaned version directories are swept on the next merge.
+  versioned directory, records the table schema (so no read of the table
+  runs Spark's schema-inference job) and is replaced with ``os.replace``
+  (atomic on POSIX) only after every new bucket directory is fully
+  written. The live table is never moved or deleted before its replacement
+  is committed: a crash at ANY point leaves the manifest pointing at a
+  complete previous state, and orphaned version and staging directories
+  are swept on the next merge.
 
 On a real deployment the same call site is one ``DeltaTable.merge`` (or
 Iceberg MERGE INTO). The contract that matters for streaming is preserved:
@@ -42,6 +54,9 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import (
+    ArrayType, DataType, IntegerType, MapType, StructField, StructType,
+)
 
 MANIFEST = "_MANIFEST.json"
 DEFAULT_BUCKETS = 16
@@ -80,30 +95,42 @@ def _sweep_orphans(target_dir: str, manifest: dict | None) -> None:
             shutil.rmtree(full, ignore_errors=True)
 
 
-_PROBE_SKIP_BUCKETS = 4
-
-
-def _skip_probe(combine: str, delete_keys, manifest: dict | None) -> bool:
-    """True when the touched-bucket probe job can be skipped: a combining
-    merge (add/max/min — untouched keys pass through unchanged, deletes
-    don't exist on these paths) over a populated state whose manifest is
-    CONFIGURED with at most _PROBE_SKIP_BUCKETS buckets, i.e. a state
-    declared constant-size by its bucket-count choice. The gate reads the
-    configured count, not the populated one: a large table that so far
-    fills only a few buckets still needs the probe to rewrite only the
-    buckets a batch touches."""
-    return (
-        combine in ("add", "max", "min")
-        and delete_keys is None
-        and manifest is not None
-        and bool(manifest.get("buckets"))
-        and manifest["n_buckets"] <= _PROBE_SKIP_BUCKETS
-    )
-
-
 def _bucket_col(keys: list[str], n_buckets: int) -> F.Column:
     # Murmur3 with Spark's fixed seed: deterministic across sessions/runs.
     return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
+
+
+def _bucket_dirs(root: str) -> dict[str, str]:
+    """Bucket id -> ``_bucket=<id>`` directory of a partitioned write."""
+    return {
+        e.split("=", 1)[1]: os.path.join(root, e)
+        for e in os.listdir(root)
+        if e.startswith("_bucket=")
+    }
+
+
+def _table_schema(
+    manifest: dict | None, batch: DataFrame, op_col: str | None = None
+) -> StructType:
+    """The table's schema: recorded in the manifest by the first write, so
+    no read of the table runs Spark's schema-inference job; before that,
+    the batch's stored columns. Every level is nullable, as a parquet read
+    makes it, so any later batch of the same types casts to it."""
+    if manifest is not None and "schema" in manifest:
+        return StructType.fromJson(manifest["schema"])
+    return _nullable(StructType([f for f in batch.schema if f.name != op_col]))
+
+
+def _nullable(t: DataType) -> DataType:
+    if isinstance(t, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t
+        ])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 def read_merged(spark: SparkSession, target_dir: str) -> DataFrame | None:
@@ -112,7 +139,10 @@ def read_merged(spark: SparkSession, target_dir: str) -> DataFrame | None:
     if manifest is None or not manifest["buckets"]:
         return None
     paths = [os.path.join(target_dir, d) for d in manifest["buckets"].values()]
-    return spark.read.parquet(*paths)
+    reader = spark.read
+    if "schema" in manifest:
+        reader = reader.schema(StructType.fromJson(manifest["schema"]))
+    return reader.parquet(*paths)
 
 
 def merge_upsert_parquet(
@@ -140,9 +170,7 @@ def merge_upsert_parquet(
     ``WHEN MATCHED AND s.seq >= t.seq THEN UPDATE`` in the same bucketed
     mechanics.
     """
-    _merge_parquet(
-        spark, updates, None, target_dir, keys, n_buckets, order_col=order_col
-    )
+    _merge_parquet(spark, updates, target_dir, keys, n_buckets, order_col=order_col)
 
 
 def apply_cdc_parquet(
@@ -164,9 +192,7 @@ def apply_cdc_parquet(
     Changes must be unique per key (caller compacts the changelog to
     last-op-per-key first — standard CDC compaction).
     """
-    upserts = changes.where(F.col(op_col) != "D").drop(op_col)
-    delete_keys = changes.where(F.col(op_col) == "D").select(*keys)
-    _merge_parquet(spark, upserts, delete_keys, target_dir, keys, n_buckets)
+    _merge_parquet(spark, changes, target_dir, keys, n_buckets, op_col=op_col)
 
 
 APPLIED_LEDGER_CAP = 64
@@ -194,8 +220,7 @@ def merge_add_parquet(
     (foreachBatch replays only the LAST uncommitted batch). Deltas must be
     pre-aggregated unique per key (callers groupBy first)."""
     _merge_parquet(
-        spark, deltas, None, target_dir, keys, n_buckets,
-        combine="add", batch_id=batch_id,
+        spark, deltas, target_dir, keys, n_buckets, combine="add", batch_id=batch_id
     )
 
 
@@ -215,8 +240,7 @@ def merge_max_parquet(
     semantics are identical across all three sink combiners
     (replace/add/max). Deltas must be pre-aggregated unique per key."""
     _merge_parquet(
-        spark, deltas, None, target_dir, keys, n_buckets,
-        combine="max", batch_id=batch_id,
+        spark, deltas, target_dir, keys, n_buckets, combine="max", batch_id=batch_id
     )
 
 
@@ -237,21 +261,20 @@ def merge_min_parquet(
     semantics across all four sink combiners (replace/add/max/min).
     Deltas must be pre-aggregated unique per key."""
     _merge_parquet(
-        spark, deltas, None, target_dir, keys, n_buckets,
-        combine="min", batch_id=batch_id,
+        spark, deltas, target_dir, keys, n_buckets, combine="min", batch_id=batch_id
     )
 
 
 def _merge_parquet(
     spark: SparkSession,
-    upserts: DataFrame,
-    delete_keys: DataFrame | None,
+    batch: DataFrame,
     target_dir: str,
     keys: list[str],
     n_buckets: int,
     order_col: str | None = None,
     combine: str = "replace",
     batch_id: int | None = None,
+    op_col: str | None = None,
 ) -> None:
     os.makedirs(target_dir, exist_ok=True)
     manifest = _read_manifest(target_dir)
@@ -264,159 +287,67 @@ def _merge_parquet(
     _sweep_orphans(target_dir, manifest)
     if manifest is not None:
         n_buckets = manifest["n_buckets"]
-    # The incoming batch is consumed TWICE on the merge path: once by the
-    # touched-bucket probe (a collect) and once by the staged write. Without
-    # a persist the caller's whole delta subtree (tokenize/hash/aggregate of
-    # the micro-batch) re-runs per consumer — the r12 profile showed every
-    # drain paying its batch computation twice. Persisted here, released in
-    # the finally below; deltas are batch-sized (pre-aggregated per key).
-    # When the probe is skipped (constant-size combining state, see
-    # _merge_parquet_inner) the delta has ONE consumer and the persist
-    # would be pure overhead.
-    persisted = (
-        upserts
-        if manifest and manifest["buckets"]
-        and not _skip_probe(combine, delete_keys, manifest)
-        else None
-    )
-    if persisted is not None:
-        persisted.persist()
-    try:
-        _merge_parquet_inner(
-            spark, upserts, delete_keys, target_dir, keys, n_buckets,
-            manifest, order_col, combine, batch_id,
-        )
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
-
-
-def _merge_parquet_inner(
-    spark: SparkSession,
-    upserts: DataFrame,
-    delete_keys: DataFrame | None,
-    target_dir: str,
-    keys: list[str],
-    n_buckets: int,
-    manifest: dict | None,
-    order_col: str | None = None,
-    combine: str = "replace",
-    batch_id: int | None = None,
-) -> None:
-    bucketed_upserts = upserts.withColumn("_bucket", _bucket_col(keys, n_buckets))
-    change_keys = upserts.select(*keys)
-    if delete_keys is not None:
-        change_keys = change_keys.unionByName(delete_keys)
-    bucketed_keys = change_keys.distinct().withColumn(
-        "_bucket", _bucket_col(keys, n_buckets)
-    )
-
     old_buckets: dict[str, str] = (manifest or {"buckets": {}})["buckets"]
-    if old_buckets:
-        if _skip_probe(combine, delete_keys, manifest):
-            # Constant-size combining state (<= _PROBE_SKIP_BUCKETS
-            # buckets — the CMS-grid / HLL-register class, where the
-            # bucket count was CHOSEN to follow a corpus-independent
-            # state size): treat every stored bucket as touched instead
-            # of running the distinct-collect probe job. The combining
-            # merge passes untouched keys through unchanged, so the
-            # restaged content is identical; what the probe would have
-            # saved is a rewrite bounded by the constant state size,
-            # cheaper than the probe's own shuffle job per micro-batch
-            # (r13 drain profile). Growing states keep the probe — there
-            # O(touched) vs O(table) is the whole point.
-            touched = sorted(int(b) for b in old_buckets)
-        else:
-            # Driver-side action by design: a sink runs at action time,
-            # and the touched-bucket set is what makes the rewrite
-            # O(batch), not O(table).
-            touched = sorted(
-                r[0]
-                for r in bucketed_keys.select("_bucket").distinct().collect()
-            )
-        touched_dirs = [
-            os.path.join(target_dir, old_buckets[str(b)])
-            for b in touched
-            if str(b) in old_buckets
-        ]
-        if touched_dirs:
-            current = spark.read.parquet(*touched_dirs)
-            if combine in ("add", "max", "min"):
-                # combining merge: union current + deltas, SUM (additive
-                # state: counters), MAX (dominance state: HLL registers,
-                # high-water marks) or MIN (first-occurrence state) every
-                # value column per key — unmatched keys pass through any
-                # combiner unchanged
-                value_cols = [
-                    c for c in upserts.columns if c not in keys
-                ]
-                comb = {"add": F.sum, "max": F.max, "min": F.min}[combine]
-                both = current.unionByName(upserts.select(*current.columns))
-                merged = (
-                    both.groupBy(*keys)
-                    .agg(*[comb(c).alias(c) for c in value_cols])
-                    .withColumn("_bucket", _bucket_col(keys, n_buckets))
-                )
-            elif order_col is None:
-                # last-batch-wins: incoming rows replace stored rows
-                kept = current.join(
-                    bucketed_keys.select(*keys), keys, "left_anti"
-                ).withColumn("_bucket", _bucket_col(keys, n_buckets))
-                merged = kept.unionByName(bucketed_upserts)
-            else:
-                # ordered merge: for keys present on both sides, the row
-                # with the greater order_col wins (ties: remaining columns
-                # name-sorted desc, nulls last — deterministic replay).
-                # Window over (key) on current ∪ incoming of the touched
-                # buckets only — cost still O(touched), not O(table).
-                from pyspark.sql.window import Window
+    schema = _table_schema(manifest, batch, op_col)
+    staged_fields = list(schema.fields)
+    if op_col is not None:
+        staged_fields.append(batch.schema[op_col])
+    staged_fields.append(StructField("_bucket", IntegerType()))
 
-                both = current.withColumn(
-                    "_bucket", _bucket_col(keys, n_buckets)
-                ).unionByName(bucketed_upserts)
-                tiebreak = [
-                    F.col(c).desc_nulls_last()
-                    for c in sorted(both.columns)
-                    if c not in keys and c not in (order_col, "_bucket")
-                ]
-                w = Window.partitionBy(*keys).orderBy(
-                    F.col(order_col).desc_nulls_last(), *tiebreak
-                )
-                merged = (
-                    both.withColumn("_rn", F.row_number().over(w))
-                    .where(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-        else:
-            merged = bucketed_upserts
-    else:
-        touched = None  # first write: whatever buckets the changes hash to
-        merged = bucketed_upserts
-
-    # One job writes every touched bucket, partition-per-bucket.
+    # The one pass over the caller's plan: the batch, in the table's
+    # column order and types, written bucketed into the staging directory.
     version = uuid.uuid4().hex[:8]
     staging = os.path.join(target_dir, f"_staging_{version}")
-    merged.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
+    batch.select(
+        *[F.col(f.name).cast(f.dataType) for f in staged_fields[:-1]],
+        _bucket_col(keys, n_buckets).alias("_bucket"),
+    ).write.partitionBy("_bucket").parquet(staging)
+    staged_buckets = _bucket_dirs(staging)
+    touched = [b for b in staged_buckets if b in old_buckets]
+    staged_reader = spark.read.schema(StructType(staged_fields)).option(
+        "basePath", staging  # the bucket dirs' names give back ``_bucket``
+    )
+    current = None
+    if touched:  # schema from the manifest: no inference job
+        current = spark.read.schema(schema).parquet(
+            *[os.path.join(target_dir, old_buckets[b]) for b in touched]
+        ).withColumn("_bucket", _bucket_col(keys, n_buckets))
+
+    out = os.path.join(staging, "_out")
+    combining = combine != "replace" or order_col is not None
+    if (op_col is not None and staged_buckets) or (touched and combining):
+        # CDC, ordered and combining merges: current ∪ staged through the
+        # combiner, one job; the staged files are then dropped.
+        staged = staged_reader.parquet(*staged_buckets.values())
+        _combined(current, staged, keys, schema, order_col, combine, op_col) \
+            .write.partitionBy("_bucket").parquet(out)
+        new_dirs = _bucket_dirs(out)
+    else:
+        # Last batch wins: the staged files ARE the incoming rows of each
+        # bucket; only the stored rows they do not replace are written.
+        if touched:
+            replaced = staged_reader.parquet(*[staged_buckets[b] for b in touched])
+            current.join(replaced.select(*keys), keys, "left_anti") \
+                .write.partitionBy("_bucket").parquet(out)
+            for b, src in _bucket_dirs(out).items():
+                for f in os.listdir(src):
+                    os.rename(os.path.join(src, f), os.path.join(staged_buckets[b], f))
+        new_dirs = staged_buckets
 
     new_buckets = dict(old_buckets)
-    staged: set[str] = set()
-    for entry in os.listdir(staging):
-        if not entry.startswith("_bucket="):
-            continue
-        b = entry.split("=", 1)[1]
-        staged.add(b)
-        dest = f"b{b}_v{version}"
-        os.rename(os.path.join(staging, entry), os.path.join(target_dir, dest))
-        new_buckets[b] = dest
+    # A touched bucket with no output was emptied by deletes: its stale
+    # version must go.
+    for b in staged_buckets:
+        new_buckets.pop(b, None)
+    for b, src in new_dirs.items():
+        new_buckets[b] = f"b{b}_v{version}"
+        os.rename(src, os.path.join(target_dir, new_buckets[b]))
     shutil.rmtree(staging, ignore_errors=True)
-    if touched is not None:
-        # A touched bucket with no staged output was emptied by deletes —
-        # its manifest entry must go, or the stale version stays readable.
-        for b in touched:
-            if str(b) not in staged:
-                new_buckets.pop(str(b), None)
 
-    new_manifest = {"n_buckets": n_buckets, "keys": list(keys), "buckets": new_buckets}
+    new_manifest = {
+        "n_buckets": n_buckets, "keys": list(keys),
+        "schema": schema.jsonValue(), "buckets": new_buckets,
+    }
     if batch_id is not None or (manifest or {}).get("applied"):
         applied = list((manifest or {}).get("applied", []))
         if batch_id is not None:
@@ -425,3 +356,35 @@ def _merge_parquet_inner(
     _write_manifest_atomic(target_dir, new_manifest)  # <- the only commit point
     # Old versions of rewritten buckets are now unreachable; GC best-effort.
     _sweep_orphans(target_dir, new_manifest)
+
+
+def _combined(current, staged, keys, schema, order_col, combine, op_col):
+    """One row per key of ``current`` ∪ ``staged`` (both carrying
+    ``_bucket``), in the table schema: CDC keeps stored rows the batch does
+    not touch plus its non-delete rows; add/max/min SUM/MAX/MIN every value
+    column; the ordered merge keeps the row with the greater ``order_col``
+    (ties: remaining columns name-sorted desc, nulls last — deterministic
+    replay)."""
+    if op_col is not None:
+        rows = staged.where(F.col(op_col) != "D").drop(op_col)
+        if current is None:
+            return rows
+        return current.join(staged.select(*keys), keys, "left_anti").unionByName(rows)
+    both = current.unionByName(staged)
+    if combine != "replace":
+        comb = {"add": F.sum, "max": F.max, "min": F.min}[combine]
+        return both.groupBy(*keys, "_bucket").agg(*[
+            comb(f.name).cast(f.dataType).alias(f.name)
+            for f in schema if f.name not in keys
+        ])
+    from pyspark.sql.window import Window
+
+    tiebreak = [
+        F.col(c).desc_nulls_last()
+        for c in sorted(both.columns)
+        if c not in keys and c not in (order_col, "_bucket")
+    ]
+    w = Window.partitionBy(*keys).orderBy(
+        F.col(order_col).desc_nulls_last(), *tiebreak
+    )
+    return both.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")

@@ -18,7 +18,8 @@ steps, and this module owns them:
 
 ``state_drain`` is the combining-state drain built on these: a forced
 two-batch copy of a table, drained through ``worker.merge_stream``, read
-back as the merged state.
+back as the merged state. ``merged_or_empty`` reads any drained sink back,
+as an empty relation of the drain's schema when no batch wrote state.
 """
 
 from __future__ import annotations
@@ -121,8 +122,19 @@ def state_drain(
         max_files_per_trigger=files,
     ))
     state = read_merged(spark, state_dir)
-    if state is None:
+    if state is None:  # the schema is analysed only when it is needed
         return spark.createDataFrame([], delta(df).schema)
+    return state
+
+
+def merged_or_empty(spark: SparkSession, target_dir: str, schema) -> DataFrame:
+    """The merged sink at ``target_dir``. When no batch carried a row the
+    sink holds no state, and the result is an empty relation with
+    ``schema`` (a StructType or DDL string), so a drain's readout runs over
+    it like any other state."""
+    state = read_merged(spark, target_dir)
+    if state is None:
+        return spark.createDataFrame([], schema)
     return state
 
 

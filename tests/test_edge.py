@@ -5,6 +5,8 @@ streams, and filtered-to-nothing inputs at 100 TB."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import __spark_entry__ as E
@@ -76,9 +78,10 @@ DEGENERATE_ON_EMPTY = (
 )
 
 
-# every combining-state drain (streaming/drain.py::state_drain) plus the
-# batch HLL query whose readout stream_hll_drain shares: on zero-row
-# tables each must still match its DuckDB oracle (names, types, rows)
+# every combining-state drain (streaming/drain.py::state_drain), the
+# upsert drains that read a keyed merge sink back, and the batch HLL query
+# whose readout stream_hll_drain shares: on zero-row tables each must
+# still match its DuckDB oracle (names, types, rows)
 EMPTY_ORACLE = (
     "stream_ddsketch_drain",
     "stream_cms_drain",
@@ -102,6 +105,10 @@ EMPTY_ORACLE = (
     "stream_llr_drain",
     "stream_isotonic_drain",
     "stream_psi_drift_drain",
+    "stream_vectorize_drain",
+    "stream_upsert_drain",
+    "stream_idf_increment",
+    "stream_minhash_index_drain",
     "rel_hll_portable",
 )
 
@@ -123,6 +130,46 @@ def empty_sf(tmp_path_factory):
             str(d / f"{t}.parquet"),
         )
     return str(d)
+
+
+@pytest.fixture(scope="module")
+def ref_empty_sf(tmp_path_factory):
+    """The smoke fixture with events cut to ``ts >= 2024-01-16``: the PSI
+    queries' reference window is empty while the current window is not.
+    The other tables link to the smoke fixture's files."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from posts_vectorizer_spark.sources import TABLES
+
+    d = tmp_path_factory.mktemp("ref_empty_sf")
+    for t in TABLES:
+        if t != "events":
+            os.symlink(f"{SF_SMOKE}/{t}.parquet", d / f"{t}.parquet")
+    events = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    split = pa.scalar(dt.datetime(2024, 1, 16), events["ts"].type)
+    pq.write_table(
+        events.filter(pc.greater_equal(events["ts"], split)),
+        str(d / "events.parquet"),
+    )
+    return str(d)
+
+
+@pytest.mark.parametrize("name", ["events_psi_drift", "stream_psi_drift_drain"])
+def test_psi_matches_oracle_with_empty_reference_window(spark, ref_empty_sf, name):
+    """An empty reference window leaves the bucket bounds undefined: every
+    current row lands in bucket 0 and the reference share is NULL, as in
+    the oracle — no DIVIDE_BY_ZERO, and the drain does not drop the row."""
+    from tools.oracle_check import compare_query, duckdb_connection
+
+    problems, _ = compare_query(
+        spark, duckdb_connection(ref_empty_sf), name, E.queries()[name],
+        E.oracle_sql()[name], ref_empty_sf,
+    )
+    assert problems == []
 
 
 @pytest.mark.parametrize("name", EMPTY_SAFE)

@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from posts_vectorizer_spark.operators import tfidf
@@ -450,6 +451,120 @@ def test_merge_crash_between_write_and_commit_recovers(spark, tmp_path):
     assert got == {1: "a", 2: "B"}
 
 
+def _jobs_outside_sql(spark, fn) -> list[int]:
+    """Ids of the jobs ``fn`` runs that belong to no SQL execution. A
+    write or a query runs its jobs inside one; the job a parquet read
+    without a schema runs to infer it does not."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"sink-probe-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # the newest executions: the store keeps a bounded number, so an
+    # offset taken before ``fn`` can point past its end
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    execs = store.executionsList(max(n - 50, 0), 50)
+    in_sql = [execs.apply(i).jobs() for i in range(execs.size())]
+    return [
+        j for j in sc.statusTracker().getJobIdsForGroup(group)
+        if not any(m.contains(j) for m in in_sql)
+    ]
+
+
+def test_merge_persists_nothing(spark, tmp_path, monkeypatch):
+    """A merge writes its batch once and reads it back from disk: it
+    persists nothing, so the JVM's persistent RDDs and the tracked caches
+    are the same after it as before."""
+    from posts_vectorizer_spark import cache
+
+    target = str(tmp_path / "t")
+    base = spark.createDataFrame([(k, "v") for k in range(50)], "k long, v string")
+    merge_upsert_parquet(spark, base, target, ["k"], n_buckets=4)
+    rdds = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    tracked = list(cache._TRACKED)
+
+    def no_cache(*a, **kw):
+        raise AssertionError("the merge persisted a DataFrame")
+
+    monkeypatch.setattr(type(base), "persist", no_cache)
+    monkeypatch.setattr(type(base), "cache", no_cache)
+    upd = spark.createDataFrame([(3, "V"), (77, "n")], "k long, v string")
+    merge_upsert_parquet(spark, upd, target, ["k"])
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == rdds
+    assert cache._TRACKED == tracked
+    assert read_merged(spark, target).count() == 51
+
+
+def test_merge_reads_run_no_schema_inference(spark, tmp_path):
+    """The manifest records the table schema: read_merged, and a second
+    merge's read of the buckets it touches, run no schema-inference job."""
+    target = str(tmp_path / "t")
+    base = spark.createDataFrame([(k, "v") for k in range(50)], "k long, v string")
+    merge_upsert_parquet(spark, base, target, ["k"], n_buckets=4)
+    assert _jobs_outside_sql(spark, lambda: read_merged(spark, target)) == []
+    upd = spark.createDataFrame([(3, "V"), (77, "n")], "k long, v string")
+    assert _jobs_outside_sql(
+        spark, lambda: merge_upsert_parquet(spark, upd, target, ["k"])
+    ) == []
+    rows = sorted(tuple(r) for r in read_merged(spark, target).collect())
+    assert rows == sorted(
+        [(k, "V" if k == 3 else "v") for k in range(50)] + [(77, "n")]
+    )
+
+
+def test_cdc_first_write_stores_no_deleted_key(spark, tmp_path):
+    """The staged CDC batch carries its deletes and op column; a first
+    write must still store only the inserted and updated rows."""
+    from posts_vectorizer_spark.sources.sinks import apply_cdc_parquet
+
+    target = str(tmp_path / "t")
+    changes = spark.createDataFrame(
+        [(1, "a", "I"), (2, None, "D"), (3, "c", "U")],
+        "k long, v string, _op string",
+    )
+    apply_cdc_parquet(spark, changes, target, ["k"])
+    got = read_merged(spark, target)
+    assert got.columns == ["k", "v"]
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "a"), (3, "c")]
+
+
+@pytest.mark.parametrize("crash_at", ["_bucket_dirs", "_write_manifest_atomic"])
+def test_merge_crash_after_staging_recovers(spark, tmp_path, monkeypatch, crash_at):
+    """A merge that dies after staging its batch (or just before the
+    manifest commit) leaves the committed state readable; the next merge
+    sweeps the ``_staging_*`` and version directories it left behind."""
+    from posts_vectorizer_spark.sources import sinks
+
+    target = str(tmp_path / "t")
+    base = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    merge_upsert_parquet(spark, base, target, ["k"])
+    live = set(os.listdir(target))
+
+    def crash(*a, **kw):
+        raise RuntimeError("crash")
+
+    with monkeypatch.context() as m:
+        m.setattr(sinks, crash_at, crash)
+        upd = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
+        with pytest.raises(RuntimeError):
+            merge_upsert_parquet(spark, upd, target, ["k"])
+    left = set(os.listdir(target)) - live
+    assert left  # the crashed merge's staging or version directories
+    got = {r.k: r.v for r in read_merged(spark, target).collect()}
+    assert got == {1: "a", 2: "b"}
+
+    merge_upsert_parquet(spark, upd, target, ["k"])
+    assert not left & set(os.listdir(target))
+    assert not [d for d in os.listdir(target) if d.startswith("_staging_")]
+    got = sorted(tuple(r) for r in read_merged(spark, target).collect())
+    assert got == [(1, "a"), (2, "B"), (3, "c")]
+
+
 def test_interval_join_stream_joins_across_batches(spark, tmp_path):
     """ST9: a click buffered in batch 0 must still match an error arriving
     in batch 1 (stream-stream join state spans micro-batches), and the
@@ -801,10 +916,9 @@ def test_merge_add_ledger_makes_addition_exactly_once(spark, tmp_path):
 
 
 def test_merge_add_probes_sparse_large_state(spark, tmp_path):
-    """The probe skip is for states CONFIGURED with few buckets; a
-    16-bucket additive state that so far fills only 2 buckets must still
-    probe, so a delta touching one bucket leaves the other's files as
-    they were."""
+    """A combining merge rewrites only the buckets its batch wrote: in a
+    16-bucket additive state that so far fills 2 buckets, a delta
+    touching one bucket leaves the other's files as they were."""
     from posts_vectorizer_spark.sources.sinks import (
         _read_manifest,
         merge_add_parquet,

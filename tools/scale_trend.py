@@ -32,12 +32,20 @@ Input scaling is semantics-preserving:
   kernel (executorRunTime includes the JVM thread blocked on the worker;
   see SCALE.md).
 
+- the `sink_merge` entry preloads a (doc_id, dim) merge sink with the
+  doc vectors of 1x/3x/10x plain document copies (shifted doc_ids; plain
+  copies keep every IDF ratio, so the vectors are copies too) and times
+  `merge_upsert_parquet` of ONE fixed 30-post batch into it — 15 edited
+  posts and 15 new ones — recording wall and rows written. Rows written
+  show how much of the sink one merge rewrites; wall shows whether that
+  rewrite or the merge's fixed cost (jobs, commits) dominates.
+
 Expected if the SCALE.md arguments hold: wall grows ~linearly (or better,
 while fixed per-query constants still amortize) and shuffle bytes grow
 ~linearly for the shuffling ops; any super-linear bend is a real finding.
 
 Usage:  python tools/scale_trend.py            # one JSON line on stdout
-        python tools/scale_trend.py ddsketch_quantiles cosine_probe
+        python tools/scale_trend.py ddsketch_quantiles cosine_probe sink_merge
                                                # subset by operator name
 Results table lives in SCALE.md (measured operator scaling).
 """
@@ -734,8 +742,75 @@ def main(only: list[str] | None = None) -> None:
             ),
         }
 
+    if not only or "sink_merge" in only:
+        results["sink_merge"] = sink_merge(
+            spark, materialize("vectors_1x", tfidf.doc_vectors(docs, emb, "en")),
+            copies,
+        )
+
     shutil.rmtree(WORKDIR, ignore_errors=True)
     print(json.dumps({"sf_dir": sf_dir, "scales": SCALES, "operators": results}))
+
+
+def sink_merge(spark, vectors, copies) -> dict:
+    """Wall and rows written of merge_upsert_parquet of one fixed 30-post
+    batch into a (doc_id, dim) sink preloaded with ``copies`` of
+    ``vectors`` at each scale, best of 2."""
+    import time
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from posts_vectorizer_spark.sources.sinks import (
+        _read_manifest,
+        merge_upsert_parquet,
+    )
+
+    ids = [r[0] for r in vectors.select("doc_id").distinct().orderBy("doc_id").take(30)]
+    edits = vectors.where(F.col("doc_id").isin(ids[:15])).withColumn(
+        "component", F.col("component") * 2
+    )
+    new = vectors.where(F.col("doc_id").isin(ids[15:])).withColumn(
+        "doc_id", F.col("doc_id") + F.lit(99 * ID_OFFSET)
+    )
+    batch_path = f"{WORKDIR}/sink_batch.parquet"
+    edits.unionByName(new).write.mode("overwrite").parquet(batch_path)
+    batch = spark.read.parquet(batch_path)
+
+    def bucket_rows(target: str) -> dict[str, int]:
+        return {
+            d: sum(
+                pq.ParquetFile(os.path.join(target, d, f)).metadata.num_rows
+                for f in os.listdir(os.path.join(target, d))
+                if f.endswith(".parquet")
+            )
+            for d in _read_manifest(target)["buckets"].values()
+        }
+
+    runs = []
+    for k in SCALES:
+        target = f"{WORKDIR}/sink_{k}x"
+        merge_upsert_parquet(spark, copies(vectors, "doc_id", k), target, ["doc_id", "dim"])
+        best = None
+        for _ in range(2):
+            before = bucket_rows(target)
+            t0 = time.perf_counter()
+            merge_upsert_parquet(spark, batch, target, ["doc_id", "dim"])
+            wall = time.perf_counter() - t0
+            after = bucket_rows(target)
+            run = {
+                "wall_s": round(wall, 3),
+                "sink_rows": sum(after.values()),
+                "rows_written": sum(n for d, n in after.items() if d not in before),
+            }
+            if best is None or wall < best["wall_s"]:
+                best = run
+        runs.append({"scale": k, **best})
+        print(f"# sink_merge {k}x: {runs[-1]}", file=sys.stderr)
+    return {
+        "runs": runs,
+        "wall_x_at_10x": round(runs[-1]["wall_s"] / max(runs[0]["wall_s"], 1e-9), 1),
+    }
 
 
 if __name__ == "__main__":

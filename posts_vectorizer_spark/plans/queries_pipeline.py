@@ -1234,14 +1234,11 @@ def stream_cms_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # The stream consumes only `text` (+ doc_id for the forced
         # split), written in PARALLEL (8 files per half — the HLL drain's
-        # lesson). n_buckets=4: CMS state is a CONSTANT-SIZE d x w
-        # counter grid (corpus-independent), so its bucket count follows
-        # the state size, not the corpus — 16 buckets just meant 16 tiny
-        # parquet files per micro-batch commit (r12 stage profile: the
-        # staged write's per-file creation cost dominated the merge job).
+        # lesson). The CMS state is a constant-size d x w counter grid,
+        # so the sink keeps it in one bucket.
         state = state_drain(
             spark, docs.select("doc_id", "text"), "doc_id", cms_counters,
-            ["d", "bucket"], files=8, n_buckets=4,
+            ["d", "bucket"], files=8,
         )
     finally:
         warm.join()

@@ -14,6 +14,22 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# The fixtures' ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark's
+# vectorized reader rejects; with this key on it reads as raw nanos that
+# catalog.load_table truncates to micros. The key is read when the scan
+# is planned and again when it runs, after the query builder has
+# returned, so it is session conf (get_spark, prep_session), not a
+# builder's scoped write.
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def default_heap() -> str:
+    """Half the host's physical memory, at most 24 GB: in ``local[N]`` the
+    one JVM holds the driver and every executor thread, and a larger
+    share leaves the Python workers and the page cache too little."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2, 24 << 30) >> 20}m"
+
 
 def get_spark(
     app_name: str = "posts-vectorizer-spark",
@@ -34,6 +50,8 @@ def get_spark(
       oracle and are stable across environments.
     - the core count defaults to ``$SPARK_GRAFT_CPUS``, else the cores this
       process may run on.
+    - the heap defaults to ``$SPARK_DRIVER_MEMORY``, else ``default_heap()``.
+    - ``NANOS_AS_LONG`` is on, as ``prep_session`` sets it.
     """
     cpus = (
         cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
@@ -63,6 +81,7 @@ def get_spark(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
+        .config(NANOS_AS_LONG, "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         # the console progress bar writes `[Stage n:>` to stdout, where it
@@ -70,11 +89,14 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         # local[N] hosts driver AND all executor threads in ONE JVM, so this
         # is the whole-engine heap. 8g forced concurrent full GCs mid-query
-        # under 32 threads (observed: identical bench queries swinging 2-3x
-        # run-to-run; 24g removed the swings entirely — 8.7s vs 24.4s
-        # headline total on the same warm machine). On a real cluster this
-        # moves to spark.executor.memory.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # under 32 threads on a 32-core host, where 24g removed the swings
+        # (8.7 s vs 24.4 s headline total); a fixed 24g on a 15 GB host let
+        # a long session grow until the kernel's OOM killer ended it. On a
+        # real cluster this moves to spark.executor.memory.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_heap(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -99,8 +121,11 @@ def prep_session(spark: SparkSession) -> SparkSession:
       must hold when the lazy plan is OPTIMIZED, after the query builder
       has returned, so a builder cannot set and restore it around its own
       body.
+    - ``NANOS_AS_LONG`` = true, for the events table's nanosecond
+      timestamps; it must hold when the scan runs, for the same reason.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set(NANOS_AS_LONG, "true")
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     # See get_spark: stops redundant inferred explode filters from
     # re-evaluating expensive computed arrays below exchanges. Purely an

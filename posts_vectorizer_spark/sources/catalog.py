@@ -163,17 +163,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pushed into this scan by Catalyst — do not pre-collect or cache here.
 
     ``events.ts`` is written as parquet TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects outright. Read it as raw nanos
-    (``nanosAsLong``) and truncate to microseconds — the same truncation
-    DuckDB applies when it coerces TIMESTAMP_NS to its native
-    microsecond TIMESTAMP, so both engines see identical instants.
+    vectorized reader rejects outright. It reads as raw nanos under
+    ``session.NANOS_AS_LONG`` (a ``get_spark``/``prep_session`` key; this
+    function writes no session conf) and is truncated to microseconds —
+    the same truncation DuckDB applies when it coerces TIMESTAMP_NS to its
+    native microsecond TIMESTAMP, so both engines see identical instants.
     """
     key = (spark.sparkContext.applicationId, sf_dir, name)
     cached = _SCAN_CACHE.get(key)
     if cached is not None:
         return cached
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         # Only NANOS columns surface as long under nanosAsLong; an events
         # file written with standard MICROS precision (e.g. test fixtures)

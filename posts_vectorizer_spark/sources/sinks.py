@@ -12,6 +12,16 @@ with Delta-like mechanics and Delta-like cost:
   not O(table); how many a batch touches depends on how its keys hash (a
   whole-key hash spreads one post's ``(doc_id, dim)`` rows over every
   bucket).
+* **Buckets sized to the data** — the bucket count is derived, not
+  configured: ``max(n, next_pow2(ceil(stored_bytes / TARGET_BUCKET_BYTES)))``
+  with the 128 MiB target of Spark's ``maxPartitionBytes``, so one bucket
+  is one scan split. The manifest records each bucket's parquet bytes at
+  commit, so sizing lists nothing. A new table starts with one bucket
+  (or the caller's floor); when the count grows, that merge re-buckets
+  every stored bucket under the same manifest commit, and it never
+  shrinks. Below the target every file, task and listing a bucket costs
+  is fixed cost per merge, not rows (Delta compacts toward a target file
+  size for the same reason).
 * **Staged first** — one job writes the incoming batch (upserts, or CDC
   changes with their op column) into ``_staging_<v>``, partitioned by
   ``_bucket``; that is the only pass over the caller's plan, so nothing is
@@ -59,7 +69,9 @@ from pyspark.sql.types import (
 )
 
 MANIFEST = "_MANIFEST.json"
-DEFAULT_BUCKETS = 16
+# Spark's default ``spark.sql.files.maxPartitionBytes``: one bucket is one
+# scan split.
+TARGET_BUCKET_BYTES = 128 * 1024 * 1024
 
 
 def _manifest_path(target_dir: str) -> str:
@@ -98,6 +110,24 @@ def _sweep_orphans(target_dir: str, manifest: dict | None) -> None:
 def _bucket_col(keys: list[str], n_buckets: int) -> F.Column:
     # Murmur3 with Spark's fixed seed: deterministic across sessions/runs.
     return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
+
+
+def _bucket_count(manifest: dict | None, floor: int | None) -> int:
+    """The table's bucket count for this merge: ``floor`` (else 1) on a
+    first write; after that the stored count, grown to the next power of
+    two that holds the stored bytes at ``TARGET_BUCKET_BYTES`` each."""
+    if manifest is None:
+        return floor or 1
+    need = -(-sum(manifest["bytes"].values()) // TARGET_BUCKET_BYTES)
+    return max(manifest["n_buckets"], 1 << max(need - 1, 0).bit_length())
+
+
+def _parquet_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
 
 
 def _bucket_dirs(root: str) -> dict[str, str]:
@@ -150,13 +180,14 @@ def merge_upsert_parquet(
     updates: DataFrame,
     target_dir: str,
     keys: list[str],
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: int | None = None,
     order_col: str | None = None,
 ) -> None:
     """Upsert ``updates`` into the bucketed parquet table at ``target_dir``
     keyed on ``keys``: matched rows are replaced, new rows inserted. Updates
     must be unique per key (caller aggregates first), mirroring the per-_id
-    $set. ``n_buckets`` applies on first write; existing tables keep theirs.
+    $set. ``n_buckets`` is a floor for the first write; after that the
+    bucket count follows the stored bytes (module docstring).
 
     With ``order_col`` set (a monotone per-key version/sequence column,
     stored in the table), the merge is ORDERED: an incoming row wins only
@@ -179,7 +210,7 @@ def apply_cdc_parquet(
     target_dir: str,
     keys: list[str],
     op_col: str = "_op",
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: int | None = None,
 ) -> None:
     """Apply a CDC batch (``op_col`` = 'I' insert / 'U' update / 'D'
     delete) to the bucketed table — the full
@@ -203,7 +234,7 @@ def merge_add_parquet(
     deltas: DataFrame,
     target_dir: str,
     keys: list[str],
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: int | None = None,
     batch_id: int | None = None,
 ) -> None:
     """ADDITIVE merge: matched rows SUM every non-key column with the
@@ -229,7 +260,7 @@ def merge_max_parquet(
     deltas: DataFrame,
     target_dir: str,
     keys: list[str],
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: int | None = None,
     batch_id: int | None = None,
 ) -> None:
     """DOMINANCE merge (r9): matched rows take the MAX of every non-key
@@ -249,7 +280,7 @@ def merge_min_parquet(
     deltas: DataFrame,
     target_dir: str,
     keys: list[str],
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: int | None = None,
     batch_id: int | None = None,
 ) -> None:
     """DOMINANCE merge, MIN direction (r10): matched rows take the MIN
@@ -270,7 +301,7 @@ def _merge_parquet(
     batch: DataFrame,
     target_dir: str,
     keys: list[str],
-    n_buckets: int,
+    n_buckets: int | None,
     order_col: str | None = None,
     combine: str = "replace",
     batch_id: int | None = None,
@@ -285,8 +316,7 @@ def _merge_parquet(
     ):
         return  # replayed batch: the ledger says it is already applied
     _sweep_orphans(target_dir, manifest)
-    if manifest is not None:
-        n_buckets = manifest["n_buckets"]
+    n_buckets = _bucket_count(manifest, n_buckets)
     old_buckets: dict[str, str] = (manifest or {"buckets": {}})["buckets"]
     schema = _table_schema(manifest, batch, op_col)
     staged_fields = list(schema.fields)
@@ -303,7 +333,11 @@ def _merge_parquet(
         _bucket_col(keys, n_buckets).alias("_bucket"),
     ).write.partitionBy("_bucket").parquet(staging)
     staged_buckets = _bucket_dirs(staging)
-    touched = [b for b in staged_buckets if b in old_buckets]
+    if manifest is not None and not staged_buckets:
+        n_buckets = manifest["n_buckets"]  # an empty batch re-buckets nothing
+    # A grown bucket count re-buckets every stored bucket in this merge.
+    regrow = manifest is not None and n_buckets != manifest["n_buckets"]
+    touched = [b for b in old_buckets if regrow or b in staged_buckets]
     staged_reader = spark.read.schema(StructType(staged_fields)).option(
         "basePath", staging  # the bucket dirs' names give back ``_bucket``
     )
@@ -325,28 +359,36 @@ def _merge_parquet(
     else:
         # Last batch wins: the staged files ARE the incoming rows of each
         # bucket; only the stored rows they do not replace are written.
+        new_dirs = dict(staged_buckets)
         if touched:
-            replaced = staged_reader.parquet(*[staged_buckets[b] for b in touched])
+            replaced = staged_reader.parquet(*staged_buckets.values())
             current.join(replaced.select(*keys), keys, "left_anti") \
                 .write.partitionBy("_bucket").parquet(out)
             for b, src in _bucket_dirs(out).items():
+                if b not in new_dirs:  # re-bucketed stored rows alone
+                    new_dirs[b] = src
+                    continue
                 for f in os.listdir(src):
-                    os.rename(os.path.join(src, f), os.path.join(staged_buckets[b], f))
-        new_dirs = staged_buckets
+                    os.rename(os.path.join(src, f), os.path.join(new_dirs[b], f))
 
-    new_buckets = dict(old_buckets)
-    # A touched bucket with no output was emptied by deletes: its stale
-    # version must go.
-    for b in staged_buckets:
-        new_buckets.pop(b, None)
+    # Buckets the batch staged are rewritten (all of them when re-bucketing);
+    # a touched bucket with no output was emptied by deletes, so its stale
+    # version goes.
+    kept = {} if regrow else {
+        b: d for b, d in old_buckets.items() if b not in staged_buckets
+    }
+    new_buckets = dict(kept)
+    new_bytes = {b: manifest["bytes"][b] for b in kept}
     for b, src in new_dirs.items():
         new_buckets[b] = f"b{b}_v{version}"
-        os.rename(src, os.path.join(target_dir, new_buckets[b]))
+        dst = os.path.join(target_dir, new_buckets[b])
+        os.rename(src, dst)
+        new_bytes[b] = _parquet_bytes(dst)
     shutil.rmtree(staging, ignore_errors=True)
 
     new_manifest = {
         "n_buckets": n_buckets, "keys": list(keys),
-        "schema": schema.jsonValue(), "buckets": new_buckets,
+        "schema": schema.jsonValue(), "buckets": new_buckets, "bytes": new_bytes,
     }
     if batch_id is not None or (manifest or {}).get("applied"):
         applied = list((manifest or {}).get("applied", []))

@@ -31,7 +31,7 @@ from contextlib import nullcontext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.catalog import scratch_dir
-from ..sources.sinks import DEFAULT_BUCKETS, merge_add_parquet, read_merged
+from ..sources.sinks import merge_add_parquet, read_merged
 from .worker import merge_stream, state_scoped_partitions
 
 TIMEOUT_S = 300
@@ -94,11 +94,10 @@ def state_drain(
     keys: list[str],
     files: int = 1,
     merge=merge_add_parquet,
-    n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
     """Stream ``df`` in two forced micro-batches (``halves`` on
     ``split_col``, ``files`` per half and per trigger) through
-    ``merge_stream(delta, keys, merge, n_buckets)`` and return the merged
+    ``merge_stream(delta, keys, merge)`` and return the merged
     state. The combiners are commutative, so for a delta that composes
     over the split (row-wise statistics over any split; journey
     transitions over a user-disjoint ``split_col``) the state equals
@@ -118,7 +117,7 @@ def state_drain(
         halves(df, split_col, files),
     )
     state_dir = drain(spark, lambda out, ckpt: merge_stream(
-        spark, source, df.schema, out, ckpt, delta, keys, merge, n_buckets,
+        spark, source, df.schema, out, ckpt, delta, keys, merge,
         max_files_per_trigger=files,
     ))
     state = read_merged(spark, state_dir)

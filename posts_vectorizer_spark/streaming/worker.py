@@ -36,11 +36,7 @@ from pyspark.sql.window import Window
 
 from ..cache import persist_tracked
 from ..operators import tfidf
-from ..sources.sinks import (
-    DEFAULT_BUCKETS,
-    merge_add_parquet,
-    merge_upsert_parquet,
-)
+from ..sources.sinks import merge_add_parquet, merge_upsert_parquet
 
 
 from contextlib import contextmanager
@@ -108,7 +104,7 @@ class HeartbeatListener(StreamingQueryListener):
 
 
 def _micro_batch_vectors(
-    batch_docs: DataFrame, word_vectors: DataFrame, lang: str
+    batch_docs: DataFrame, word_vectors: DataFrame, embeddings: DataFrame, lang: str
 ) -> DataFrame:
     """The worker's per-batch pipeline (worker.py:110-126): tokenize -> TF ->
     join stored word vectors -> weighted sum, long form. Same shapes as
@@ -122,8 +118,9 @@ def _micro_batch_vectors(
         .groupBy("doc_id", "vec_id")
         .agg(F.sum(F.col("tf") * F.col("idf")).alias("weight"))
     )
+    # vec_id is unique in the embeddings table: no per-batch distinct
     exploded = weights.join(
-        F.broadcast(word_vectors.select("vec_id", "embedding").distinct()), "vec_id"
+        F.broadcast(embeddings.select("vec_id", "embedding")), "vec_id"
     ).select("doc_id", "weight", F.posexplode("embedding").alias("dim", "val"))
     return exploded.groupBy("doc_id", "dim").agg(
         F.round(F.sum(F.col("weight") * F.col("val").cast("double")), 6).alias(
@@ -315,7 +312,6 @@ def lsh_index_stream(
     index_dir: str,
     checkpoint_dir: str,
     dims: int,
-    n_buckets: int = 16,
     max_files_per_trigger: int | None = None,
 ):
     """Streaming ANN index maintenance: consume a stream of embedding rows
@@ -345,9 +341,7 @@ def lsh_index_stream(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert_parquet(
-            spark, batch_df, index_dir, ["vec_id"], n_buckets
-        )
+        merge_upsert_parquet(spark, batch_df, index_dir, ["vec_id"])
 
     return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
@@ -358,7 +352,6 @@ def minhash_index_stream(
     schema,
     index_dir: str,
     checkpoint_dir: str,
-    n_buckets: int = 16,
     max_files_per_trigger: int | None = None,
 ):
     """Streaming dedup-index maintenance: consume a stream of documents
@@ -380,9 +373,7 @@ def minhash_index_stream(
     stream = _banded(minhash_signatures(stream))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert_parquet(
-            spark, batch_df, index_dir, ["doc_id", "band_id"], n_buckets
-        )
+        merge_upsert_parquet(spark, batch_df, index_dir, ["doc_id", "band_id"])
 
     return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
@@ -520,7 +511,6 @@ def upsert_stream(
     checkpoint_dir: str,
     keys: list[str],
     order_col: str | None = None,
-    n_buckets: int = 16,
     max_files_per_trigger: int | None = None,
     ordered_sink: bool = False,
 ):
@@ -552,7 +542,7 @@ def upsert_stream(
                 batch, keys, order_col, keep_order=ordered_sink
             )
         merge_upsert_parquet(
-            spark, batch, target_dir, keys, n_buckets,
+            spark, batch, target_dir, keys,
             order_col=order_col if ordered_sink else None,
         )
 
@@ -568,7 +558,6 @@ def cdc_apply_stream(
     keys: list[str],
     op_col: str = "_op",
     order_col: str | None = None,
-    n_buckets: int = 16,
     max_files_per_trigger: int | None = None,
 ):
     """CDC ingestion: consume a changelog stream (rows tagged ``op_col`` =
@@ -593,7 +582,7 @@ def cdc_apply_stream(
         batch = batch_df
         if order_col is not None:
             batch = _compact_last_per_key(batch, keys, order_col)
-        apply_cdc_parquet(spark, batch, target_dir, keys, op_col, n_buckets)
+        apply_cdc_parquet(spark, batch, target_dir, keys, op_col)
 
     return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
@@ -608,7 +597,6 @@ def vectorize_stream(
     lang: str = "en",
     heartbeat_path: str | None = None,
     available_now: bool = True,
-    n_buckets: int = 16,
 ):
     """Start the streaming worker over parquet files landing in source_dir.
 
@@ -616,10 +604,10 @@ def vectorize_stream(
     input and stops (the testable mode); False runs continuously with a
     0-second processing trigger like the reference's tight poll loop.
 
-    ``n_buckets`` sizes the merge target's hash-bucketing (first write only):
-    per-batch merge cost is O(touched buckets), so size it so one bucket ≈
-    one comfortable rewrite (e.g. 64k buckets for a 100 TB target -> ~1.5 GB
-    per bucket).
+    The merge target sizes its own hash-bucketing: one bucket per 128 MiB
+    of stored parquet (sources/sinks.py), so a small sink is one bucket
+    and a 100 TB one grows to 2^20. Per-batch merge cost is O(touched
+    buckets) of that size.
     """
     # The dimension table is small (vocab-sized) and reused every batch.
     # Tracked, so release_caches() frees it with the IDF caches it was
@@ -637,8 +625,8 @@ def vectorize_stream(
     stream = spark.readStream.schema(schema).parquet(source_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = _micro_batch_vectors(batch_df, word_vectors, lang)
-        merge_upsert_parquet(spark, out, target_dir, ["doc_id", "dim"], n_buckets)
+        out = _micro_batch_vectors(batch_df, word_vectors, embeddings, lang)
+        merge_upsert_parquet(spark, out, target_dir, ["doc_id", "dim"])
 
     writer = stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -689,8 +677,7 @@ def idf_count_stream(
             F.count("*").cast("bigint").alias("n_docs")
         ).select(F.lit("corpus").alias("scope"), "n_docs")
         merge_add_parquet(
-            spark, doc_delta, docs_dir, ["scope"], n_buckets=1,
-            batch_id=batch_id,
+            spark, doc_delta, docs_dir, ["scope"], batch_id=batch_id
         )
 
     return start_foreach_batch(stream, process_batch, checkpoint_dir)
@@ -705,7 +692,6 @@ def merge_stream(
     delta,
     keys: list[str],
     merge=merge_add_parquet,
-    n_buckets: int = DEFAULT_BUCKETS,
     max_files_per_trigger: int | None = None,
 ):
     """Incremental combining-state maintenance: each micro-batch's
@@ -723,16 +709,11 @@ def merge_stream(
 
     At 100 TB: per-batch cost is the batch's own delta (one
     map-side-combinable aggregate) plus O(touched buckets) of the state
-    table. ``n_buckets`` sizes that table on its first write: a
-    constant-size state (a sketch grid, a register file) wants few
-    buckets, since every bucket is one file per micro-batch commit."""
+    table, which sizes its own buckets from its stored bytes."""
     stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge(
-            spark, delta(batch_df), state_dir, keys, n_buckets=n_buckets,
-            batch_id=batch_id,
-        )
+        merge(spark, delta(batch_df), state_dir, keys, batch_id=batch_id)
 
     return start_foreach_batch(stream, process_batch, checkpoint_dir)
 

@@ -210,3 +210,31 @@ def test_markov_stationary_planted_two_state_chain(spark, tmp_path):
     # converging toward (2/3, 1/3)
     assert abs(out["a"]["pi_step3"] - 2 / 3) < 0.05
     assert abs(out["b"]["pi_step3"] - 1 / 3) < 0.05
+
+
+
+def test_events_query_leaves_session_conf_unchanged(spark, monkeypatch):
+    """Reading the events table's nanosecond timestamps needs
+    ``NANOS_AS_LONG`` when the scan runs, so it is a prep_session key:
+    after prep_session, building and running an events query writes no
+    session conf of its own (the builder is called unwrapped, since the
+    registry wrapper re-applies prep_session)."""
+    from posts_vectorizer_spark.plans.queries_events import events_tumbling_window
+    from posts_vectorizer_spark.session import NANOS_AS_LONG, prep_session
+    from tests.conftest import SF_SMOKE
+
+    spark.conf.unset(NANOS_AS_LONG)
+    prep_session(spark)
+    before = dict(spark.conf.getAll)
+    writes = []
+    real_set = type(spark.conf).set
+
+    def spy(self, key, value):
+        writes.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(type(spark.conf), "set", spy)
+    df = events_tumbling_window(spark, SF_SMOKE)
+    assert df.count() > 0
+    assert writes == []
+    assert dict(spark.conf.getAll) == before

@@ -533,17 +533,26 @@ def test_cdc_first_write_stores_no_deleted_key(spark, tmp_path):
     assert sorted(tuple(r) for r in got.collect()) == [(1, "a"), (3, "c")]
 
 
-@pytest.mark.parametrize("crash_at", ["_bucket_dirs", "_write_manifest_atomic"])
-def test_merge_crash_after_staging_recovers(spark, tmp_path, monkeypatch, crash_at):
+@pytest.mark.parametrize("crash_at,grow", [
+    pytest.param(at, grow, id=f"regrow-{at}" if grow else at)
+    for grow in (False, True)
+    for at in ("_bucket_dirs", "_write_manifest_atomic")
+])
+def test_merge_crash_after_staging_recovers(spark, tmp_path, monkeypatch, crash_at, grow):
     """A merge that dies after staging its batch (or just before the
     manifest commit) leaves the committed state readable; the next merge
-    sweeps the ``_staging_*`` and version directories it left behind."""
+    sweeps the ``_staging_*`` and version directories it left behind.
+    With ``grow`` the crashed and the recovering merge re-bucket the
+    table."""
     from posts_vectorizer_spark.sources import sinks
 
     target = str(tmp_path / "t")
     base = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
     merge_upsert_parquet(spark, base, target, ["k"])
     live = set(os.listdir(target))
+    if grow:  # two target sizes' worth of stored bytes: the next merge re-buckets
+        stored = sum(sinks._read_manifest(target)["bytes"].values())
+        monkeypatch.setattr(sinks, "TARGET_BUCKET_BYTES", stored // 2)
 
     def crash(*a, **kw):
         raise RuntimeError("crash")
@@ -563,6 +572,74 @@ def test_merge_crash_after_staging_recovers(spark, tmp_path, monkeypatch, crash_
     assert not [d for d in os.listdir(target) if d.startswith("_staging_")]
     got = sorted(tuple(r) for r in read_merged(spark, target).collect())
     assert got == [(1, "a"), (2, "B"), (3, "c")]
+    assert (sinks._read_manifest(target)["n_buckets"] > 1) == grow
+
+
+def _bucket_bytes(target: str, manifest: dict) -> dict[str, int]:
+    """Parquet bytes on disk per bucket of the committed manifest."""
+    return {
+        b: sum(
+            os.path.getsize(os.path.join(target, d, f))
+            for f in os.listdir(os.path.join(target, d))
+            if f.endswith(".parquet")
+        )
+        for b, d in manifest["buckets"].items()
+    }
+
+
+def test_default_sink_is_one_bucket_with_recorded_bytes(spark, tmp_path):
+    """A sink far below the 128 MiB bucket target is one bucket, and the
+    manifest's per-bucket bytes are the parquet bytes on disk."""
+    from posts_vectorizer_spark.sources.sinks import _read_manifest
+
+    target = str(tmp_path / "t")
+    base = spark.createDataFrame([(k, "v") for k in range(200)], "k long, v string")
+    merge_upsert_parquet(spark, base, target, ["k"])
+    upd = spark.createDataFrame([(5, "V"), (500, "n")], "k long, v string")
+    merge_upsert_parquet(spark, upd, target, ["k"])
+    manifest = _read_manifest(target)
+    assert manifest["n_buckets"] == 1 and list(manifest["buckets"]) == ["0"]
+    assert manifest["bytes"] == _bucket_bytes(target, manifest)
+    assert read_merged(spark, target).count() == 201
+
+
+def test_merge_grows_buckets_to_stored_bytes(spark, tmp_path, monkeypatch):
+    """With a bucket target of a few KB, the next merge re-buckets the
+    table to a power of two above 1: every row stays readable, each
+    stored row sits in bucket ``pmod(hash(k), n)``, and a later one-key
+    merge at that size rewrites exactly one bucket."""
+    from posts_vectorizer_spark.sources import sinks
+
+    target = str(tmp_path / "t")
+    base = spark.createDataFrame(
+        [(k, f"v{k:05d}" * 8) for k in range(2000)], "k long, v string"
+    )
+    merge_upsert_parquet(spark, base, target, ["k"])
+    assert sinks._read_manifest(target)["n_buckets"] == 1
+    monkeypatch.setattr(sinks, "TARGET_BUCKET_BYTES", 4096)
+    upd = spark.createDataFrame([(7, "V"), (5000, "n")], "k long, v string")
+    merge_upsert_parquet(spark, upd, target, ["k"])
+    manifest = sinks._read_manifest(target)
+    n = manifest["n_buckets"]
+    assert n > 1 and n & (n - 1) == 0
+    assert manifest["bytes"] == _bucket_bytes(target, manifest)
+    want = {k: f"v{k:05d}" * 8 for k in range(2000)} | {7: "V", 5000: "n"}
+    assert {r.k: r.v for r in read_merged(spark, target).collect()} == want
+    for b, d in manifest["buckets"].items():
+        rows = spark.read.parquet(os.path.join(target, d))
+        wrong = rows.where(F.pmod(F.hash("k"), F.lit(n)) != int(b)).count()
+        assert wrong == 0
+
+    # the grown count stays; a one-key merge touches one bucket
+    monkeypatch.setattr(sinks, "TARGET_BUCKET_BYTES", 128 * 1024 * 1024)
+    merge_upsert_parquet(
+        spark, spark.createDataFrame([(11, "W")], "k long, v string"), target, ["k"]
+    )
+    after = sinks._read_manifest(target)
+    assert after["n_buckets"] == n
+    changed = {b for b in after["buckets"] if after["buckets"][b] != manifest["buckets"].get(b)}
+    assert len(changed) == 1
+    assert {r.k: r.v for r in read_merged(spark, target).collect()} == want | {11: "W"}
 
 
 def test_interval_join_stream_joins_across_batches(spark, tmp_path):

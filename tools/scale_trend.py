@@ -36,9 +36,10 @@ Input scaling is semantics-preserving:
   doc vectors of 1x/3x/10x plain document copies (shifted doc_ids; plain
   copies keep every IDF ratio, so the vectors are copies too) and times
   `merge_upsert_parquet` of ONE fixed 30-post batch into it — 15 edited
-  posts and 15 new ones — recording wall and rows written. Rows written
+  posts and 15 new ones — recording wall, rows written and the sink's
+  layout after the merge (bucket count and parquet files). Rows written
   show how much of the sink one merge rewrites; wall shows whether that
-  rewrite or the merge's fixed cost (jobs, commits) dominates.
+  rewrite or the merge's fixed cost (jobs, files, commits) dominates.
 
 Expected if the SCALE.md arguments hold: wall grows ~linearly (or better,
 while fixed per-query constants still amortize) and shuffle bytes grow
@@ -753,9 +754,10 @@ def main(only: list[str] | None = None) -> None:
 
 
 def sink_merge(spark, vectors, copies) -> dict:
-    """Wall and rows written of merge_upsert_parquet of one fixed 30-post
-    batch into a (doc_id, dim) sink preloaded with ``copies`` of
-    ``vectors`` at each scale, best of 2."""
+    """Wall, rows written and layout (``n_buckets``, parquet ``files``)
+    of merge_upsert_parquet of one fixed 30-post batch into a (doc_id,
+    dim) sink preloaded with ``copies`` of ``vectors`` at each scale,
+    best of 2."""
     import time
 
     import pyarrow.parquet as pq
@@ -777,14 +779,20 @@ def sink_merge(spark, vectors, copies) -> dict:
     edits.unionByName(new).write.mode("overwrite").parquet(batch_path)
     batch = spark.read.parquet(batch_path)
 
-    def bucket_rows(target: str) -> dict[str, int]:
+    def bucket_files(target: str) -> dict[str, list[str]]:
         return {
-            d: sum(
-                pq.ParquetFile(os.path.join(target, d, f)).metadata.num_rows
+            d: [
+                os.path.join(target, d, f)
                 for f in os.listdir(os.path.join(target, d))
                 if f.endswith(".parquet")
-            )
+            ]
             for d in _read_manifest(target)["buckets"].values()
+        }
+
+    def bucket_rows(files: dict[str, list[str]]) -> dict[str, int]:
+        return {
+            d: sum(pq.ParquetFile(f).metadata.num_rows for f in fs)
+            for d, fs in files.items()
         }
 
     runs = []
@@ -793,15 +801,18 @@ def sink_merge(spark, vectors, copies) -> dict:
         merge_upsert_parquet(spark, copies(vectors, "doc_id", k), target, ["doc_id", "dim"])
         best = None
         for _ in range(2):
-            before = bucket_rows(target)
+            before = bucket_rows(bucket_files(target))
             t0 = time.perf_counter()
             merge_upsert_parquet(spark, batch, target, ["doc_id", "dim"])
             wall = time.perf_counter() - t0
-            after = bucket_rows(target)
+            files = bucket_files(target)
+            after = bucket_rows(files)
             run = {
                 "wall_s": round(wall, 3),
                 "sink_rows": sum(after.values()),
                 "rows_written": sum(n for d, n in after.items() if d not in before),
+                "n_buckets": _read_manifest(target)["n_buckets"],
+                "files": sum(len(fs) for fs in files.values()),
             }
             if best is None or wall < best["wall_s"]:
                 best = run

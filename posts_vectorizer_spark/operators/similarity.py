@@ -626,6 +626,20 @@ def lsh_bucket_sql(vec: str, dims: int, planes: int = LSH_PLANES) -> str:
     return f"CAST({bits} AS BIGINT)"
 
 
+def lsh_index_rows(df: DataFrame, dims: int, planes: int = LSH_PLANES) -> DataFrame:
+    """(vec_id, embedding, bucket, nrm): the LSH index rows of an
+    embeddings relation — hyperplane bucket code and norm per vector.
+    ``lsh_ann`` builds its bucketed relation with this, and the
+    stream_lsh_index_drain stream materializes the same rows as a
+    standing index table keyed on vec_id."""
+    return df.select(
+        "vec_id",
+        "embedding",
+        lsh_bucket("embedding", dims, planes).alias("bucket"),
+        V.norm("embedding").alias("nrm"),
+    )
+
+
 PROBE_BLOCK = 1024
 
 
@@ -774,10 +788,10 @@ def lsh_ann(
     # viral-bucket guard) the bucket-count agg all fan out from it — the
     # planes x dims projection fold is the expensive part of this query
     # and must run once per vector, not once per consumer. An ``index``
-    # DataFrame (vec_id, embedding, bucket, nrm — e.g. the table
-    # streaming.lsh_index_stream maintains) skips that computation
+    # DataFrame (``lsh_index_rows`` materialized as a table, as
+    # stream_lsh_index_drain maintains it) skips that computation
     # entirely: the standing index IS the bucketed relation.
-    # The raw-embedding path spreads the scan before the fold (r13): the
+    # The raw-embedding path spreads the scan before the fold: the
     # planes x dims projection is an interpreted per-row HOF chain and ran
     # single-task behind the one-split fixture scan; the gated rebalance
     # parallelizes it INTO the persist, so it still runs once per vector,
@@ -786,12 +800,7 @@ def lsh_ann(
     from ..sources import spread
 
     bucketed = persist_tracked(
-        spread(embeddings).select(
-            "vec_id",
-            "embedding",
-            lsh_bucket("embedding", dims, planes).alias("bucket"),
-            V.norm("embedding").alias("nrm"),
-        )
+        lsh_index_rows(spread(embeddings), dims, planes)
         if index is None
         else index.select("vec_id", "embedding", "bucket", "nrm")
     )

@@ -189,11 +189,15 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_minhash_index_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The standing dedup index, maintained BY A STREAM and probed from
     the table: drain the existing corpus (doc_id % 5 != 0) through
-    streaming/worker.py::minhash_index_stream (bands computed at ingest,
-    keyed MERGE on (doc_id, band_id)), then probe the newly ingested
-    batch's band rows against the materialized index and Jaccard-verify.
-    The oracle is dedup_incremental_minhash's SQL — the table-served
-    probe must answer identically to in-plan banding of the base corpus."""
+    ``upsert_stream`` — per row the shingle set, signature and band codes
+    are computed in-stream (the tokenize+hash+min-fold cost is paid once,
+    at ingest), then the (doc_id, band_id, band_value) rows keyed-MERGE
+    on (doc_id, band_id), so a re-delivered doc idempotently replaces its
+    own band rows and an edited doc re-bands in place. The newly ingested
+    batch's band rows are then probed against the materialized index and
+    Jaccard-verified, never re-banding the corpus. The oracle is
+    dedup_incremental_minhash's SQL — the table-served probe must answer
+    identically to in-plan banding of the base corpus."""
     from pyspark.sql import functions as F
 
     from ..cache import persist_tracked
@@ -204,7 +208,7 @@ def stream_minhash_index_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
         probe_bands,
     )
-    from ..streaming import minhash_index_stream
+    from ..streaming import upsert_stream
     from ..streaming.drain import drain, merged_or_empty, source_copy
 
     docs = load_table(spark, sf_dir, "documents")
@@ -213,8 +217,9 @@ def stream_minhash_index_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"minhash_index:{sf_dir}",
         lambda p: base.coalesce(1).write.mode("append").parquet(p),
     )
-    index_dir = drain(spark, lambda out, ckpt: minhash_index_stream(
-        spark, source, base.schema, out, ckpt
+    index_dir = drain(spark, lambda out, ckpt: upsert_stream(
+        spark, source, base.schema, out, ckpt, ["doc_id", "band_id"],
+        rows=lambda b: _banded(minhash_signatures(b)),
     ))
     base_bands = merged_or_empty(
         spark, index_dir, "doc_id bigint, band_id int, band_value string"

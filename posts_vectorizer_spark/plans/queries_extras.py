@@ -551,12 +551,14 @@ FROM last WHERE op <> 'D'
 def stream_cdc_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST1/ST3+S4 CDC ingest, oracle-checkable: synthesize a changelog
     from events (signup/view->I, click/purchase->U, error->D; seq =
-    event_id), drain it through streaming/worker.py::cdc_apply_stream
-    (per-batch last-op-per-key compaction, then the full I/U/D MERGE
-    against an empty target), and return the final table: exactly the
-    users whose LAST op is not a delete, carrying that op's value.
+    event_id), drain it through streaming/worker.py::upsert_stream with
+    ``op_col`` set (per-batch last-op-per-key compaction, then the full
+    I/U/D MERGE against an empty target — the Debezium/changefeed-to-
+    lakehouse consumer, with the sink's bucket-pruned rewrite + atomic
+    commit per batch), and return the final table: exactly the users
+    whose LAST op is not a delete, carrying that op's value.
     Deterministic by the single-file/single-batch trick and unique seq."""
-    from ..streaming import cdc_apply_stream
+    from ..streaming import upsert_stream
 
     events = load_table(spark, sf_dir, "events")
     op = (
@@ -574,9 +576,9 @@ def stream_cdc_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).coalesce(1).write.mode("overwrite").parquet(p),
     )
     src_schema = spark.read.parquet(source).schema
-    target = drain(spark, lambda out, ckpt: cdc_apply_stream(
+    target = drain(spark, lambda out, ckpt: upsert_stream(
         spark, source, src_schema, out, ckpt,
-        keys=["user_id"], order_col="seq",
+        keys=["user_id"], order_col="seq", op_col="_op",
     ))
     # empty when every user's last op was a delete
     return merged_or_empty(

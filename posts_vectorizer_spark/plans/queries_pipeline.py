@@ -17,7 +17,7 @@ from pyspark.sql.window import Window
 from ..cache import persist_tracked
 from ..functions import text as _T
 from ..sources import load_table, scratch_dir, spread
-from ..sources.sinks import merge_max_parquet, merge_min_parquet, read_merged
+from ..sources.sinks import merge_max_parquet, merge_min_parquet
 from ..streaming.drain import (
     drain, halves, merged_or_empty, source_copy, state_drain,
 )
@@ -655,26 +655,36 @@ def source_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def stream_lsh_index_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANN index maintenance, end-to-end and hash-checked:
-    drain the embeddings stream into the MATERIALIZED LSH index table
-    (per-row bucket code + norm computed at ingest, keyed MERGE on
-    vec_id — streaming/worker.py::lsh_index_stream), read the standing
-    index back, and serve sim_lsh_ann's top-3 probe FROM THE TABLE
-    (operators/similarity.py::lsh_ann(index=...)). The oracle is the
-    exact same SQL as sim_lsh_ann — the materialized index must answer
-    identically to the in-plan computation, proving the index content is
-    byte-equivalent to a fresh bucketing."""
+    drain the embeddings stream through ``upsert_stream`` into the
+    MATERIALIZED LSH index table — per row the hyperplane bucket code and
+    norm are computed in-stream (``similarity.lsh_index_rows``: the
+    expensive planes×dims projection runs ONCE per vector, at ingest),
+    then keyed-MERGE'd on vec_id, so a re-delivered vector idempotently
+    replaces itself and a changed embedding updates its bucket row in
+    place. The standing index is read back and serves sim_lsh_ann's top-3
+    probe FROM THE TABLE (operators/similarity.py::lsh_ann(index=...)).
+    The oracle is the exact same SQL as sim_lsh_ann — the materialized
+    index must answer identically to the in-plan computation, proving the
+    index content is byte-equivalent to a fresh bucketing.
+
+    At 100 TB this is how the ANN surface stays queryable without
+    re-bucketing the corpus per query: the index table IS the standing
+    build side, and each probe only pays its own bucket join."""
     from ..operators import similarity
-    from ..streaming import lsh_index_stream
+    from ..streaming import upsert_stream
 
     emb = load_table(spark, sf_dir, "embeddings")
     source = source_copy(
         f"lsh_index:{sf_dir}",
         lambda p: emb.coalesce(1).write.mode("append").parquet(p),
     )
-    index_dir = drain(spark, lambda out, ckpt: lsh_index_stream(
-        spark, source, emb.schema, out, ckpt, dims=64
+    index_dir = drain(spark, lambda out, ckpt: upsert_stream(
+        spark, source, emb.schema, out, ckpt, ["vec_id"],
+        rows=lambda b: similarity.lsh_index_rows(b, 64),
     ))
-    index = read_merged(spark, index_dir)
+    index = merged_or_empty(
+        spark, index_dir, similarity.lsh_index_rows(emb, 64).schema
+    )
     return similarity.lsh_ann(emb, 64, 3, index=index)
 
 
@@ -1294,18 +1304,28 @@ from .queries_curation import _QUALITY_GATE_SQL
 
 @register("stream_quality_gate_drain", oracle=_QUALITY_GATE_SQL)
 def stream_quality_gate_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming admission control with a driver row (built r9, staged
-    r10): the unigram LM is fit ONCE on the static corpus (the pinned
-    model state — stream_psi_drift_drain's pattern applied to SCORING,
-    not monitoring); documents then stream in TWO forced micro-batches and
-    each batch's per-doc gate verdicts (length/repetition/LM fail flags
-    + keep) upsert into the standing decision table. Per-doc decisions
-    are independent and the LM is pinned, so the batch split cannot
-    change a single verdict — the oracle is curation_quality_gate's
-    whole-corpus twin, hash-checking the streaming scoring path end to
-    end."""
-    from ..streaming.worker import quality_gate_stream
-    from .queries_curation import unigram_lm
+    """Streaming admission control with a driver row: the unigram LM is
+    fit ONCE on the static corpus (the pinned model state —
+    stream_psi_drift_drain's pattern applied to SCORING, not monitoring);
+    documents then stream in TWO forced micro-batches through
+    ``upsert_stream``, and each batch's per-doc gate verdicts
+    (length/repetition/LM fail flags + keep) upsert into the standing
+    decision table keyed by doc_id (idempotent — a replayed batch
+    rewrites identical rows). Per-doc decisions are independent and the
+    LM is pinned, so the batch split cannot change a single verdict — the
+    oracle is curation_quality_gate's whole-corpus twin, hash-checking
+    the streaming scoring path end to end.
+
+    At 100 TB: per-batch cost is the batch's tokenize + one broadcast
+    join against the vocab-sized LM + O(touched buckets) of the verdict
+    table — admission control over an unbounded ingest stream without
+    ever refitting or rescanning the corpus."""
+    from ..streaming import upsert_stream
+    from .queries_curation import (
+        quality_gate_rows,
+        unigram_lm,
+        unigram_score_against,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     # pin the model: persist + materialize the vocab-sized LM and its
@@ -1313,18 +1333,18 @@ def stream_quality_gate_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state without recomputing over the corpus. Executor-side cache,
     # NOT a driver collect: a unigram vocab grows with the corpus
     # (Heaps' law — tens of millions of rows at 100 TB), so shipping it
-    # through the driver is the one shape that cannot scale (r9 verdict
-    # "What's wrong" #2). The scoring join is already F.broadcast(lm)
-    # inside unigram_score_against — the events_psi_drift pinned-
-    # reference pattern applied to scoring.
+    # through the driver is the one shape that cannot scale. The scoring
+    # join is already F.broadcast(lm) inside unigram_score_against — the
+    # events_psi_drift pinned-reference pattern applied to scoring.
     lm, norm = unigram_lm(docs)
     lm = persist_tracked(lm)
     norm = persist_tracked(norm)
     lm.count()
     norm.count()
     source = source_copy(f"quality_gate:{sf_dir}", halves(docs, "doc_id"))
-    state_dir = drain(spark, lambda out, ckpt: quality_gate_stream(
-        spark, source, docs.schema, lm, norm, out, ckpt,
+    state_dir = drain(spark, lambda out, ckpt: upsert_stream(
+        spark, source, docs.schema, out, ckpt, ["doc_id"],
+        rows=lambda b: quality_gate_rows(b, unigram_score_against(b, lm, norm)),
         max_files_per_trigger=1,
     ))
     return merged_or_empty(
@@ -1368,33 +1388,49 @@ from .queries_sketch import _KMV_SET_OPS_SQL
 
 @register("stream_kmv_drain", oracle=_KMV_SET_OPS_SQL)
 def stream_kmv_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming KMV bottom-k maintenance with a driver row (built r9
-    session 3, staged r10): events stream in TWO forced micro-batches;
-    each batch unions its side-tagged distinct hashes with the standing
+    """Streaming KMV bottom-k maintenance with a driver row: events
+    stream in TWO forced micro-batches through ``upsert_stream``; each
+    batch unions its side-tagged distinct hashes with the standing
     bottom-k state and re-takes the bottom-k, REPLACE-merged under
-    (side, rank) keys (streaming/worker.py::kmv_bottomk_stream). The
-    set-ops readout (per-side estimates, union estimate, KMV Jaccard)
-    is a pure function of the sketch state shared verbatim with the
-    batch query, and bottomk(state ∪ delta) is monotone + idempotent,
-    so the batch split cannot move a single sketch value — the oracle
-    is events_kmv_set_ops' one-pass twin, making the ORDER-STATISTIC
-    merge the fourth driver-hash-checked sketch-maintenance family
-    (DDSketch/CMS merge by +, HLL by max, KMV by bottom-k)."""
-    from ..streaming.worker import kmv_bottomk_stream
-    from .queries_sketch import kmv_set_ops_readout
+    (side, rank) keys (the rank set only ever grows toward k, so no
+    deletes arise). The set-ops readout (per-side estimates, union
+    estimate, KMV Jaccard) is a pure function of the sketch state shared
+    verbatim with the batch query, and bottomk(state ∪ delta) is
+    monotone + idempotent: a replayed batch's values are already
+    at-or-above the standing kth minimum, so replay is a structural no-op
+    and the batch split cannot move a single sketch value — the oracle is
+    events_kmv_set_ops' one-pass twin, making the ORDER-STATISTIC merge
+    the fourth driver-hash-checked sketch-maintenance family
+    (DDSketch/CMS merge by +, HLL by max, KMV by bottom-k).
+
+    At 100 TB: per-batch cost is the batch's salted two-level top-k plus
+    a union with a <= 2k-row state table; the standing state never
+    exceeds k rows per side no matter how many events streamed."""
+    from ..streaming import upsert_stream
+    from .queries_sketch import (
+        kmv_bottomk,
+        kmv_event_hashes,
+        kmv_set_ops_readout,
+    )
 
     events = load_table(spark, sf_dir, "events")
+    state_schema = kmv_bottomk(kmv_event_hashes(events).select("s", "h")).schema
     source = source_copy(f"kmv:{sf_dir}", halves(events, "event_id"))
-    state_dir = drain(spark, lambda out, ckpt: kmv_bottomk_stream(
-        spark, source, events.schema, out, ckpt, max_files_per_trigger=1
-    ))
-    state = read_merged(spark, state_dir)
-    if state is None:
-        return spark.createDataFrame(
-            [],
-            "k_a long, k_b long, k_union long, both_in_union long,"
-            " est_a double, est_b double, est_union double, jaccard double",
+
+    def start(out: str, ckpt: str):
+        def bottomk(batch: DataFrame) -> DataFrame:
+            state = merged_or_empty(spark, out, state_schema).select("s", "h")
+            delta = kmv_event_hashes(batch).select("s", "h")
+            return kmv_bottomk(delta.unionByName(state).distinct())
+
+        return upsert_stream(
+            spark, source, events.schema, out, ckpt, ["s", "r"],
+            rows=bottomk, max_files_per_trigger=1,
         )
+
+    state = merged_or_empty(spark, drain(spark, start), state_schema)
+    # a global aggregate: over an empty state it yields the one
+    # degenerate row, as the oracle does
     return kmv_set_ops_readout(state.select("s", "h"))
 
 

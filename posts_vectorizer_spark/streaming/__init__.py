@@ -1,14 +1,11 @@
 from .stateful import latest_user_totals, stateful_user_totals_stream
 from .worker import (
     HeartbeatListener,
-    cdc_apply_stream,
     dedup_stream,
     enriched_window_stream,
     idf_count_stream,
     interval_join_stream,
-    lsh_index_stream,
     merge_stream,
-    minhash_index_stream,
     session_window_stream,
     state_scoped_partitions,
     tumbling_window_stream,
@@ -18,14 +15,11 @@ from .worker import (
 
 __all__ = [
     "HeartbeatListener",
-    "cdc_apply_stream",
     "dedup_stream",
     "enriched_window_stream",
     "idf_count_stream",
     "interval_join_stream",
-    "lsh_index_stream",
     "merge_stream",
-    "minhash_index_stream",
     "latest_user_totals",
     "session_window_stream",
     "state_scoped_partitions",

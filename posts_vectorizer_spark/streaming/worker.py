@@ -22,12 +22,21 @@ micro-batch; the word-vector dimension table (vocab + idf + embedding) is
 computed once up front from the static corpus — exactly the reference's
 architecture, where the IDF job runs separately and the worker only joins
 stored (vector, idf) (worker.py:57).
+
+The keyed sinks are fed by two builders. ``upsert_stream`` is the poll ->
+transform -> replace-merge loop: ``vectorize_stream`` is it with the
+doc-vector transform, and every index, gate and sketch drain passes its
+own per-batch transform as ``rows``. ``merge_stream`` is the
+combining-state loop (add / max / min merges under a batch-id ledger).
+The stateful streams (dedup, windows, interval join) append to plain
+parquet sinks.
 """
 
 from __future__ import annotations
 
 import json
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQueryListener
@@ -36,10 +45,11 @@ from pyspark.sql.window import Window
 
 from ..cache import persist_tracked
 from ..operators import tfidf
-from ..sources.sinks import merge_add_parquet, merge_upsert_parquet
-
-
-from contextlib import contextmanager
+from ..sources.sinks import (
+    apply_cdc_parquet,
+    merge_add_parquet,
+    merge_upsert_parquet,
+)
 
 
 @contextmanager
@@ -74,17 +84,28 @@ def state_scoped_partitions(spark: SparkSession):
 class HeartbeatListener(StreamingQueryListener):
     """ST4: per-batch heartbeat with elapsed ms (worker.py:128-137,141-144).
     Writes JSON lines to a local file instead of an HTTP GET; failures are
-    swallowed exactly like the reference's bare ``except: print``."""
+    swallowed exactly like the reference's bare ``except: print``.
 
-    def __init__(self, path: str) -> None:
+    A session's listeners hear every query, so the listener binds to ONE:
+    the first query started after it is added (``onQueryStarted`` runs
+    synchronously inside ``start()``, on the starting query's thread). It
+    logs only that query's progress and removes itself from ``streams``
+    when that query terminates, so it never outlives its stream."""
+
+    def __init__(self, path: str, streams) -> None:
         self.path = path
+        self.streams = streams
+        self.query_id: str | None = None
 
     def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
+        if self.query_id is None:
+            self.query_id = str(event.id)
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
+        p = event.progress
+        if str(p.id) != self.query_id:
+            return
         try:
-            p = event.progress
             beat = {
                 "ts": time.time(),
                 "batch_id": p.batchId,
@@ -100,7 +121,8 @@ class HeartbeatListener(StreamingQueryListener):
         pass
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
+        if str(event.id) == self.query_id:
+            self.streams.removeListener(self)
 
 
 def _micro_batch_vectors(
@@ -163,15 +185,19 @@ def file_stream(
     return reader.parquet(source_dir)
 
 
-def start_foreach_batch(stream: DataFrame, process_batch, checkpoint_dir: str):
-    """Start ``stream`` into ``process_batch(batch_df, batch_id)`` with an
-    availableNow trigger: drain what the source holds, then stop."""
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+def start_foreach_batch(
+    stream: DataFrame, process_batch, checkpoint_dir: str, available_now: bool = True
+):
+    """Start ``stream`` into ``process_batch(batch_df, batch_id)``. With
+    ``available_now`` it drains what the source holds, then stops;
+    otherwise it runs continuously on a 0-second processing trigger, the
+    reference's tight poll loop."""
+    writer = stream.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint_dir
     )
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime="0 seconds").start()
 
 
 def start_parquet_sink(stream: DataFrame, target_dir: str, checkpoint_dir: str):
@@ -303,79 +329,6 @@ def enriched_window_stream(
         )
     )
     return start_parquet_sink(agg, target_dir, checkpoint_dir)
-
-
-def lsh_index_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    index_dir: str,
-    checkpoint_dir: str,
-    dims: int,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming ANN index maintenance: consume a stream of embedding rows
-    and maintain the MATERIALIZED LSH index table — per row the hyperplane
-    bucket code and norm are computed in-stream (the expensive planes×dims
-    projection runs ONCE per vector, at ingest), then keyed-MERGE'd into
-    the bucketed parquet index on vec_id. Re-delivered vectors idempotently
-    replace themselves (ST3 contract); a changed embedding updates its
-    bucket row in place.
-
-    At 100 TB this is how the ANN surface stays queryable without
-    re-bucketing the corpus per query: the index table IS the standing
-    build side, and each probe only pays its own bucket join —
-    sim_lsh_ann's plan with the bucketed relation read instead of
-    recomputed (operators/similarity.py::lsh_ann(index=...))."""
-    from ..operators.similarity import lsh_bucket
-    from ..functions import vectors as V
-    from ..sources.sinks import merge_upsert_parquet
-
-    stream = file_stream(
-        spark, source_dir, schema, max_files_per_trigger
-    ).select(
-        "vec_id",
-        "embedding",
-        lsh_bucket("embedding", dims).alias("bucket"),
-        V.norm("embedding").alias("nrm"),
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert_parquet(spark, batch_df, index_dir, ["vec_id"])
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def minhash_index_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    index_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming dedup-index maintenance: consume a stream of documents
-    and maintain the MATERIALIZED MinHash band index — per row the
-    shingle set, signature, and band codes are computed in-stream (the
-    tokenize+hash+min-fold cost is paid once, at ingest), then the
-    (doc_id, band_id, band_value) rows keyed-MERGE into the bucketed
-    index on (doc_id, band_id). Re-delivered docs idempotently replace
-    their own band rows; an edited doc re-bands in place.
-
-    This is the standing index dedup_incremental_minhash probes: each
-    newly ingested batch joins its own band rows against the table and
-    never re-bands the corpus (operators/dedup.py::
-    incremental_minhash_near_dups is the in-plan twin)."""
-    from ..operators.dedup import _banded, minhash_signatures
-    from ..sources.sinks import merge_upsert_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-    stream = _banded(minhash_signatures(stream))
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert_parquet(spark, batch_df, index_dir, ["doc_id", "band_id"])
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
 
 
 def session_window_stream(
@@ -510,81 +463,65 @@ def upsert_stream(
     target_dir: str,
     checkpoint_dir: str,
     keys: list[str],
+    rows=None,
     order_col: str | None = None,
-    max_files_per_trigger: int | None = None,
     ordered_sink: bool = False,
+    op_col: str | None = None,
+    max_files_per_trigger: int | None = None,
+    available_now: bool = True,
 ):
-    """ST1/ST3 in its generic form: consume a stream of keyed records and
-    maintain a last-write-wins materialized table — readStream ->
-    per-batch last-wins compaction (``order_col`` set) -> idempotent keyed
-    MERGE into the bucketed parquet target. The upsert twin of
-    ``cdc_apply_stream`` for sources without explicit I/U/D ops (the
-    common "entity snapshots on a bus" ingest shape). foreachBatch is
-    at-least-once and merge_upsert_parquet is idempotent on keys, so
-    crash/retry converges (ST3 contract).
+    """ST1/ST3: the keyed-upsert loop every replace-merged sink runs —
+    readStream -> per-batch ``rows(batch)`` (the batch itself when None)
+    -> last-wins compaction (``order_col`` set) -> idempotent keyed MERGE
+    into the bucketed parquet target. foreachBatch is at-least-once and
+    the merge is idempotent on keys, so crash/retry converges (ST3
+    contract), and a full redelivery under a fresh checkpoint replaces
+    each row with itself. There is deliberately no batch-id ledger: batch
+    ids restart at 0 under a fresh checkpoint, and a ledger would skip
+    real batches of a re-drain into the same target.
 
-    ``ordered_sink=True`` (requires order_col) stores the order column in
-    the table and merges conditionally — a stored row is replaced only by
-    a >=-ordered incoming row — so convergence holds even when WHOLE
-    BATCHES replay or arrive out of order (a replayed old file can no
-    longer clobber newer state). Plain mode converges only under
-    in-order batch delivery, the default file-source behavior."""
-    from ..sources.sinks import merge_upsert_parquet
+    Compaction keeps the max-``order_col`` row per key; EQUAL order
+    values break on every remaining column in name order (desc, nulls
+    last), so the winner is a deterministic function of the batch
+    contents. Without ``order_col`` the rows must already be unique per
+    key.
 
-    if ordered_sink and order_col is None:
-        raise ValueError("ordered_sink requires order_col")
+    ``op_col`` makes the merge a CDC apply (``sinks.apply_cdc_parquet``):
+    rows tagged 'I'/'U'/'D' in that column insert, update or delete — the
+    Debezium/changefeed-to-lakehouse consumer. Otherwise the merge is
+    ``merge_upsert_parquet``, looked up at batch time so a caller may
+    wrap it (graftbench's traced run times each merge that way).
+
+    ``ordered_sink=True`` (requires order_col, upsert merges only) stores
+    the order column in the table and merges conditionally — a stored row
+    is replaced only by a >=-ordered incoming row — so convergence holds
+    even when WHOLE BATCHES replay or arrive out of order. Plain mode
+    converges only under in-order batch delivery, the default file-source
+    behavior.
+
+    ``available_now=False`` runs the stream continuously instead of
+    draining what the source holds (``start_foreach_batch``)."""
+    if ordered_sink and (order_col is None or op_col is not None):
+        raise ValueError("ordered_sink requires order_col and no op_col")
     stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df
+        batch = batch_df if rows is None else rows(batch_df)
         if order_col is not None:
             batch = _compact_last_per_key(
                 batch, keys, order_col, keep_order=ordered_sink
             )
-        merge_upsert_parquet(
-            spark, batch, target_dir, keys,
-            order_col=order_col if ordered_sink else None,
-        )
+        if op_col is not None:
+            apply_cdc_parquet(spark, batch, target_dir, keys, op_col)
+        else:
+            merge_upsert_parquet(
+                spark, batch, target_dir, keys,
+                order_col=order_col if ordered_sink else None,
+            )
 
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def cdc_apply_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    target_dir: str,
-    checkpoint_dir: str,
-    keys: list[str],
-    op_col: str = "_op",
-    order_col: str | None = None,
-    max_files_per_trigger: int | None = None,
-):
-    """CDC ingestion: consume a changelog stream (rows tagged ``op_col`` =
-    'I'/'U'/'D') and apply each micro-batch to the bucketed merge target —
-    the standard Debezium/changefeed-to-lakehouse consumer, with the
-    sink's bucket-pruned rewrite + atomic commit per batch.
-
-    Each batch is COMPACTED to last-op-per-key before applying: with
-    ``order_col`` set (a monotonic changelog sequence), the row with the
-    max order_col wins; EQUAL order_col values are broken by every
-    remaining column in name order (desc, nulls last), so the winner is a
-    deterministic function of the batch contents. Without order_col, the
-    batch must already be unique per key. foreachBatch is at-least-once,
-    and apply_cdc_parquet is idempotent on keys, so crash/retry converges
-    (ST3 contract).
-    """
-    from ..sources.sinks import apply_cdc_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df
-        if order_col is not None:
-            batch = _compact_last_per_key(batch, keys, order_col)
-        apply_cdc_parquet(spark, batch, target_dir, keys, op_col)
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
+    return start_foreach_batch(
+        stream, process_batch, checkpoint_dir, available_now
+    )
 
 
 def vectorize_stream(
@@ -598,11 +535,14 @@ def vectorize_stream(
     heartbeat_path: str | None = None,
     available_now: bool = True,
 ):
-    """Start the streaming worker over parquet files landing in source_dir.
+    """Start the streaming worker over parquet files landing in source_dir:
+    ``upsert_stream`` with the doc-vector transform, keyed on (doc_id,
+    dim).
 
     Returns the StreamingQuery. With available_now=True it drains existing
     input and stops (the testable mode); False runs continuously with a
     0-second processing trigger like the reference's tight poll loop.
+    ``heartbeat_path`` adds a ``HeartbeatListener`` bound to this query.
 
     The merge target sizes its own hash-bucketing: one bucket per 128 MiB
     of stored parquet (sources/sinks.py), so a small sink is one bucket
@@ -618,24 +558,21 @@ def vectorize_stream(
     )
     word_vectors.count()  # materialize once before the stream starts
 
+    beat = None
     if heartbeat_path:
-        spark.streams.addListener(HeartbeatListener(heartbeat_path))
-
-    schema = corpus_docs.schema
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = _micro_batch_vectors(batch_df, word_vectors, embeddings, lang)
-        merge_upsert_parquet(spark, out, target_dir, ["doc_id", "dim"])
-
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="0 seconds")
-    return writer.start()
+        beat = HeartbeatListener(heartbeat_path, spark.streams)
+        spark.streams.addListener(beat)
+    try:
+        return upsert_stream(
+            spark, source_dir, corpus_docs.schema, target_dir, checkpoint_dir,
+            ["doc_id", "dim"],
+            rows=lambda b: _micro_batch_vectors(b, word_vectors, embeddings, lang),
+            available_now=available_now,
+        )
+    except BaseException:
+        if beat is not None:  # no query started, so none will remove it
+            spark.streams.removeListener(beat)
+        raise
 
 
 def idf_count_stream(
@@ -714,86 +651,5 @@ def merge_stream(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         merge(spark, delta(batch_df), state_dir, keys, batch_id=batch_id)
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def quality_gate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    lm: DataFrame,
-    norm: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming curation gate with a PINNED language model (the
-    production model-as-state shape, like stream_psi_drift_drain's
-    pinned reference): the LM statistics are fit ONCE on the static
-    training corpus and broadcast into every micro-batch; each batch of
-    incoming documents is scored + gated and its per-doc decision rows
-    upsert into the standing verdicts table keyed by doc_id (idempotent
-    — a replayed batch rewrites identical rows).
-
-    At 100 TB: per-batch cost is the batch's tokenize + one broadcast
-    join against the vocab-sized LM + O(touched buckets) of the verdict
-    table — admission control over an unbounded ingest stream without
-    ever refitting or rescanning the corpus."""
-    from ..plans.queries_curation import (
-        quality_gate_rows,
-        unigram_score_against,
-    )
-    from ..sources.sinks import merge_upsert_parquet
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        scored = unigram_score_against(batch_df, lm, norm)
-        rows = quality_gate_rows(batch_df, scored)
-        merge_upsert_parquet(spark, rows, state_dir, ["doc_id"])
-
-    return start_foreach_batch(stream, process_batch, checkpoint_dir)
-
-
-def kmv_bottomk_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Incremental KMV (bottom-k) sketch maintenance: each micro-batch
-    of events computes its side-tagged distinct hashes, unions them
-    with the standing bottom-k state, and re-takes the bottom-k —
-    state re-keyed (s, rank) and REPLACE-merged (the rank set only
-    ever grows toward k, so no deletes arise). bottomk(state ∪ delta)
-    is monotone and idempotent: a replayed batch's values are already
-    at-or-above the standing kth minimum, so replay is a structural
-    no-op even before the sink ledger — the same split-invariance
-    argument as HLL's register max, for an order-statistic sketch.
-
-    At 100 TB: per-batch cost is the batch's salted two-level top-k
-    plus a union with a <= 2k-row state table; the standing state
-    never exceeds k rows per side no matter how many events streamed."""
-    from ..plans.queries_sketch import (
-        kmv_bottomk,
-        kmv_event_hashes,
-    )
-    from ..sources.sinks import merge_upsert_parquet, read_merged
-
-    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        delta = kmv_event_hashes(batch_df).select("s", "h")
-        state = read_merged(spark, state_dir)
-        pool = (
-            delta
-            if state is None
-            else delta.unionByName(state.select("s", "h")).distinct()
-        )
-        new_state = kmv_bottomk(pool)
-        merge_upsert_parquet(spark, new_state, state_dir, ["s", "r"])
 
     return start_foreach_batch(stream, process_batch, checkpoint_dir)

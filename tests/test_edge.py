@@ -109,6 +109,10 @@ EMPTY_ORACLE = (
     "stream_upsert_drain",
     "stream_idf_increment",
     "stream_minhash_index_drain",
+    "stream_kmv_drain",
+    "stream_cdc_drain",
+    "stream_lsh_index_drain",
+    "stream_quality_gate_drain",
     "rel_hll_portable",
 )
 

@@ -579,17 +579,32 @@ def test_empty_partitions_commit_no_files(spark, tmp_path):
     assert got == [1, 2]
 
 
-def test_python_datasource_query_leaves_session_conf_unchanged(spark):
+def test_python_datasource_query_leaves_session_conf_unchanged(spark, monkeypatch):
     """The filter-pushdown key the Python source needs is a prep_session
     key (it must hold when the lazy plan is optimized, after the builder
-    returns), so building the registered query leaks no conf into the
-    caller's session."""
-    import __spark_entry__ as E
+    returns), so after prep_session, building and running the query
+    writes no session conf of its own. The builder is called unwrapped,
+    since the registry wrapper re-applies prep_session, and every
+    ``spark.conf.set`` is recorded: a builder that re-set a prep_session
+    key to the same value would leave a before/after snapshot equal."""
+    from posts_vectorizer_spark.plans.queries_pipeline import (
+        source_python_datasource,
+    )
     from posts_vectorizer_spark.session import prep_session
     from tests.conftest import SF_SMOKE
 
     spark.conf.unset("spark.sql.python.filterPushdown.enabled")
     prep_session(spark)
     before = dict(spark.conf.getAll)
-    E.queries()["source_python_datasource"](spark, SF_SMOKE)
+    writes = []
+    real_set = type(spark.conf).set
+
+    def spy(self, key, value):
+        writes.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(type(spark.conf), "set", spy)
+    df = source_python_datasource(spark, SF_SMOKE)
+    assert df.count() > 0
+    assert writes == []
     assert dict(spark.conf.getAll) == before

@@ -113,6 +113,83 @@ def test_worker_dimension_table_released_with_caches(spark, tmp_path):
     assert not leaked
 
 
+def test_heartbeat_listener_bound_to_its_stream(spark, tmp_path):
+    """The heartbeat listener logs only its own query and is removed once
+    that query terminates: a worker running beside it, or started after
+    it, appends nothing to its heartbeat file, and the session's
+    listener count returns to its baseline."""
+    import time as _time
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    heartbeat = str(tmp_path / "heartbeat.jsonl")
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def n_listeners() -> int:
+        return len(spark.streams._jsqm.listListeners())
+
+    def worker(name: str, **kw):
+        source = str(tmp_path / f"in_{name}")
+        docs.where(F.col("doc_id") % 4 == 0).write.parquet(source)
+        return vectorize_stream(
+            spark, source, docs, emb, str(tmp_path / f"out_{name}"),
+            str(tmp_path / f"ckpt_{name}"), **kw,
+        )
+
+    def fed_beats() -> list:
+        bus.waitUntilEmpty()  # listener events are delivered asynchronously
+        if not os.path.exists(heartbeat):
+            return []
+        return [b for b in map(json.loads, open(heartbeat)) if b["num_input_rows"]]
+
+    baseline = n_listeners()
+    first = worker("first", heartbeat_path=heartbeat, available_now=False)
+    try:
+        first.processAllAvailable()
+        deadline = _time.monotonic() + 30
+        while not fed_beats() and _time.monotonic() < deadline:
+            _time.sleep(0.2)
+        beats = fed_beats()
+        assert beats
+        worker("beside").awaitTermination(120)
+        assert fed_beats() == beats
+    finally:
+        first.stop()
+    bus.waitUntilEmpty()
+    assert n_listeners() == baseline
+    worker("after").awaitTermination(120)
+    assert fed_beats() == beats
+
+
+def test_worker_merges_through_module_level_sink(spark, tmp_path, monkeypatch):
+    """graftbench's traced run times each micro-batch merge by replacing
+    ``streaming.worker.merge_upsert_parquet``; the worker must look that
+    name up at batch time, so the replacement runs once per non-empty
+    batch (a local import would bypass it silently)."""
+    from posts_vectorizer_spark.streaming import worker
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    source = str(tmp_path / "incoming")
+    docs.where(F.col("doc_id") % 4 == 0).write.parquet(source)
+    calls = []
+    real = worker.merge_upsert_parquet
+
+    def traced(spark_, df, target, keys, *a, **kw):
+        calls.append(target)
+        return real(spark_, df, target, keys, *a, **kw)
+
+    monkeypatch.setattr(worker, "merge_upsert_parquet", traced)
+    target = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    q = vectorize_stream(spark, source, docs, emb, target, ckpt)
+    q.awaitTermination(120)
+    batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert batches
+    assert calls == [target] * len(batches)
+    assert read_merged(spark, target).count() > 0
+
+
 def test_stateful_stream_dedup_across_batches(spark, tmp_path):
     """ST7: dropDuplicates state survives micro-batch boundaries — the same
     doc_ids delivered in two separate files (forced into separate batches
@@ -755,7 +832,7 @@ def test_cdc_stream_applies_changelog_across_batches(spark, tmp_path):
     state equals replaying the log in order."""
     import time as _time
 
-    from posts_vectorizer_spark.streaming import cdc_apply_stream
+    from posts_vectorizer_spark.streaming import upsert_stream
 
     schema = "k long, v string, _op string, seq long"
     files = [
@@ -774,10 +851,10 @@ def test_cdc_stream_applies_changelog_across_batches(spark, tmp_path):
         _time.sleep(1.1)
 
     target = str(tmp_path / "t")
-    q = cdc_apply_stream(
+    q = upsert_stream(
         spark, source, spark.createDataFrame(files[0], schema).schema,
         target, str(tmp_path / "ckpt"),
-        keys=["k"], order_col="seq", max_files_per_trigger=1,
+        keys=["k"], order_col="seq", op_col="_op", max_files_per_trigger=1,
     )
     q.awaitTermination(120)
     got = {r.k: r.v for r in read_merged(spark, target).collect()}
@@ -878,7 +955,7 @@ def test_cdc_compaction_tiebreak_deterministic_on_duplicate_seq(
     at-least-once convergence). The contract: ties break on the remaining
     columns in name order, descending — here (_op, v), so for key 5 the
     ('U','y') row beats ('U','x'), and for key 6 'U' beats 'D'."""
-    from posts_vectorizer_spark.streaming import cdc_apply_stream
+    from posts_vectorizer_spark.streaming import upsert_stream
 
     schema = "k long, v string, _op string, seq long"
     rows = [
@@ -895,10 +972,10 @@ def test_cdc_compaction_tiebreak_deterministic_on_duplicate_seq(
             "overwrite"
         ).parquet(source)
         target = str(tmp_path / f"t{run}")
-        q = cdc_apply_stream(
+        q = upsert_stream(
             spark, source, spark.createDataFrame(rows, schema).schema,
             target, str(tmp_path / f"ckpt{run}"),
-            keys=["k"], order_col="seq",
+            keys=["k"], order_col="seq", op_col="_op",
         )
         q.awaitTermination(120)
         got = {r.k: r.v for r in read_merged(spark, target).collect()}
@@ -1124,16 +1201,22 @@ def test_lsh_index_stream_idempotent_under_redelivery(spark, tmp_path):
     index content depends only on the data, never on delivery count."""
     from posts_vectorizer_spark.sources import load_table
     from posts_vectorizer_spark.sources.sinks import read_merged
-    from posts_vectorizer_spark.streaming import lsh_index_stream
+    from posts_vectorizer_spark.operators.similarity import lsh_index_rows
+    from posts_vectorizer_spark.streaming import upsert_stream
     from tests.conftest import SF_SMOKE
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     source = str(tmp_path / "in")
     emb.coalesce(1).write.mode("append").parquet(source)
     ix = str(tmp_path / "ix")
-    q = lsh_index_stream(
-        spark, source, emb.schema, ix, str(tmp_path / "ckpt1"), dims=64
-    )
+
+    def lsh_index_stream(ckpt):
+        return upsert_stream(
+            spark, source, emb.schema, ix, ckpt, ["vec_id"],
+            rows=lambda b: lsh_index_rows(b, 64),
+        )
+
+    q = lsh_index_stream(str(tmp_path / "ckpt1"))
     q.awaitTermination(180)
     first = {
         r["vec_id"]: (r["bucket"], r["nrm"])
@@ -1141,9 +1224,7 @@ def test_lsh_index_stream_idempotent_under_redelivery(spark, tmp_path):
     }
     assert len(first) == emb.count()
     # fresh checkpoint -> the file source re-delivers everything
-    q2 = lsh_index_stream(
-        spark, source, emb.schema, ix, str(tmp_path / "ckpt2"), dims=64
-    )
+    q2 = lsh_index_stream(str(tmp_path / "ckpt2"))
     q2.awaitTermination(180)
     second = {
         r["vec_id"]: (r["bucket"], r["nrm"])
